@@ -558,7 +558,7 @@ def prefix_filter_jaccard_pairs(
     tt = float(threshold)
     idx_prefix = ranked.filter(
         F.col("pos")
-        <= F.col("m") - F.ceil(F.lit(tt) * F.col("m")) + 1
+        <= F.col("m") - F.ceil(F.lit(tt) * F.col("m") - F.lit(1e-9)) + 1
     )
     probe_prefix = ranked.filter(
         F.col("pos")

@@ -3535,7 +3535,13 @@ def _parse_size_bytes(raw: str) -> int:
         "mb": 1024**2,
         "g": 1024**3,
         "gb": 1024**3,
-    }[m.group(2)]
+        "t": 1024**4,
+        "tb": 1024**4,
+        "p": 1024**5,
+        "pb": 1024**5,
+    }.get(m.group(2))
+    if mult is None:
+        raise ValueError(f"unknown size suffix in {raw!r}")
     return int(m.group(1)) * mult
 
 

@@ -7336,9 +7336,8 @@ REGISTRY.update(
 )
 
 
-# Round-13 late block (§7.8 candidates pulled forward after the
-# five-lane sweep; rotation math re-derived in the ROTATION_STRIDE
-# comment — S raised to 31 FIRST).
+# Round-13 late block: DLQ redrive, per-fold encoding reliability,
+# per-segment isotonic calibration.
 
 _REDRIVE_CASE = (
     "CASE "
@@ -7399,9 +7398,8 @@ REGISTRY.update(
 )
 
 
-# Round-14 block (§7.8 candidates; rotation math re-derived in the
-# ROTATION_STRIDE comment — N 243 -> 246 fits the S = 31 horizon cap
-# of 248 with 2 slots to spare).
+# Round-14 block: binned and multi-feature stumps, quantile-binned
+# trees and boosters, and the upsert sink's vacuum and retention.
 
 _BSTUMP_FEATURE = f"l_extendedprice_q{stats.N_QTL_BUCKETS}"
 
@@ -8001,652 +7999,9 @@ REGISTRY.update(
 )
 
 
-# ---------------------------------------------------------------------------
-# Registry ordering — deterministic rotation. The driver's correctness
-# gate hash-checks the FIRST ``ROTATION_WINDOW`` entries of
-# ``queries()`` each round, so ordering IS the sampling policy. Rounds
-# 1-4 hand-curated the front block; from round 5 the schedule is
-# structural:
-#
-# - ``_ROUND_PRIORITY`` (new/changed entries this round) is always
-#   front-loaded so changes are driver-verified immediately;
-# - the remaining slots are filled from the alphabetically-sorted name
-#   cycle starting at offset ``round * ROTATION_STRIDE``.
-#
-# Because every cyclic position in [offset, offset + STRIDE) lands in
-# the window (priority members directly, the rest within the
-# WINDOW - |priority| >= STRIDE fill — enforced by the assert below),
-# any ceil(N / STRIDE) consecutive rounds re-verify EVERY entry
-# (tests/test_registry_rotation.py proves it for the live registry).
-# The local parity suite still checks all entries every round
-# regardless of order; this schedule governs only the driver sample.
-ROTATION_WINDOW = 50
-# Round-9 math (decided BEFORE adding entries, per the r08 verdict):
-# the registry entered round 9 at 214 with every entry driver-checked
-# at least once (CORRECTNESS_r08 closed the round-8 window cap), so
-# there is no fill-segment coverage constraint this round — the only
-# budget is the <= 8-round staleness horizon, ceil(N/S) <= 8. The
-# round-9 entry budget is 8 new families (forecast backtest,
-# percentile merge sketch, PCA power, LPA modularity, hourly ACF,
-# NN join, bootstrap CI, perceptual-hash media dedup) -> N = 222,
-# which forces S = 28 (27 only covers N <= 216); ceil(222/28) = 8
-# holds, and the priority cap WINDOW - S = 22 comfortably fits the 4
-# carried never-checked names + 8 new ones. S = 28 keeps the horizon
-# through N = 224 (2 free round-10 slots); past that the window or
-# the staleness bound must change — decide explicitly, don't drift.
-#
-# Round-10 math (decided BEFORE adding entries, per the verdict):
-# the registry entered round 10 at 222 with cumulative driver
-# coverage 100% (CORRECTNESS_r09 closed the last 4 never-checked
-# names). The round-10 budget is exactly the 2 free slots the r09
-# verdict reserved — spent on the two genuine-gap candidates it
-# named: applyInPandasWithState EVENT-TIME TIMEOUT session eviction
-# (streaming_session_timeout) and the runtime row-level BLOOM-filter
-# pruned join (bloom_runtime_join). N = 224 = the exact S = 28 cap:
-# ceil(224/28) = 8 still holds, priority block (3 names: the 2 new
-# + the plan-rewritten modularity re-verify) <= WINDOW - S = 22.
-# ROUND 11 HAS ZERO FREE SLOTS: any growth there must first raise S
-# to 29 (covers N <= 232, window fill 50 - |priority| >= 29 needs
-# priority <= 21) or widen the window / relax the 8-round horizon —
-# re-derive, don't drift (test_registry_rotation.py will fail loudly
-# at N = 225 under S = 28 regardless).
-#
-# Round-11 math (decided BEFORE adding entries, per the r10 verdict's
-# item #1): the registry entered round 11 at 224 = the exact S = 28
-# cap with cumulative driver coverage 100% and zero latest-check
-# failures (r10 verdict recomputed the union independently). Raising
-# S to 29 widens the horizon cap to N <= 232 (ceil(232/29) = 8) and
-# shrinks the priority cap to WINDOW - S = 21. The round-11 budget is
-# the 4 new families the r10 verdict pre-scoped (histogram-split
-# decision stump + its depth-2 tree sibling, per-group deterministic
-# reservoir top-k, streaming rate-limited backfill) -> N = 228 —
-# plus, decided mid-round against the same math, ALL 4 pre-scoped
-# round-12 candidates pulled forward (SCD2 validity-interval build,
-# weighted per-group reservoir, the two-stage gradient-boosted-stump
-# trainer, and the foreachBatch MERGE-upsert sink) -> N = 232 = the
-# exact S = 29 cap; ceil(232/29) = 8 holds and the priority block
-# (8 new) stays well under 21. ROUND 12 HAS ZERO FREE SLOTS: any
-# growth there must first raise S to 30 (covers N <= 240, window
-# fill 50 - |priority| >= 30 needs priority <= 20) or widen the
-# window / relax the 8-round horizon — re-derive explicitly, don't
-# drift (test_registry_rotation.py fails loudly at N = 233 under
-# S = 29 regardless).
-#
-# Round-12 math (decided BEFORE adding entries, per the §7.6
-# pre-scope): the registry entered round 12 at 232 = the exact
-# S = 29 cap. No CORRECTNESS_r11 artifact landed between rounds, so
-# the 8 round-11 names have never been driver-checked — they must be
-# CARRIED in the priority block until their hard rows exist. Raising
-# S to 30 widens the horizon cap to N <= 240 (ceil(240/30) = 8) and
-# shrinks the priority cap to WINDOW - S = 20. The round-12 budget
-# is the §7.6 candidates that survived scoping (the stream-stream
-# range-inner join was found already covered by
-# streaming_click_attribution): 3-stage gradient boosting
-# (lineitem_gbt_stages3), isotonic/PAV calibration of the logreg
-# scores (lineitem_isotonic_calibration), plus two families decided
-# this round — out-of-fold target encoding
-# (lineitem_target_encoding) and first-occurrence n-gram novelty
-# attribution (docs_ngram_novelty) -> N = 236; ceil(236/30) = 8
-# holds and the priority block (8 carried + 4 new = 12) fits the
-# 20-cap. ROUND 13 HAS 4 FREE SLOTS (N <= 240) before S must go to
-# 31 — re-derive explicitly, don't drift.
-#
-# Round-13 math (decided BEFORE adding entries, per the §7.7
-# pre-scope): the registry entered round 13 at 236 with 4 free slots
-# under S = 30 (horizon cap N <= 240). Still no CORRECTNESS artifact
-# has landed since r10, so ALL 12 round-11/-12 names stay carried in
-# the priority block. The round-13 budget spends 3 of the 4 free
-# slots on the §7.7 candidates that survived scoping (the K=4+
-# boosting depth probe needs no registry entry — gbt_boost already
-# generalizes; its evidence is a SCALING.md cost-∝-K probe row):
-# exact equi-depth discretization (lineitem_price_quantile_bins),
-# the encoding reliability audit (lineitem_encoding_reliability),
-# and the foreachBatch DLQ split sink (streaming_dlq_split) ->
-# N = 239 — plus, decided mid-round against the same math, the top
-# §7.8 candidate pulled forward (per-group equi-depth bins,
-# lineitem_flag_quantile_bins — one grouping column on the same
-# closed form) -> N = 240 = the exact S = 30 cap; ceil(240/30) = 8
-# holds and the priority block (12 carried + 4 new = 16) fits the
-# 20-cap. ROUND 14 HAS ZERO FREE SLOTS: any growth there must first
-# raise S to 31 (covers N <= 248, window fill 50 - |priority| >= 31
-# needs priority <= 19) or widen the window / relax the 8-round
-# horizon — re-derive explicitly, don't drift
-# (test_registry_rotation.py fails loudly at N = 241 under S = 30
-# regardless).
-#
-# Round-13 late block (decided mid-round, AFTER the full five-lane
-# sweep went green at N = 240, against explicitly re-derived math —
-# the round-11/round-13 pull-forward protocol): raising S to 31
-# widens the horizon cap to N <= 248 (ceil(248/31) = 8) and shrinks
-# the priority cap to WINDOW - S = 19. The late budget is the three
-# §7.8 candidates, all thin compositions over machinery landed this
-# round or earlier: the streaming DLQ redrive pass
-# (streaming_dlq_redrive), the per-fold encoding reliability
-# variance audit (lineitem_fold_reliability), and per-segment
-# isotonic calibration (lineitem_status_isotonic) -> N = 243;
-# ceil(243/31) = 8 holds and the priority block (12 carried + 4 + 3
-# = 19) sits AT the 19-cap exactly.
-#
-# Round-14 budget (re-derived BEFORE adding entries):
-# CORRECTNESS_r11 landed hard green rows for every carried round-11/
-# -12/-13 name (the r11 verdict re-verified the cumulative union ==
-# the full 243 registry with zero latest-status failures), so the
-# carry protocol is satisfied and the 19-name block RETIRES to the
-# archive records below. The round-14 budget is the three §7.8
-# candidates -> N = 246 <= 248 (ceil(246/31) = 8 holds, 2 free
-# slots left); priority = 3 new names <= 19-cap with room to spare.
-#
-# Round-14 LATE block (decided mid-round AFTER the default suite went
-# green at N = 246, the round-13 pull-forward protocol, math
-# re-derived): the top two §7.9 candidates — the multi-feature
-# equi-depth stump (decision_stump's explode shape on per-feature
-# adaptive bucket grids, still one scan) and the upsert-sink version
-# vacuum (the upsert family's lifecycle completion, mirroring the
-# DLQ retention pass) -> N = 248 = EXACTLY the S = 31 horizon cap
-# (ceil(248/31) = 8 holds); priority 5 <= 19-cap.
-#
-# Round-14 FINAL block (after the FULL five-lane sweep went green at
-# N = 248 — the S-raise protocol round 13 established): raising S to
-# 32 widens the horizon cap to N <= 256 (ceil(256/32) = 8) and
-# shrinks the priority cap to WINDOW - S = 18. The final budget is
-# the top three §7.9 candidates — the encoded-feature stump
-# (encode -> centile-bin -> Gini split, composing two existing CTE
-# templates and the session-cached grid), the per-segment
-# multi-feature stump (group_cols threaded through the same closed
-# forms, the grouped-quantile_bins generalization path), and the
-# quantile-binned GBT (the LightGBM shape: gbt_boost's binned
-# parameter + aggregate-sized broadcast bucket maps; oracle base CTE
-# swapped, stage chain identical), and the depth-2 tree on the same
-# adaptive bins (tree_depth2 gains the identical binned parameter;
-# oracle = the shared level-2 tail over the swapped level-1 chain)
-# -> N = 252 <= 256 (ceil(252/32) = 8 holds); priority 9 <= 18.
-# Plus the time-travel upsert retention (keep-last-R over a 4-batch
-# version history; the per-version oracle replays each retained
-# snapshot from the span-staging closed form) -> N = 253, and the
-# last two §7.9 template reuses — the per-segment encoding stump
-# (segment_col on encoding_stump, grid unsplit) and K = 3 boosting
-# on the adaptive bins (the existing 3-stage oracle chain over the
-# swapped base) -> N = 255 <= 256 (ceil(255/32) = 8 holds);
-# priority 12 <= 18. ROUND 15 HAS 1 FREE SLOT under S = 32; growth
-# beyond 256 must first raise S to 33 (covers N <= 264, priority
-# cap 17) — re-derive explicitly, don't drift
-# (test_registry_rotation.py fails loudly at N = 257 under S = 32
-# regardless).
-#
-# Round-15 budget (S RAISED FIRST, per the r12 verdict and the
-# protocol rounds 13/14 established — re-derived BEFORE adding
-# entries): CORRECTNESS_r12 carries a hard green row for every name
-# in the round-14 12-name block (verified at round open: 12/12
-# rows_match+schema_match+hash_match, err None), so the carry
-# protocol is satisfied and the block RETIRES to _ROUND14_PRIORITY
-# below. N = 255 sits at the S = 32 horizon cap minus one (one free
-# slot, three candidates), so S rises to 33: horizon cap becomes
-# N <= 264 (ceil(264/33) = 8 — the staleness bound holds), priority
-# cap shrinks to WINDOW - S = 50 - 33 = 17. The round-15 budget is
-# the three §7.9 candidates — the per-segment quantile GBT
-# (gbt_boost + group_cols on per-segment adaptive bucket maps), the
-# grouped time-travel retention (per-key-range version history,
-# partition-scoped vacuum), and the DLQ epoch-age retention (age
-# quarantine epochs by watermark age, not rule outcome) ->
-# N = 258 <= 264 (ceil(258/33) = 8 holds); priority 3 <= 17 with
-# room to spare.
-#
-# Round-15 LATE block (decided mid-round AFTER the full five-lane
-# sweep went green at N = 258 — the round-13/14 pull-forward
-# protocol, math re-derived): the three §7.10 candidates, all thin
-# compositions over machinery landed this round — the per-segment
-# depth-2 tree on adaptive bins (tree_depth2 gains the group_cols
-# generalization gbt_boost just got), the time-travel AS-OF read
-# over the partition-scoped sink (the read path the grouped drain
-# enables; oracle = the span prefix aggregate per group), and the
-# per-reason DLQ age policy (the epoch-age cutoff driven by a
-# reason -> max-age table) -> N = 261 <= 264 (ceil(261/33) = 8
-# holds); priority 6 <= 17.
-#
-# Round-15 FINAL block (decided AFTER the SECOND full five-lane
-# sweep went green at N = 261 — the same protocol, math re-derived):
-# the top §7.10 candidate — the CDC change feed between versions
-# (per-group delta v-1 -> v over the partition-scoped sink: inserts
-# + update pre/post images, the lakehouse Change Data Feed read
-# path; oracle diffs the span prefix aggregates) -> N = 262 <= 264
-# (ceil(262/33) = 8 holds); priority 7 <= 17 — plus the K = 3
-# per-segment booster (the depth knob on the grouped recursion,
-# pinned greedy-prefix-stable against the grouped K = 2 entry) ->
-# N = 263 <= 264 (ceil(263/33) = 8 holds); priority 8 <= 17 — plus
-# the version-WINDOW net-effect CDC feed (the v0 -> v1
-# generalization of the stepwise entry; pinned equal to the
-# composition of stepwise feeds) -> N = 264 = EXACTLY the S = 33
-# horizon cap (ceil(264/33) = 8 holds); priority 9 <= 17.
-# ROUND 16 HAS 0 FREE SLOTS under S = 33; ANY growth must first
-# raise S to 34 (covers N <= 272, priority cap 16) — re-derive
-# explicitly, don't drift (test_registry_rotation.py fails loudly
-# at N = 265 under S = 33 regardless).
-#
-# Round-16 budget (S RAISED FIRST, per the r13 verdict item #2 and
-# the established protocol — re-derived BEFORE adding entries):
-# CORRECTNESS_r13 carries a hard green row for every name in the
-# round-15 9-name block (verified at round open: 9/9
-# rows_match+schema_match+hash_match, err None), so the carry
-# protocol is satisfied and the block RETIRES to _ROUND15_PRIORITY
-# below. N = 264 sits EXACTLY at the S = 33 horizon cap (zero free
-# slots), so S rises to 34: horizon cap becomes N <= 272
-# (ceil(272/34) = 8 — the staleness bound holds), priority cap
-# shrinks to WINDOW - S = 50 - 34 = 16. The round-16 budget is the
-# three §7.10 candidates from the r13 verdict (items #4-6) — the
-# grouped-sink small-file compaction audit (maintenance_compaction
-# composed with the partition-scoped (g, version) layout), the
-# per-segment isotonic calibration of the grouped quantile-GBT
-# margin (isotonic_calibration(group_cols) over the grouped
-# trainer's session-cached trajectory), and the mid-history CDC
-# window (upsert_changes_between with v0 > 0, pinned equal to
-# composed stepwise feeds) -> N = 267 <= 272 (ceil(267/34) = 8
-# holds); priority 3 <= 16 with room to spare.
-#
-# Round-16 LATE block (decided mid-round AFTER the full five-lane
-# sweep went green at N = 267 — the rounds-13..15 pull-forward
-# protocol, math re-derived): three thin compositions over landed
-# machinery — the GLOBAL GBT-margin isotonic (the ungrouped twin of
-# the per-segment entry: same scorer, 1-row winner frame, global PAV
-# tail — completes the trainer/calibration matrix), ANALYZE-style
-# per-column table statistics (one-scan count/nulls/min/max/exact-
-# NDV over lineitem's numeric columns — the metastore stats a CBO
-# consumes), and the upsert sink's per-version WRITE-AMPLIFICATION
-# audit (rows written per version vs delta keys changed — the
-# partition-scoped layout's headline metric, read-only over the
-# session-cached drain) -> N = 270 <= 272 (ceil(270/34) = 8 holds);
-# priority 6 <= 16. Two free slots remain under S = 34; growth past
-# 272 must first raise S to 35 (covers N <= 280, priority cap 15) —
-# re-derive explicitly, don't drift.
-#
-# Round-16 FINAL block (decided AFTER the SECOND full five-lane
-# sweep went green at N = 270 — the same protocol, math re-derived):
-# the two remaining free slots take the LEAKAGE-SAFE train/holdout
-# split (assignment by the dedup CLUSTER root, not the doc — near-
-# duplicate documents can never straddle the split, the
-# contamination guard every training pipeline needs; composes the
-# session-cached dedup component stage and wraps the dedup_clusters
-# oracle's _CC_CTES) and the events-table ANALYZE entry (the
-# table_stats operator exercised on a second table's numeric
-# columns, proving the renderer is table-generic) -> N = 272 =
-# EXACTLY the S = 34 horizon cap (ceil(272/34) = 8 holds); priority
-# 8 <= 16. ROUND 17 HAS 0 FREE SLOTS under S = 34; ANY growth must
-# first raise S to 35 (covers N <= 280, priority cap 15) —
-# re-derive explicitly, don't drift (test_registry_rotation.py
-# fails loudly at N = 273 under S = 34 regardless).
-#
-# Round-17 budget (S RAISED FIRST, per the r14 verdict item #4 and
-# the established protocol — re-derived BEFORE adding entries):
-# CORRECTNESS_r14 carries a hard green row for every name in the
-# round-16 8-name block (verified at round open: 8/8
-# rows_match+schema_match+hash_match, err None), so the carry
-# protocol is satisfied and the block RETIRES to _ROUND16_PRIORITY
-# below. N = 272 sits EXACTLY at the S = 34 horizon cap (zero free
-# slots), so S rises to 35: horizon cap becomes N <= 280
-# (ceil(280/35) = 8 — the staleness bound holds), priority cap
-# shrinks to WINDOW - S = 50 - 35 = 15. The round-17 budget is the
-# three candidates the r14 verdict pre-scoped (items #5-7) — the
-# stream-stream FULL OUTER join (both-side null extension at
-# watermark proof, the one join-type hole in the streaming matrix),
-# SCD2 history composed ON the upsert sink's CDC change feed (the
-# type-2 validity-interval table the batch orders_scd2_priority
-# entry builds, derived instead from the sink's version changelog),
-# and the incremental table-stats refresh via mergeable sketches
-# (per-partition partial stats merged == stats-of-whole, the
-# continuous-refresh swap the lineitem_table_stats docstring names)
-# -> N = 275 <= 280 (ceil(275/35) = 8 holds); priority 3 <= 15 with
-# room to spare.
-ROTATION_STRIDE = 35
-
-#: Entries added or semantically changed in the CURRENT round. Keep
-#: small (<= WINDOW - STRIDE) or the coverage guarantee degrades.
-#: Round-18 block (r15 VERDICT item 3: "changed" includes
-#: semantically-equivalent REWRITES — the equivalence is exactly the
-#: claim that needs the ground-truth oracle, and the r15 rotation
-#: sample missed nearly every r15-rewritten path). The round-16
-#: natural fill (offset 10) already covers the whole dedup family —
-#: dedup_semantic, every fused-signature consumer, prefix_jaccard —
-#: so the 15 slots go to the rewritten/changed paths the fill does
-#: NOT reach, highest-risk first.
-_ROUND_PRIORITY: tuple[str, ...] = (
-    # r15 joint-bin rewrite, highest-risk composites (one scan serves
-    # trainer + scorer + isotonic calibration) — never driver-checked
-    # since the rewrite
-    "lineitem_gbt_isotonic",
-    "lineitem_status_gbt_isotonic",
-    # r15 upsert-sink rewrite (merge-frame checkpoint + single-scan
-    # retention audit) — the one sink entry the r15 sample missed
-    "streaming_upsert_group_retention",
-    # r16: ANALYZE scan-spread gate actually firing now (+ the
-    # incremental entry whose spread was removed on measurement)
-    "lineitem_table_stats",
-    "events_table_stats",
-    "lineitem_stats_incremental",
-    # r16: fused-signature consumer OUTSIDE the natural fill (the
-    # streaming ingest screen derives band sets from the fused stage)
-    "streaming_neardup_ingest",
-    # r16: the shared unigram token-count stage rewrite — four of its
-    # five consumers fall outside the natural fill
-    # (docs_adaptive_quality is covered by the fill)
-    "tfidf_terms",
-    "docs_unigram_logprob",
-    "docs_entropy",
-    "docs_dsir_scores",
-    # r15 joint-bin trainer family, rotating through r16/r17 — the
-    # deepest remaining regroup chain (the isotonic composites above
-    # cover the other two 3-stage shapes); the rest of the family
-    # rides the rotation guarantee
-    "lineitem_status_quantile_gbt3",
-    # r15 regressed-watch rows (settle protocol this round): hard
-    # driver rows pin their VALUES while the bench settles their cost
-    "lineitem_status_encoding_stump",
-    "lineitem_status_isotonic",
-    "lineitem_status_multi_stump",
-)
-
-#: The round-17 priority block (3 names) as retired at round-18 open:
-#: CORRECTNESS_r15 carries a fully-green hard row for every name (the
-#: carry protocol's exit condition), kept as a named record for the
-#: staleness audit.
-_ROUND17_PRIORITY: tuple[str, ...] = (
-    "streaming_click_attribution_full",
-    "streaming_upsert_scd2",
-    "lineitem_stats_incremental",
-)
-
-#: The round-16 priority block (8 names) as retired at round-17
-#: open: CORRECTNESS_r14 carries a fully-green hard row for every
-#: name (the carry protocol's exit condition), kept as a named
-#: record for the staleness audit.
-_ROUND16_PRIORITY: tuple[str, ...] = (
-    # mid-history CDC window — the (v0 > 0, v1 < birth-window) class
-    # the stepwise and whole-window feeds leave unexercised
-    "streaming_upsert_changes_midwindow",
-    # grouped-sink small-file compaction audit — the maintenance_
-    # compaction recipe composed with the partition-scoped layout
-    "streaming_upsert_compaction",
-    # per-segment isotonic on the grouped quantile-GBT margin — the
-    # deployment calibration step composed from the grouped trainer
-    # (wide winner frame) and isotonic_calibration(group_cols)
-    "lineitem_status_gbt_isotonic",
-    # Round-16 LATE block (pull-forward after the green five-lane
-    # sweep, math in the ROTATION_STRIDE comment): the global
-    # GBT-margin isotonic — the ungrouped twin completing the matrix
-    "lineitem_gbt_isotonic",
-    # ANALYZE-style one-scan per-column table statistics
-    "lineitem_table_stats",
-    # per-version write-amplification audit of the grouped sink
-    "streaming_upsert_write_amplification",
-    # Round-16 FINAL block (after the SECOND green sweep, math in
-    # the ROTATION_STRIDE comment): cluster-root train/holdout split
-    # — the contamination guard composing the dedup component stage
-    "docs_leakage_safe_split",
-    # the ANALYZE operator proven table-generic on events
-    "events_table_stats",
-)
-
-#: The round-15 priority block (9 names) as retired at round-16
-#: open: CORRECTNESS_r13 carries a fully-green hard row for every
-#: name (the carry protocol's exit condition), kept as a named
-#: record for the staleness audit.
-_ROUND15_PRIORITY: tuple[str, ...] = (
-    # per-segment quantile-binned boosting — the grouped leg of the
-    # trainer family (per-segment adaptive maps + per-segment stage
-    # winners via group_cols through the same closed forms)
-    "lineitem_status_quantile_gbt",
-    # grouped time-travel retention — partition-scoped versioning
-    # (each batch writes only touched key-group partitions; per-group
-    # keep-last-R over each group's own write history)
-    "streaming_upsert_group_retention",
-    # DLQ epoch-age retention — whole ingest epochs age by watermark
-    # age (time-based policy), the rule-outcome entry's complement
-    "streaming_dlq_age_retention",
-    # Round-15 LATE block (§7.10 pull-forward after the green sweep,
-    # math in the ROTATION_STRIDE comment): per-segment depth-2 tree
-    # on adaptive bins — completes the grouped model matrix
-    "lineitem_status_quantile_tree",
-    # time-travel AS-OF read — the partition-scoped sink's read path
-    # (per-group latest <= v), the whole historical table replayed
-    "streaming_upsert_asof_read",
-    # per-reason DLQ age policy — the policy-table generalization of
-    # the epoch-age entry at (epoch, reason) granularity
-    "streaming_dlq_policy_retention",
-    # Round-15 FINAL block (§7.10 pull-forward after the SECOND green
-    # sweep): CDC change feed v-1 -> v over the partition-scoped sink
-    "streaming_upsert_changes",
-    # K = 3 per-segment boosting — the depth knob on the grouped
-    # recursion (carried memberships per segment)
-    "lineitem_status_quantile_gbt3",
-    # net-effect CDC over the whole version window — the v0 -> v1
-    # generalization, pinned equal to composed stepwise feeds
-    "streaming_upsert_changes_window",
-)
-
-#: The round-14 priority block (12 names) as retired at round-15
-#: open: CORRECTNESS_r12 carries a fully-green hard row for every
-#: name (the carry protocol's exit condition), kept as a named
-#: record for the staleness audit.
-_ROUND14_PRIORITY: tuple[str, ...] = (
-    # Round-14 block (§7.8 candidates, budget in the ROTATION_STRIDE
-    # comment): the encoding reliability audit split by data segment
-    # against the one unsplit shipped grid — completes the
-    # per-segment audit matrix
-    "lineitem_status_reliability",
-    # stump trained on the equi-depth price-decile feature — the two
-    # round-13 binning families composed in ONE data scan
-    "lineitem_binned_stump",
-    # DLQ retention/compaction — the maintenance member of the DLQ
-    # lifecycle (age out redriven rows, compact the survivors)
-    "streaming_dlq_retention",
-    # Round-14 LATE block (§7.9 pull-forward, math in the
-    # ROTATION_STRIDE comment): best adaptive-decile split per
-    # feature with the global root flagged, one exploded scan
-    "lineitem_multi_binned_stump",
-    # version-retention vacuum over the merge-upsert sink — the
-    # upsert lifecycle's maintenance member
-    "streaming_upsert_vacuum",
-    # Round-14 FINAL block (S raised to 32 first — math in the
-    # ROTATION_STRIDE comment): encode -> centile-bin -> Gini split,
-    # the feature pipeline end to end
-    "lineitem_encoding_stump",
-    # per-segment multi-feature adaptive split search — per-segment
-    # grids and roots via group_cols on the same closed forms
-    "lineitem_status_multi_stump",
-    # two-stage boosting on equi-depth deciles — the LightGBM shape
-    # (bin definition swapped via broadcast maps, recursion intact)
-    "lineitem_quantile_gbt",
-    # depth-2 tree on the same adaptive bins — completes the model
-    # stack on equi-depth grids
-    "lineitem_quantile_tree",
-    # keep-last-R time-travel retention over the upsert sink, every
-    # retained snapshot replayed from the span closed form
-    "streaming_upsert_retention",
-    # per-segment encoded-feature stump — the stump leg of the
-    # per-segment matrix, grid unsplit
-    "lineitem_status_encoding_stump",
-    # K = 3 boosting on adaptive bins — the depth knob on the
-    # quantile bridge
-    "lineitem_quantile_gbt3",
-)
-
-#: The round-13 priority block (12 carried + 7 new) as retired at
-#: round-14 open: CORRECTNESS_r11 carries a hard green row for every
-#: name (the carry protocol's exit condition), kept as a named record
-#: for the staleness audit.
-_ROUND13_PRIORITY: tuple[str, ...] = (
-    "lineitem_stump_gini",
-    "lineitem_tree_depth2",
-    "docs_group_reservoir",
-    "streaming_backfill_lag",
-    "orders_scd2_priority",
-    "docs_weighted_reservoir",
-    "lineitem_gbt_stages",
-    "streaming_upsert_latest",
-    "lineitem_gbt_stages3",
-    "lineitem_isotonic_calibration",
-    "lineitem_target_encoding",
-    "docs_ngram_novelty",
-    "lineitem_price_quantile_bins",
-    "lineitem_encoding_reliability",
-    "streaming_dlq_split",
-    "lineitem_flag_quantile_bins",
-    "streaming_dlq_redrive",
-    "lineitem_fold_reliability",
-    "lineitem_status_isotonic",
-)
-
-#: The round-11 block as budgeted (kept as a named record for the
-#: staleness audit; it led the carried block until CORRECTNESS_r11
-#: landed its hard driver rows).
-_ROUND11_PRIORITY: tuple[str, ...] = (
-    "lineitem_stump_gini",
-    "lineitem_tree_depth2",
-    "docs_group_reservoir",
-    "streaming_backfill_lag",
-    "orders_scd2_priority",
-    "docs_weighted_reservoir",
-    "lineitem_gbt_stages",
-    "streaming_upsert_latest",
-)
-
-#: The round-10 priority block (driver-checked green in
-#: CORRECTNESS_r10 — every name below has its hard row), kept as a
-#: record for the staleness audit.
-_ROUND10_PRIORITY: tuple[str, ...] = (
-    "streaming_session_timeout",
-    "bloom_runtime_join",
-    "docs_communities_modularity",
-)
-
-#: The round-9 priority block (driver-checked 50/50 green in
-#: CORRECTNESS_r09 — every name below has its hard row), kept as a
-#: record so the staleness audit can reason about cohort ages.
-_ROUND9_PRIORITY: tuple[str, ...] = (
-    # Round-9 block, part 1: the 4 entries never driver-checked in any
-    # prior round — the 3 _ROUND9_DEFERRED model-eval names (held back
-    # by the round-8 214-entry window cap) plus the round-8
-    # label-propagation entry the same cap excluded. Landing their
-    # CORRECTNESS_r09 rows closes cumulative driver coverage to
-    # 100% of the registry (round-8 verdict item #1).
-    "lineitem_logreg_auc",
-    "lineitem_logreg_calibration",
-    "lineitem_chi2_flags",
-    "docs_communities_labelprop",
-    # Round-9 block, part 2: entries NEW this round (budget decided
-    # against the rotation math in the ROTATION_STRIDE comment BEFORE
-    # adding registry entries).
-    # Grouped seasonal-naive vs naive forecast backtest — the one
-    # timeseries shape the family lacked (r08 verdict item #4)
-    "events_forecast_backtest",
-    # Cross-source mergeable percentile sketch with rank-error
-    # certification — the merge-mechanics member of the sketch family
-    "sketch_percentile_merge",
-    # Top principal component by rounded power iteration on the exact
-    # quantized covariance — the spectral member of the vector family
-    "emb_pca_power",
-    # Newman modularity of the LPA partition — the community-quality
-    # audit the graph family lacked
-    "docs_communities_modularity",
-    # Integer-moment hourly autocorrelation — the season-detection
-    # evidence behind the backtest's 24-hour choice
-    "events_acf_hourly",
-    # LSH-blocked nearest-neighbor JOIN (corpus-as-queries retrieval —
-    # the ANN family's join form)
-    "emb_nn_join",
-    # Poisson-bootstrap CI — distribution-free uncertainty in one
-    # weighted pass (the stats family's resampling member)
-    "orders_bootstrap_ci",
-    # Perceptual-hash (aHash) media near-dup — the multimodal x dedup
-    # composition
-    "media_phash_neardup",
-)
-
-#: Round-8 deferral, swapped into _ROUND_PRIORITY at the top of round
-#: 9 exactly as planned (kept as a named record for the horizon test).
-_ROUND9_DEFERRED = (
-    "lineitem_logreg_auc",
-    "lineitem_logreg_calibration",
-    "lineitem_chi2_flags",
-)
-
-#: The round-8 priority block (driver-checked 50/50 green in
-#: CORRECTNESS_r08 — every name below has its hard row), kept as a
-#: record so the staleness audit in test_registry_rotation.py can
-#: reason about when each cohort was last driver-verified.
-_ROUND8_PRIORITY = (
-    "docs_training_manifest",
-    "vocab_bpe_train",
-    "streaming_click_attribution_outer",
-    "docs_neardup_bfs",
-    "docs_curriculum_order",
-    "events_transition_matrix",
-    "events_retention_cohorts",
-    "events_volume_anomalies",
-    "events_sequence_patterns",
-    "events_ewma_calendar",
-    "lineitem_price_ols",
-    "lineitem_corr_matrix",
-    "segment_balance_ttest",
-    "scalar_try_battery",
-    "window_distribution_battery",
-    "source_csv_gzip_roundtrip",
-    "streaming_tumbling_append",
-    "streaming_neardup_ingest",
-    "dedup_prefix_jaccard",
-    "docs_mmr_rerank",
-    "lineitem_logreg_returns",
-    "sketch_countmin_freq",
-    "streaming_window_distinct",
-)
-
-#: Round-8 deferral names EXCLUDED from the priority block because the
-#: round-8 fill segment covers them structurally —
-#: tests/test_registry_rotation.py asserts they are in the round-8
-#: window, so their first-ever driver check still happens this round.
-_ROUND8_FILL_COVERED = ("customer_golden_records", "dedup_minhash_estimate")
-
-
-def current_round() -> int:
-    """Round number: ``SPARK_GRAFT_ROUND`` env override, else inferred
-    from the driver's own per-round artifacts (CORRECTNESS_r{N}.json
-    accumulate in the repo root — round N runs with N-1 present)."""
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env:
-        return int(env)
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    try:
-        n_artifacts = sum(
-            1
-            for f in os.listdir(root)
-            if f.startswith("CORRECTNESS_r") and f.endswith(".json")
-        )
-    except OSError:
-        n_artifacts = 0
-    return n_artifacts + 1
-
-
-def rotated_names(round_no: int, names: list[str] | None = None) -> list[str]:
-    """Full registry ordering for ``round_no``: priority first, then
-    the sorted name cycle from offset ``round_no * STRIDE``, skipping
-    names already placed."""
-    base = sorted(names if names is not None else REGISTRY)
-    offset = (round_no * ROTATION_STRIDE) % len(base)
-    order = [n for n in _ROUND_PRIORITY if n in base]
-    placed = set(order)
-    for i in range(len(base)):
-        n = base[(offset + i) % len(base)]
-        if n not in placed:
-            order.append(n)
-            placed.add(n)
-    return order
-
-
-assert set(_ROUND_PRIORITY) <= set(REGISTRY), sorted(
-    set(_ROUND_PRIORITY) - set(REGISTRY)
-)
-assert len(_ROUND_PRIORITY) <= ROTATION_WINDOW - ROTATION_STRIDE, (
-    "priority block too large for the rotation coverage guarantee"
-)
-REGISTRY = {name: REGISTRY[name] for name in rotated_names(current_round())}
+# Registry order is the sorted entry names: independent of the
+# files in the repo root and of the order the blocks above were added.
+REGISTRY = dict(sorted(REGISTRY.items()))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

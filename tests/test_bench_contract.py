@@ -116,6 +116,11 @@ def _latest_driver_bench():
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     arts = sorted(glob.glob(os.path.join(root, "BENCH_r*.json")))
     for path in reversed(arts):
+        # only round artifacts: the glob also matches side runs such as
+        # BENCH_r16_c8.json (8-core scaling) and BENCH_r05code_reweather.json
+        tag_m = re.search(r"BENCH_(r\d+)\.json$", path)
+        if not tag_m:
+            continue
         try:
             with open(path) as f:
                 wrapper = json.load(f)
@@ -123,11 +128,9 @@ def _latest_driver_bench():
             continue
         # the driver wraps bench.py's one-line JSON inside `tail`
         tail = wrapper.get("tail") or ""
-        tag_m = re.search(r"BENCH_(r\d+)\.json$", path)
-        if tag_m:
-            snap_path, snap = _snapshot_payload_for(root, tag_m.group(1), tail)
-            if snap is not None:
-                return snap_path, snap
+        snap_path, snap = _snapshot_payload_for(root, tag_m.group(1), tail)
+        if snap is not None:
+            return snap_path, snap
         m = re.search(r'\{"metric".*\}', tail)
         if not m:
             continue

@@ -781,6 +781,32 @@ def test_prefix_jaccard_equals_ground_truth(spark, sf_oracle):
     assert len(got) > 0
 
 
+def test_prefix_jaccard_keeps_pair_at_exact_threshold(spark):
+    # J = 14/25 == 0.56 exactly, but 0.56 * 25 evaluates to
+    # 14.000000000000002: without the float guard the larger doc's
+    # index prefix shrinks from 12 to 11 tokens, i.e. to its eleven
+    # df-1 shingles, and the only collision (its 12th) is dropped
+    small = {f"s{i:02d}" for i in range(14)}
+    docs = {1: small, 2: small | {f"a{i:02d}" for i in range(11)}}
+    sh = spark.createDataFrame(
+        [(d, s) for d, shingles in docs.items() for s in sorted(shingles)],
+        "doc_id bigint, shingle string",
+    )
+    got = {
+        (r.id_a, r.id_b, r.jaccard)
+        for r in dedup.prefix_filter_jaccard_pairs(
+            sh, threshold=0.56, shingles=sh
+        ).collect()
+    }
+    truth = set()
+    for a in docs:
+        for b in docs:
+            j = len(docs[a] & docs[b]) / len(docs[a] | docs[b])
+            if a < b and j >= 0.56:
+                truth.add((a, b, round(j, 6)))
+    assert got == truth == {(1, 2, 0.56)}
+
+
 def test_prefix_filter_prunes_candidates(spark, sf_oracle):
     # the point of the prefix: strictly fewer candidate pairs than the
     # full common-shingle join generates

@@ -29,8 +29,13 @@ def test_parse_size_bytes_accepts_every_conf_shape():
     assert st._parse_size_bytes("134217728b") == 134217728
     assert st._parse_size_bytes("128m") == 134217728
     assert st._parse_size_bytes("1g") == 1073741824
+    assert st._parse_size_bytes("1t") == 1024**4
+    assert st._parse_size_bytes("2tb") == 2 * 1024**4
+    assert st._parse_size_bytes("1p") == 1024**5
     with pytest.raises(ValueError):
         st._parse_size_bytes("lots")
+    with pytest.raises(ValueError):
+        st._parse_size_bytes("5x")
 
 
 def test_spread_small_scan_gate_fires_and_stays_off_at_scale(

@@ -9,6 +9,8 @@ Differences from the pytest parity suite (tests/test_oracle_parity.py):
   and fails the driver. This catches that class.
 - Checks entries in REGISTRY order and reports the first-50 boundary,
   since the driver only verifies the first 50 ``queries()`` entries.
+  The registry is sorted by name, so ``--limit 50`` checks the
+  alphabetically first 50 entries.
 
 Usage: ``python tools/driver_sim.py [--sf /root/testdata/sf0.01] [--limit 50]``
 Exit code 0 iff every checked query matches (rows-only entries must

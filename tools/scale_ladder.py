@@ -12,7 +12,7 @@ Replication preserves per-copy semantics instead of stamping exact
 duplicates (which would inflate every dedup family quadratically and
 measure the INFLATION, not the scaling):
 
-- integer entity keys are offset per copy (the scaling_probe idiom);
+- integer entity keys are offset per copy;
 - document TEXT is letter-rotated per copy (copy 0 verbatim;
   copy i maps a..z → a+i..), preserving word/shingle statistics within
   a copy while giving copies disjoint vocabularies — no cross-copy
