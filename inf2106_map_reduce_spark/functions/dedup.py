@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from inf2106_map_reduce_spark.session import session_cache
 from inf2106_map_reduce_spark.tables import load_table
 
 N_HASHES = 12  # minhash signature length
@@ -254,8 +255,9 @@ def minhash_band_cols_arrow(
     every slice-min in a single pass per shingle with C-speed
     ``hashlib.md5``. Shingling reproduces :func:`word_shingles`
     exactly: Java ``\\s`` is the ASCII whitespace class, mirrored with
-    ``re.ASCII``; normalization is trim → lower → collapse — the
-    synthetic corpus is ASCII, which both forms assume alike.
+    ``re.ASCII``; normalization is trim → lower → collapse, with the
+    lowering done by Spark ``lower`` before the Arrow hop so both forms
+    share the JVM's Unicode case tables.
 
     This is the streaming hot path's form: per-row, stateless, zero
     shuffle — the per-batch Python cost is linear in shingle count and
@@ -280,7 +282,7 @@ def minhash_band_cols_arrow(
         # separator, yielding an EMPTY first/last word; the two forms
         # must stay bit-identical or the streaming band screen
         # (streaming/ingest.py) diverges from the snapshot band sets.
-        words = ws.sub(" ", text.strip(" ").lower()).split(" ")
+        words = ws.sub(" ", text.strip(" ")).split(" ")
         if len(words) < n_words:
             return (None,) * n_bands
         shingles = {
@@ -314,7 +316,9 @@ def minhash_band_cols_arrow(
             [bands_of(t) for t in texts], columns=cols
         )
 
-    return df.select("*", _band_udf(F.col(text_col)).alias("_bb")).select(
+    return df.select(
+        "*", _band_udf(F.lower(F.col(text_col))).alias("_bb")
+    ).select(
         *df.columns, *[F.col(f"_bb.{c}").alias(c) for c in cols]
     )
 
@@ -1323,9 +1327,10 @@ def fused_signatures(
     tests/test_r16_optimization.py against both JVM builders):
 
     - normalization replicates ``_norm_text`` exactly the way
-      :func:`minhash_band_cols_arrow` already does (strip SPACES only
-      = Spark ``trim``; lower; collapse ASCII ``\\s+``; keep empty
-      words — word_shingles keeps them too);
+      :func:`minhash_band_cols_arrow` already does (Spark ``lower``
+      before the Arrow hop, so both sides share the JVM's Unicode case
+      tables; strip SPACES only = Spark ``trim``; collapse ASCII
+      ``\\s+``; keep empty words — word_shingles keeps them too);
     - MinHash mins compare raw 4-byte digest slices, which order
       identically to the JVM's 8-hex-char substring strings (hex is a
       monotone byte-wise encoding), and are rendered back to hex;
@@ -1374,7 +1379,7 @@ def fused_signatures(
             for did, text in zip(pdf[id_col], pdf[text_col]):
                 if text is None:
                     continue
-                words = ws.sub(" ", text.strip(" ").lower()).split(" ")
+                words = ws.sub(" ", text.strip(" ")).split(" ")
                 mh: list[str | None] = [None] * n_hashes
                 if len(words) >= n_words:
                     sh = {
@@ -1420,7 +1425,9 @@ def fused_signatures(
                 rows.append((did, *mh, s32, s64))
             yield pd.DataFrame(rows, columns=cols)
 
-    return df.select(id_col, text_col).mapInPandas(_sigs, schema)
+    return df.select(
+        id_col, F.lower(F.col(text_col)).alias(text_col)
+    ).mapInPandas(_sigs, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1435,29 +1442,15 @@ def dedup_exact_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.select("content_key", "canonical_id", "n_copies")
 
 
-# ---------------------------------------------------------------------------
-# Session-scoped stage cache for the registry's cross-document dedup
-# pipeline. Five registry queries consume the same candidate graph
-# (candidates, Jaccard verify, both cluster resolutions, the composed
-# survivor pass); a production pipeline computes those stages ONCE and
-# derives every downstream product from them — recomputing the
-# shingle->MinHash->LSH->verify chain per query is a registry artifact,
-# not a semantic. Each stage is built lazily on first use, eagerly
-# ``localCheckpoint``-ed (stage outputs are pair lists — tiny relative
-# to the corpus), and keyed by (application, sf_dir), so the BUILD cost
-# is charged to the first consumer and later consumers pay only their
-# own derivation. Direct calls to the underlying functions with custom
-# inputs/thresholds are never cached.
-_STAGE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _doc_stage(spark: SparkSession, sf_dir: str, stage: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, stage)
-    df = _STAGE_CACHE.get(key)
-    if df is None:
-        df = build().localCheckpoint(eager=True)
-        _STAGE_CACHE[key] = df
-    return df
+    """One eagerly checkpointed stage of the registry's candidate-graph
+    pipeline, shared per session by every dedup and docs-graph entry
+    that consumes it."""
+    return session_cache(
+        spark,
+        ("doc_stage", sf_dir, stage),
+        lambda: build().localCheckpoint(eager=True),
+    )
 
 
 def build_registry_stage_cache(spark: SparkSession, sf_dir: str) -> dict[str, int]:
@@ -1712,22 +1705,6 @@ def dedup_cluster_assignments_star(spark: SparkSession, sf_dir: str) -> DataFram
     return cc.select(F.col("node").alias("doc_id"), "component")
 
 
-#: Session memo for the BOUNDED fast-path probe the registry entry
-#: feeds to ``embedding_cosine_pairs(n_rows=...)`` — without it every
-#: construction (each bench warm run, every explain) pays the eager
-#: ``limit(cap+1).count()`` probe as its own Spark job (the round-10
-#: ADVICE item the parameter exists for; the ingest screen's
-#: `_SCREEN_PROBE_CACHE` is the same idiom). The cached value is the
-#: limit-capped count itself (exact when <= cap, cap+1 when over), so
-#: the gate decision is bit-identical to the un-memoized probe and the
-#: first call never scans more than cap+1 rows — a full ``count()``
-#: here would schedule a whole-table job on the 100 TB path before any
-#: plan is returned. Like every (app, sf_dir)-keyed memo in this
-#: engine, it assumes the registry tables are immutable within an
-#: application.
-_EMB_PROBE_CACHE: dict[tuple, int] = {}
-
-
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs at cos >= 0.3 via LSH blocking —
     the sub-quadratic scale path is the registry default; the exact
@@ -1735,16 +1712,18 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle reproduces the same seeded hyperplanes as SQL literals,
     so this is hash-checked pair-for-pair despite being approximate."""
     e = load_table(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EMB_PROBE_CACHE:
-        _EMB_PROBE_CACHE[key] = e.limit(
-            COSINE_SINGLE_BATCH_CAP + 1
-        ).count()
+    # the bounded fast-path probe, shared by every construction in the
+    # session; the capped count never scans more than cap+1 rows
+    n_rows = session_cache(
+        spark,
+        ("embedding_probe", sf_dir),
+        lambda: e.limit(COSINE_SINGLE_BATCH_CAP + 1).count(),
+    )
     return embedding_cosine_pairs(
         e,
         threshold=0.3,
         use_lsh_blocking=True,
-        n_rows=_EMB_PROBE_CACHE[key],
+        n_rows=n_rows,
     )
 
 
@@ -2406,7 +2385,7 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
 
 def _registry_lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 3-round LPA partition over the shared edge stage, computed
-    ONCE per session (the `_doc_stage` idiom) — consumed by both the
+    ONCE per session as a `_doc_stage` — consumed by both the
     labelprop entry and its modularity audit, which would otherwise
     replay the identical deterministic trajectory."""
     return _doc_stage(

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from inf2106_map_reduce_spark.session import session_cache
 from inf2106_map_reduce_spark.tables import load_table
 
 # Tiny language-marker stopword lists for the heuristic language ID.
@@ -108,29 +109,18 @@ def unigram_tf_table(
     return w.groupBy(id_col, "word").agg(F.count(F.lit(1)).alias("tf"))
 
 
-#: Session-scoped cache for the registry's shared unigram term-count
-#: stage over the documents corpus — the dedup _STAGE_CACHE idiom:
-#: five registry entries (tfidf_terms, docs_unigram_logprob,
-#: docs_entropy, docs_dsir_scores, docs_adaptive_quality) consume the
-#: same (doc, word, tf) table; a production pipeline tokenizes ONCE
-#: and derives every unigram product from it. Built lazily, eagerly
-#: localCheckpoint-ed (the tf table is Zipf-bounded per doc — far
-#: smaller than the corpus at any scale), keyed by (application,
-#: sf_dir). Direct calls with custom frames never cache.
-_TF_STAGE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def registry_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from inf2106_map_reduce_spark.tables import load_table as _lt
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    tf = _TF_STAGE_CACHE.get(key)
-    if tf is None:
-        tf = unigram_tf_table(
-            _lt(spark, sf_dir, "documents")
-        ).localCheckpoint(eager=True)
-        _TF_STAGE_CACHE[key] = tf
-    return tf
+    """Checkpointed unigram (doc, word, tf) stage over the documents
+    corpus, shared per session by the five docs scoring entries
+    (tfidf_terms, docs_unigram_logprob, docs_entropy, docs_dsir_scores,
+    docs_adaptive_quality)."""
+    return session_cache(
+        spark,
+        ("unigram_tf", sf_dir),
+        lambda: unigram_tf_table(
+            load_table(spark, sf_dir, "documents")
+        ).localCheckpoint(eager=True),
+    )
 
 
 def tfidf(

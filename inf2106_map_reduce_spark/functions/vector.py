@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from inf2106_map_reduce_spark.session import session_cache
 from inf2106_map_reduce_spark.tables import load_table
 
 DEFAULT_QUERY_IDS: tuple[int, ...] = (0, 1, 2)
@@ -1006,23 +1007,15 @@ def kmeans_lloyd_converged(
     return _finish_lloyd(e, assigned), {"rounds": rounds, "shift": shift}
 
 
-#: Session-scoped cache of the default (k=8, 2-round) Lloyd
-#: ASSIGNMENT — the same (applicationId, sf_dir)-keyed stage idiom as
-#: dedup._doc_stage: kmeans_clusters and the SemDeDup entry run the
-#: IDENTICAL deterministic trajectory (same rounded-9 seeds, same
-#: fused rounds), so the assignment is computed once per session and
-#: each consumer pays only its own derivation.
-_LLOYD_ASSIGN_CACHE: dict[tuple, DataFrame] = {}
-
-
 def registry_lloyd_assignment(
     spark: SparkSession, sf_dir: str, k: int = 8, n_iter: int = 2
 ) -> DataFrame:
     """Checkpointed (vec_id, emb, cid) assignment of the registry's
-    default Lloyd trajectory over the embeddings table."""
-    key = (spark.sparkContext.applicationId, sf_dir, k, n_iter)
-    df = _LLOYD_ASSIGN_CACHE.get(key)
-    if df is None:
+    default Lloyd trajectory over the embeddings table, shared per
+    session by kmeans_clusters and the SemDeDup entry (both run the
+    identical deterministic trajectory)."""
+
+    def build() -> DataFrame:
         e = _cached_lloyd_input(
             load_table(spark, sf_dir, "embeddings"), "embedding"
         )
@@ -1040,8 +1033,11 @@ def registry_lloyd_assignment(
         assigned, _, _, _ = _lloyd_iterate(e, cents, n_rounds=n_iter)
         df = assigned.localCheckpoint(eager=True)
         e.unpersist()
-        _LLOYD_ASSIGN_CACHE[key] = df
-    return df
+        return df
+
+    return session_cache(
+        spark, ("lloyd_assignment", sf_dir, k, n_iter), build
+    )
 
 
 def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -30,6 +30,7 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from inf2106_map_reduce_spark.session import session_cache
 from inf2106_map_reduce_spark.tables import load_table
 
 
@@ -989,16 +990,6 @@ def _lineitem_enc_key() -> Column:
     )
 
 
-#: Session cache of the supplier-key encoding grid (the dedup
-#: stage-cache / trainer-trajectory idiom): the grid is fit at most
-#: once per (session, sf_dir) and shared by the encoding entry and
-#: its reliability audit, so each entry's bench line measures its own
-#: derivation, not a refit. The cached frame is the eagerly
-#: checkpointed grid — aggregate-sized, valid for the session's
-#: lifetime.
-_ENCODING_GRID_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _registry_encoding_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # FRAGILITY CONTRACT (r13 ADVICE): the ``_enc_n_folds`` stamp is
     # a plain Python attribute on the DataFrame OBJECT — any
@@ -1009,16 +1000,17 @@ def _registry_encoding_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (target_encoding checkpoints internally, pre-stamp);
     # tests/test_round16_fixes.py pins that the cached frame stays
     # stamped. Consumers must not wrap it before passing it on.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ENCODING_GRID_CACHE:
-        li = load_table(spark, sf_dir, "lineitem")
-        _ENCODING_GRID_CACHE[key] = target_encoding(
-            li,
+    # Shared per session by the encoding entry and its reliability audit.
+    return session_cache(
+        spark,
+        ("encoding_grid", sf_dir),
+        lambda: target_encoding(
+            load_table(spark, sf_dir, "lineitem"),
             "l_suppkey",
             _lineitem_enc_key(),
             F.col("l_returnflag") == "R",
-        )
-    return _ENCODING_GRID_CACHE[key]
+        ),
+    )
 
 
 def lineitem_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1176,15 +1168,6 @@ def chi_square_independence(
 # Registry model cache + eval registry queries
 # ---------------------------------------------------------------------------
 
-#: Session-scoped cache of the registry lineitem model's trained
-#: weights, keyed by (applicationId, sf_dir) — the logreg counterpart
-#: of the shared Lloyd assignment stage (vector._registry_assignments):
-#: the trainer, the AUC entry, and the calibration entry all consume
-#: the SAME deterministic trajectory, so it is computed once per
-#: session. Direct logreg_train calls with custom inputs never cache.
-_LINEITEM_MODEL_CACHE: dict[tuple, list[float] | None] = {}
-
-
 def _lineitem_features() -> list[tuple[str, Column]]:
     """The registry lineitem model's feature map (fixed constant
     scalings — data-independent, so the trajectory is reproducible
@@ -1199,19 +1182,22 @@ def _lineitem_features() -> list[tuple[str, Column]]:
 def _registry_lineitem_model(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, list[float] | None]:
-    """(base frame, trained weights) for the registry lineitem model,
-    training at most once per (session, sf_dir)."""
+    """(base frame, trained weights) for the registry lineitem model;
+    the weights are trained once per session and shared by the
+    trainer, AUC and calibration entries."""
     base = _logreg_base(
         load_table(spark, sf_dir, "lineitem"),
         _lineitem_features(),
         (F.col("l_returnflag") == "R").cast("int"),
     )
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LINEITEM_MODEL_CACHE:
-        _LINEITEM_MODEL_CACHE[key] = logreg_weights(
+    w = session_cache(
+        spark,
+        ("lineitem_model", sf_dir),
+        lambda: logreg_weights(
             base, [name for name, _ in _lineitem_features()]
-        )
-    return base, _LINEITEM_MODEL_CACHE[key]
+        ),
+    )
+    return base, w
 
 
 def lineitem_logreg_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2919,20 +2905,6 @@ def _qtl_fine(col: str, width: float, n_fine: int = N_QTL_FINE) -> Column:
     )
 
 
-#: Session cache of REGISTRY bucket maps (the encoding-grid
-#: accounting idiom, _ENCODING_GRID_CACHE): every quantile-family
-#: registry entry fits the same (lineitem, feature, group_cols) maps
-#: — 3 eager aggregate scans per entry call before this cache, paid
-#: once per session after it (whichever entry runs first pays the
-#: fit; each later entry's bench line measures only its own
-#: trainer/scoring work). Keyed by the caller-supplied cache_key
-#: (applicationId, sf_dir) plus every fit parameter; callers passing
-#: a cache_key assert the input frame's CONTENT is a pure function
-#: of that key (true for the registry's load_table frames). Direct
-#: calls without a cache_key never cache.
-_QTL_MAP_CACHE: dict[tuple, DataFrame] = {}
-
-
 def quantile_bucket_map(
     df: DataFrame,
     col: str,
@@ -2958,18 +2930,25 @@ def quantile_bucket_map(
     form of :func:`quantile_bins`): the histogram and both windows
     gain the group key, the frame grows to ≤ groups × n_fine rows
     (still aggregate-sized for the low-cardinality segment keys this
-    serves), and the consumer's join gains the group columns."""
+    serves), and the consumer's join gains the group columns.
+
+    ``cache_key`` (the registry passes ``(sf_dir,)``) shares the fit per
+    session among every quantile-family registry entry; a caller
+    passing one asserts that ``df``'s content is a pure function of
+    it. Keyless calls and ``checkpoint=False`` (an unexecuted lineage,
+    the plan-inspection path) never cache."""
     _require_safe_group_cols("quantile_bucket_map", group_cols)
-    # session cache (see _QTL_MAP_CACHE): only checkpointed maps are
-    # cacheable — an unexecuted lineage (checkpoint=False, the plan-
-    # inspection path) must stay per-call
-    full_key = None
     if cache_key is not None and checkpoint:
-        full_key = (
-            cache_key, col, width, n_fine, n_buckets, tuple(group_cols),
+        return session_cache(
+            df.sparkSession,
+            (
+                "qtl_map", cache_key, col, width, n_fine, n_buckets,
+                tuple(group_cols),
+            ),
+            lambda: quantile_bucket_map(
+                df, col, width, n_fine, n_buckets, group_cols=group_cols
+            ),
         )
-        if full_key in _QTL_MAP_CACHE:
-            return _QTL_MAP_CACHE[full_key]
     gc = list(group_cols)
     hist = (
         df.select(*gc, _qtl_fine(col, width, n_fine).alias("fb"))
@@ -3001,10 +2980,7 @@ def quantile_bucket_map(
             F.expr(f"CAST(((cum - n) * {n_buckets}) DIV nt AS INT)"),
         ).alias("bucket"),
     )
-    out = m.localCheckpoint(eager=True) if checkpoint else m
-    if full_key is not None:
-        _QTL_MAP_CACHE[full_key] = out
-    return out
+    return m.localCheckpoint(eager=True) if checkpoint else m
 
 
 def _quantile_stump_binned(
@@ -3105,13 +3081,6 @@ def _quantile_stump_binned(
 #: past the cap the broadcast-join form is the right plan anyway.
 _QTL_EXPR_MAX_GROUPS = 64
 
-#: Session cache of collected bucket edges, keyed like _QTL_MAP_CACHE
-#: plus the feature name — the collect is bounded (the map is already
-#: an eagerly-materialized aggregate-sized frame) but need not repeat
-#: per trainer call.
-_QTL_EDGE_CACHE: dict[tuple, dict[tuple, list[int]]] = {}
-
-
 def _bucket_edges(
     m: DataFrame, gc: list[str], cache_key: tuple | None = None
 ) -> dict[tuple, list[int]] | None:
@@ -3121,9 +3090,15 @@ def _bucket_edges(
     the first), so ``Σ [fb >= f_j] = bucket(fb)`` exactly for every
     OCCUPIED fine bin — including histories where one huge fine bin
     skips whole buckets. Returns None past
-    :data:`_QTL_EXPR_MAX_GROUPS` (caller falls back to the join)."""
-    if cache_key is not None and cache_key in _QTL_EDGE_CACHE:
-        return _QTL_EDGE_CACHE[cache_key]
+    :data:`_QTL_EXPR_MAX_GROUPS` (caller falls back to the join).
+    ``cache_key`` shares the bounded collect per session beside the
+    cached map it was derived from."""
+    if cache_key is not None:
+        return session_cache(
+            m.sparkSession,
+            ("qtl_edges", cache_key),
+            lambda: _bucket_edges(m, gc),
+        )
     rows = m.collect()
     per_group: dict[tuple, list[tuple[int, int]]] = {}
     for r in rows:
@@ -3141,8 +3116,6 @@ def _bucket_edges(
                 es.extend([fb] * (bucket - prev_bucket))
                 prev_bucket = bucket
         edges[key] = es
-    if cache_key is not None:
-        _QTL_EDGE_CACHE[cache_key] = edges
     return edges
 
 
@@ -3193,7 +3166,7 @@ def lineitem_quantile_gbt(spark: SparkSession, sf_dir: str) -> DataFrame:
         2,
         binned=_quantile_stump_binned(
             load_table(spark, sf_dir, "lineitem"),
-            cache_key=(spark.sparkContext.applicationId, sf_dir),
+            cache_key=(sf_dir,),
         ),
     )
 
@@ -3209,7 +3182,7 @@ def lineitem_quantile_gbt3(spark: SparkSession, sf_dir: str) -> DataFrame:
         3,
         binned=_quantile_stump_binned(
             load_table(spark, sf_dir, "lineitem"),
-            cache_key=(spark.sparkContext.applicationId, sf_dir),
+            cache_key=(sf_dir,),
         ),
     )
 
@@ -3227,7 +3200,7 @@ def lineitem_quantile_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
         None,
         binned=_quantile_stump_binned(
             li,
-            cache_key=(spark.sparkContext.applicationId, sf_dir),
+            cache_key=(sf_dir,),
         ),
     )
 
@@ -3252,7 +3225,7 @@ def lineitem_status_quantile_tree(
         binned=_quantile_stump_binned(
             li,
             group_cols=("seg",),
-            cache_key=(spark.sparkContext.applicationId, sf_dir),
+            cache_key=(sf_dir,),
         ),
         group_cols=("seg",),
     )
@@ -3282,7 +3255,7 @@ def lineitem_status_quantile_gbt(
         binned=_quantile_stump_binned(
             li,
             group_cols=("seg",),
-            cache_key=(spark.sparkContext.applicationId, sf_dir),
+            cache_key=(sf_dir,),
         ),
         group_cols=("seg",),
     )
@@ -3308,7 +3281,7 @@ def lineitem_status_quantile_gbt3(
         binned=_quantile_stump_binned(
             li,
             group_cols=("seg",),
-            cache_key=(spark.sparkContext.applicationId, sf_dir),
+            cache_key=(sf_dir,),
         ),
         group_cols=("seg",),
     )
@@ -3391,7 +3364,7 @@ def _qgbt_scored(
         li,
         checkpoint=checkpoint,
         group_cols=gc,
-        cache_key=(spark.sparkContext.applicationId, sf_dir),
+        cache_key=(sf_dir,),
     )
     # r15 OPTIMIZATION: on the executed path the scorer consumes the
     # SAME joint-histogram cells the trainer aggregates from (the

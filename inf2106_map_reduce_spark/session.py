@@ -12,8 +12,12 @@ we would ship to a 1000-executor cluster, with the documented overrides.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Hashable
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+
+_T = TypeVar("_T")
 
 # Root for every write-once staged artifact (bucketed warehouse,
 # partitioned/sorted/compacted layout dirs). Repo-adjacent, NOT /tmp:
@@ -133,3 +137,42 @@ def get_spark(
 
     register(spark)
     return spark
+
+
+#: The live application's id and the session_cache entries built under
+#: it; the first call from another application clears the entries.
+_cache_app_id: str | None = None
+_cache_entries: dict[Hashable, object] = {}
+
+
+def session_cache(
+    spark: SparkSession, key: Hashable, build: Callable[[], _T]
+) -> _T:
+    """Return the value stored under ``key`` for the live Spark
+    application, or call ``build()`` once and store its result.
+
+    This is the engine's one "compute once per session" mechanism:
+    registry stages (checkpointed candidate graphs, term counts, model
+    weights, bucket maps), bounded probes and staged stream sinks are
+    built by whichever caller asks first and shared by every later
+    one. The key needs no application id — this function reads
+    ``spark.sparkContext.applicationId`` itself — but it must name
+    what is built (a leading tag such as ``"lpa_labels"``) and every
+    input that determines its content, typically ``sf_dir``. That
+    holds because registry tables are immutable within an
+    application; a caller whose input frame is not a pure function of
+    its key must not cache.
+
+    Membership decides a hit, so a stored ``None`` is returned as is.
+    A ``build()`` that raises stores nothing. The first call under a
+    new application id drops every entry of the old one: their
+    checkpoint blocks died with the old context, so there is nothing
+    to unpersist."""
+    global _cache_app_id
+    app_id = spark.sparkContext.applicationId
+    if app_id != _cache_app_id:
+        _cache_entries.clear()
+        _cache_app_id = app_id
+    if key not in _cache_entries:
+        _cache_entries[key] = build()
+    return _cache_entries[key]

@@ -250,8 +250,6 @@ class TokenKVDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Idempotent registration of the tokenkv format."""
-    try:
-        spark.dataSource.register(TokenKVDataSource)
-    except Exception:
-        pass  # already registered in this session
+    """Register the tokenkv format; registering it again in the same
+    session is a no-op re-registration, not an error."""
+    spark.dataSource.register(TokenKVDataSource)

@@ -34,6 +34,7 @@ from inf2106_map_reduce_spark.functions.dedup import (
     _registry_minhash_sigs,
     minhash_band_cols_arrow,
 )
+from inf2106_map_reduce_spark.session import session_cache
 from inf2106_map_reduce_spark.streaming.runtime import (
     scoped_state_partitions,
     state_partitions_for,
@@ -104,20 +105,6 @@ def snapshot_band_sets(
 SCREEN_BROADCAST_CAP = 5_000_000
 
 
-#: Session-scoped memo for the screen's broadcast-size probe, keyed by
-#: the caller's ``cache_key`` (the `state_partitions_for` idiom): the
-#: registry's snapshot band sets are a pure function of (app, sf_dir),
-#: so the bounded count is paid ONCE per key, not on every screen
-#: construction — the same construction-time-eager-probe cost the
-#: round-10 `n_rows` parameter removed from `embedding_cosine_pairs`
-#: (a bench timing loop rebuilds this screen on every run, and each
-#: rebuild was one distinct+count job billed to the query's line).
-#: Probe expression and cache live HERE only; callers without a key
-#: always probe — library callers with arbitrary band sets get the
-#: safe default.
-_SCREEN_PROBE_CACHE: dict[tuple, bool] = {}
-
-
 def neardup_screen(
     stream: DataFrame,
     band_sets: list[DataFrame],
@@ -133,24 +120,31 @@ def neardup_screen(
     only eliminates rows whose OWN band-b value collides — a doc
     survives iff it passes all four. NULL band values (docs shorter
     than one shingle) never equi-join, so shingle-less docs always
-    pass — same contract as the batch banding, both engines."""
+    pass — same contract as the batch banding, both engines. The
+    registry's key, ``(sf_dir,)``, shares one probe among every screen
+    construction in the session."""
+
+    def probe() -> bool:
+        # every band set must fit under the cap: per-band distinct
+        # cardinalities are NOT interchangeable (band b hashes a
+        # different minhash slice, so a low-entropy slice can
+        # collapse band 0 while another band stays near |docs|) —
+        # one over-cap band force-broadcast would be the exact
+        # failure the cap exists to prevent (r10 ADVICE item)
+        return all(
+            s.limit(SCREEN_BROADCAST_CAP + 1).count()
+            <= SCREEN_BROADCAST_CAP
+            for s in band_sets
+        )
+
     if broadcast_ok is None:
-        if cache_key is not None and cache_key in _SCREEN_PROBE_CACHE:
-            broadcast_ok = _SCREEN_PROBE_CACHE[cache_key]
-        else:
-            # every band set must fit under the cap: per-band distinct
-            # cardinalities are NOT interchangeable (band b hashes a
-            # different minhash slice, so a low-entropy slice can
-            # collapse band 0 while another band stays near |docs|) —
-            # one over-cap band force-broadcast would be the exact
-            # failure the cap exists to prevent (r10 ADVICE item)
-            broadcast_ok = all(
-                s.limit(SCREEN_BROADCAST_CAP + 1).count()
-                <= SCREEN_BROADCAST_CAP
-                for s in band_sets
+        broadcast_ok = (
+            probe()
+            if cache_key is None
+            else session_cache(
+                stream.sparkSession, ("screen_probe", cache_key), probe
             )
-            if cache_key is not None:
-                _SCREEN_PROBE_CACHE[cache_key] = broadcast_ok
+        )
     out = stream
     for b, s in enumerate(band_sets):
         out = out.join(
@@ -198,7 +192,7 @@ def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     accepted = neardup_screen(
         minhash_band_cols_arrow(stream),
         band_sets,
-        cache_key=(spark.sparkContext.applicationId, sf_dir),
+        cache_key=(sf_dir,),
     )
     out = (
         accepted.groupBy(
@@ -229,12 +223,7 @@ def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         n=state_partitions_for(
             state_keys,
-            cache_key=(
-                spark.sparkContext.applicationId,
-                sf_dir,
-                "documents",
-                "neardup_ingest",
-            ),
+            cache_key=(sf_dir, "documents", "neardup_ingest"),
         ),
         out=out,
         output_mode="append",

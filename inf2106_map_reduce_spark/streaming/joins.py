@@ -164,9 +164,7 @@ def _attribution_drain(
         # (from the batch view) sizes the partitions
         n=state_partitions_for(
             load_table(spark, sf_dir, "events").select("user_id"),
-            cache_key=(
-                spark.sparkContext.applicationId, sf_dir, "events", "user_id"
-            ),
+            cache_key=(sf_dir, "events", "user_id"),
         ),
         out=out,
         output_mode="append",

@@ -28,6 +28,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from inf2106_map_reduce_spark.session import session_cache
+
 #: Fallback when no key sample is supplied (and the env override for
 #: deployments that know their cardinality): 4 is sized to the BENCH
 #: scale factor (sf0.1, ~10k keys in flight) — NOT a universal
@@ -67,14 +69,6 @@ STATE_PARTITIONS_CAP = 1024
 PY_STATE_KEYS_PER_SQ = 16
 
 
-#: Session-scoped memo for the cardinality estimate: the same key
-#: projection over the same source is asked repeatedly by a harness
-#: (warmup + timed runs) while the answer is a property of the data.
-#: Keyed by (applicationId, caller-supplied source identity); direct
-#: calls without a cache_key always measure.
-_ESTIMATE_CACHE: dict[tuple, int] = {}
-
-
 def state_partitions_for(
     source_keys: DataFrame | None,
     cache_key: tuple | None = None,
@@ -92,25 +86,30 @@ def state_partitions_for(
     ``SPARK_GRAFT_STATE_PARTITIONS`` still wins when set (a deployment
     that knows its steady-state cardinality errs high explicitly);
     passing ``None`` falls back to the same default. ``cache_key``
-    (e.g. ``(app_id, sf_dir, table, cols...)``) memoizes the estimate
-    for repeated drains of the same source within a session (the raw
-    key-count estimate is memoized, so callers with different rules
-    share one scan)."""
+    (e.g. ``(sf_dir, table, cols...)``) shares the estimate among
+    repeated drains of the same source within a session (the raw
+    key-count estimate is shared, so callers with different rules
+    share one scan); calls without one always measure."""
     env = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS")
     if env:
         return int(env)
     if source_keys is None:
         return STATE_PARTITIONS
-    if cache_key is not None and cache_key in _ESTIMATE_CACHE:
-        n_keys = _ESTIMATE_CACHE[cache_key]
-    else:
-        n_keys = source_keys.agg(
+
+    def estimate() -> int:
+        return source_keys.agg(
             F.approx_count_distinct(
                 F.struct(*[F.col(c) for c in source_keys.columns])
             ).alias("k")
         ).collect()[0]["k"]
-        if cache_key is not None:
-            _ESTIMATE_CACHE[cache_key] = n_keys
+
+    n_keys = (
+        estimate()
+        if cache_key is None
+        else session_cache(
+            source_keys.sparkSession, ("state_keys", cache_key), estimate
+        )
+    )
     if py_state:
         n = math.ceil(math.sqrt(n_keys / PY_STATE_KEYS_PER_SQ))
     else:

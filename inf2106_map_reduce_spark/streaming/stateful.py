@@ -83,11 +83,6 @@ def _run_to_table(
     columns) sizes the state partition count from the data
     (runtime.state_partitions_for)."""
     sink = tempfile.mkdtemp(prefix="stream_sink_")
-    cache_key = (
-        (spark.sparkContext.applicationId,) + state_key_id
-        if state_key_id
-        else None
-    )
     with scoped_state_partitions(
         spark,
         # the Python-state rule: this module's operators are the
@@ -95,7 +90,7 @@ def _run_to_table(
         # per-group Python round-trip — see
         # runtime.PY_STATE_KEYS_PER_SQ for the model and measurements
         n=state_partitions_for(
-            state_keys, cache_key=cache_key, py_state=True
+            state_keys, cache_key=state_key_id, py_state=True
         ),
         out=out_stream,
         output_mode=mode,

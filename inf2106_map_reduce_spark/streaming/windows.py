@@ -17,6 +17,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from inf2106_map_reduce_spark.session import session_cache
 from inf2106_map_reduce_spark.streaming import stateful as stream_stateful
 
 from inf2106_map_reduce_spark.streaming.runtime import (
@@ -164,15 +165,10 @@ def _run_available_now(
         stream = stream.withWatermark("ts", WATERMARK)
     out = transform(stream)
     sink = tempfile.mkdtemp(prefix="stream_sink_")
-    cache_key = (
-        (spark.sparkContext.applicationId,) + state_key_id
-        if state_key_id
-        else None
-    )
     _write_batch = _batch_writer(sink, output_mode)
     with scoped_state_partitions(
         spark,
-        n=state_partitions_for(state_keys, cache_key=cache_key),
+        n=state_partitions_for(state_keys, cache_key=state_key_id),
         out=out,
         output_mode=output_mode,
     ):
@@ -512,14 +508,7 @@ def backfill_lag_over(
     _write_batch = _batch_writer(sink, "append")
     with scoped_state_partitions(
         spark,
-        n=state_partitions_for(
-            state_keys,
-            cache_key=(
-                (spark.sparkContext.applicationId,) + state_key_id
-                if state_key_id
-                else None
-            ),
-        ),
+        n=state_partitions_for(state_keys, cache_key=state_key_id),
         out=out,
         output_mode="append",
     ):
@@ -1032,15 +1021,6 @@ def _grouped_upsert_drain_from(
 #: than "newest" or "oldest".
 UPSERT_AS_OF_VERSION = UPSERT_RETENTION_SPANS - 2
 
-#: Session cache of the AS-OF entry's drained partition-scoped tree
-#: (the encoding-grid accounting idiom): the read entry never deletes
-#: anything, so one drain per (session, sf_dir) serves every call —
-#: unlike the retention entry, which drains FRESH per call because
-#: its vacuum mutates the tree (a shared tree would make a second
-#: audit report zero deletions).
-_GROUPED_DRAIN_CACHE: dict[tuple, tuple[str, int]] = {}
-
-
 def streaming_upsert_asof_read(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1073,16 +1053,16 @@ def streaming_upsert_asof_read(
 
 
 def _cached_grouped_drain(spark: SparkSession, sf_dir: str) -> str:
-    """The session-cached partition-scoped drain shared by the
-    read-only sink entries (as-of read, change feed) — neither ever
-    mutates the tree, so one drain per (session, sf_dir) serves both
-    (the encoding-grid accounting: whichever entry runs first pays
-    it)."""
-    src = _upsert_retention_source(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _GROUPED_DRAIN_CACHE:
-        _GROUPED_DRAIN_CACHE[key] = _grouped_upsert_drain_from(spark, src)
-    return _GROUPED_DRAIN_CACHE[key][0]
+    """The partition-scoped drain shared per session by the read-only
+    sink entries (as-of read, change feed, compaction audit); the
+    retention entry drains fresh per call because its vacuum deletes."""
+    return session_cache(
+        spark,
+        ("grouped_drain", sf_dir),
+        lambda: _grouped_upsert_drain_from(
+            spark, _upsert_retention_source(spark, sf_dir)
+        ),
+    )[0]
 
 
 def _asof_state(
@@ -1284,7 +1264,7 @@ def streaming_upsert_scd2(
     table-size (the naive per-version state-union rebuild); the
     window pass shuffles once on the key, and each feed's join is
     key-group co-located by the sink's own layout. Read-only over
-    the session-cached drain (the read-only-sink accounting idiom).
+    the session-cached drain.
 
     Pinned equal to the batch SCD2 of the replayed per-version state
     stream (tests), and oracle-exact: DuckDB rebuilds every
@@ -1333,20 +1313,24 @@ def streaming_upsert_scd2(
 #: LEAST(8, n_keys) closed form the oracle replays.
 UPSERT_COMPACT_FRAG = 8
 
-#: Session cache of the compaction audit's staged trees (the
-#: read-only-sink accounting idiom shared with _GROUPED_DRAIN_CACHE):
-#: the audit never mutates the drained source tree — it rewrites
-#: into its OWN compacted tree — so one staging per (session,
-#: sf_dir) serves every call, and repeated calls audit the identical
-#: immutable result.
-_COMPACTED_TREE_CACHE: dict[tuple, tuple[str, list]] = {}
-
-
 def _compacted_grouped_tree(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, list]:
-    """Stage (once per session, sf_dir) the small-file compaction of
-    the partition-scoped sink: every (version, group) partition of
+    """The compaction audit's staged tree, shared per session by every
+    audit call: the audit rewrites into its own tree and never mutates
+    the drained source."""
+    return session_cache(
+        spark,
+        ("compacted_tree", sf_dir),
+        lambda: _stage_compacted_tree(spark, sf_dir),
+    )
+
+
+def _stage_compacted_tree(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, list]:
+    """Stage the small-file compaction of the partition-scoped sink:
+    every (version, group) partition of
     the session-cached drained tree is first re-written FRAGMENTED
     (``repartitionByRange(UPSERT_COMPACT_FRAG, "user_id")`` — one
     range per distinct key up to FRAG, so the file count is exactly
@@ -1360,9 +1344,6 @@ def _compacted_grouped_tree(
     partition rewrites are independent jobs a maintenance scheduler
     fans out in parallel; the loop below is the same plan serialized
     at test scale."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _COMPACTED_TREE_CACHE:
-        return _COMPACTED_TREE_CACHE[key]
     table_root = _cached_grouped_drain(spark, sf_dir)
     compact_root = tempfile.mkdtemp(prefix="upsert_compacted_")
     meta = []
@@ -1428,7 +1409,6 @@ def _compacted_grouped_tree(
             # are dead; without this the per-(version, group) temp
             # dirs accumulate for the session lifetime (r14 ADVICE)
             shutil.rmtree(frag_dir, ignore_errors=True)
-    _COMPACTED_TREE_CACHE[key] = (compact_root, meta)
     return compact_root, meta
 
 
@@ -1760,13 +1740,6 @@ def redrive_reason() -> F.Column:
     return reason
 
 
-#: Session cache of the split run's sink roots: the split entry and
-#: the redrive entry share ONE quarantine (the encoding-grid /
-#: dedup-stage-cache accounting idiom — whichever entry runs first
-#: pays the split drain; the other consumes the sinks).
-_DLQ_ROOTS_CACHE: dict[tuple, tuple[str, str]] = {}
-
-
 def route_batch(
     batch_df, epoch: int, good_root: str, bad_root: str, reason
 ) -> None:
@@ -1786,11 +1759,16 @@ def route_batch(
 
 
 def _dlq_sink_roots(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Run the DLQ split stream at most once per (session, sf_dir);
-    returns (good_root, dlq_root)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _DLQ_ROOTS_CACHE:
-        return _DLQ_ROOTS_CACHE[key]
+    """(good_root, dlq_root) of the DLQ split run, shared per session by
+    the split, redrive and retention entries: they all read ONE
+    quarantine."""
+    return session_cache(
+        spark, ("dlq_roots", sf_dir), lambda: _run_dlq_split(spark, sf_dir)
+    )
+
+
+def _run_dlq_split(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """Drain the DLQ split stream into fresh good/quarantine sinks."""
     src = _dlq_source_dir(spark, sf_dir)
     good_root = tempfile.mkdtemp(prefix="dlq_good_")
     dlq_root = tempfile.mkdtemp(prefix="dlq_bad_")
@@ -1813,7 +1791,6 @@ def _dlq_sink_roots(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         .start()
     )
     q.awaitTermination()
-    _DLQ_ROOTS_CACHE[key] = (good_root, dlq_root)
     return good_root, dlq_root
 
 

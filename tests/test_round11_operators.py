@@ -12,6 +12,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from inf2106_map_reduce_spark import session
 from inf2106_map_reduce_spark.functions import pipeline
 from inf2106_map_reduce_spark.operators import stats
 from inf2106_map_reduce_spark.tables import load_table
@@ -417,14 +418,14 @@ def test_screen_probe_covers_every_band_set(spark, monkeypatch):
     )
     key = ("test", "band-coverage", id(big))
     ing.neardup_screen(stream, [small, big], cache_key=key)
-    assert ing._SCREEN_PROBE_CACHE[key] is False
+    assert session._cache_entries[("screen_probe", key)] is False
     # and with every band under the cap the verdict stays True
     small1 = spark.range(5).select(
         F.col("id").cast("string").alias("band_1")
     )
     key2 = ("test", "band-coverage-ok", id(small))
     ing.neardup_screen(stream, [small, small1], cache_key=key2)
-    assert ing._SCREEN_PROBE_CACHE[key2] is True
+    assert session._cache_entries[("screen_probe", key2)] is True
 
 
 def test_plan_with_confs_is_lock_serialized():

@@ -15,6 +15,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from inf2106_map_reduce_spark import session
 from inf2106_map_reduce_spark.operators import stats
 from inf2106_map_reduce_spark.plans import explain_str
 from inf2106_map_reduce_spark.streaming import stateful as stream_stateful
@@ -461,8 +462,8 @@ def test_dlq_redrive_conserves_the_quarantine(spark, sf_oracle):
         g[0] += r["n_rows"]
         g[1] += r["sum_event_id"]
     assert re == dlq
-    key = (spark.sparkContext.applicationId, sf_oracle)
-    assert key in stream_windows._DLQ_ROOTS_CACHE
+    key = ("dlq_roots", sf_oracle)
+    assert key in session._cache_entries
 
 
 def test_redrive_rules_are_a_subset_correction(spark):

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from inf2106_map_reduce_spark import session
 from inf2106_map_reduce_spark.operators import stats
 from inf2106_map_reduce_spark.plans import explain_str
 from inf2106_map_reduce_spark.tables import load_table
@@ -420,9 +421,9 @@ def test_asof_read_is_historical_not_latest(spark, sf_oracle):
     first = stream_windows.streaming_upsert_asof_read(
         spark, sf_oracle
     ).collect()
-    key = (spark.sparkContext.applicationId, sf_oracle)
-    assert key in stream_windows._GROUPED_DRAIN_CACHE
-    root, last = stream_windows._GROUPED_DRAIN_CACHE[key]
+    key = ("grouped_drain", sf_oracle)
+    assert key in session._cache_entries
+    root, last = session._cache_entries[key]
     assert last > stream_windows.UPSERT_AS_OF_VERSION
     second = stream_windows.streaming_upsert_asof_read(
         spark, sf_oracle

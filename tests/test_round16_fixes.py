@@ -16,6 +16,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from inf2106_map_reduce_spark import session
 from inf2106_map_reduce_spark.operators import stats
 from inf2106_map_reduce_spark.streaming import windows as stream_windows
 
@@ -266,7 +267,7 @@ def test_quantile_map_cache_contract(spark, sf_smoke):
     from inf2106_map_reduce_spark.tables import load_table
 
     li = stats.load_table(spark, sf_smoke, "lineitem")
-    key = (spark.sparkContext.applicationId, sf_smoke)
+    key = (sf_smoke,)
     m1 = stats.quantile_bucket_map(
         li, "l_extendedprice", stats.QSTUMP_FEATURES[2][2],
         cache_key=key,
@@ -282,7 +283,7 @@ def test_quantile_map_cache_contract(spark, sf_smoke):
         group_cols=("seg",), cache_key=key,
     )
     assert mg is not m1
-    n_before = len(stats._QTL_MAP_CACHE)
+    n_before = len(session._cache_entries)
     lazy = stats.quantile_bucket_map(
         li, "l_extendedprice", stats.QSTUMP_FEATURES[2][2],
         checkpoint=False, cache_key=key,
@@ -290,7 +291,7 @@ def test_quantile_map_cache_contract(spark, sf_smoke):
     keyless = stats.quantile_bucket_map(
         li, "l_extendedprice", stats.QSTUMP_FEATURES[2][2],
     )
-    assert len(stats._QTL_MAP_CACHE) == n_before
+    assert len(session._cache_entries) == n_before
     assert lazy is not m1 and keyless is not m1
     # the cached fit is the same map a fresh keyless fit produces
     assert sorted(map(tuple, m1.collect())) == sorted(

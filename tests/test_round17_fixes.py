@@ -16,6 +16,7 @@ import tempfile
 
 import pytest
 
+from inf2106_map_reduce_spark import session
 from inf2106_map_reduce_spark.streaming import windows as stream_windows
 
 
@@ -32,8 +33,8 @@ def test_compaction_staging_removes_frag_dirs(spark, sf_oracle):
     A fresh staging pass must leave zero new frag dirs behind (the
     accounting it needs — frag_files / frag_bytes — is captured before
     the cleanup)."""
-    key = (spark.sparkContext.applicationId, sf_oracle)
-    stream_windows._COMPACTED_TREE_CACHE.pop(key, None)
+    key = ("compacted_tree", sf_oracle)
+    session._cache_entries.pop(key, None)
     before = _frag_dirs()
     compact_root, meta = stream_windows._compacted_grouped_tree(
         spark, sf_oracle
@@ -56,8 +57,8 @@ def test_compaction_stage_asserts_the_oracle_files_after_bound(
     time with a message naming the oracle — shrinking the target below
     any real partition's size must raise there, not surface later as an
     inscrutable value-hash mismatch."""
-    key = (spark.sparkContext.applicationId, sf_oracle)
-    stream_windows._COMPACTED_TREE_CACHE.pop(key, None)
+    key = ("compacted_tree", sf_oracle)
+    session._cache_entries.pop(key, None)
     monkeypatch.setattr(stream_windows, "COMPACT_TARGET_BYTES", 1)
     before = _frag_dirs()
     with pytest.raises(AssertionError, match="_grouped_compaction_oracle"):
@@ -65,7 +66,7 @@ def test_compaction_stage_asserts_the_oracle_files_after_bound(
     # the error path cleans its own staging dir too
     assert _frag_dirs() == before
     # the poisoned run must not be cached
-    assert key not in stream_windows._COMPACTED_TREE_CACHE
+    assert key not in session._cache_entries
 
 
 def test_snapshot_resolver_tolerates_tail_float_reformatting():

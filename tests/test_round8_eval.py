@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from inf2106_map_reduce_spark import session
 from inf2106_map_reduce_spark.operators import stats
 from inf2106_map_reduce_spark.plans import (
     data_shuffle_count,
@@ -195,7 +196,7 @@ def test_chi2_null_categories_excluded(spark):
 
 
 def test_model_cache_trains_once(spark, sf_oracle):
-    stats._LINEITEM_MODEL_CACHE.clear()
+    session._cache_entries.pop(("lineitem_model", sf_oracle), None)
     _, w1 = stats._registry_lineitem_model(spark, sf_oracle)
     _, w2 = stats._registry_lineitem_model(spark, sf_oracle)
     assert w1 is w2, "second call must hit the session cache"

@@ -311,7 +311,7 @@ def test_arrow_bands_match_jvm_form(spark, sf_smoke):
     bit-identical to the JVM expression form on real corpus text AND
     on the edge rows the corpus never exercises (NULL text, empty,
     whitespace-only, shorter than one shingle, mixed whitespace
-    runs)."""
+    runs, capitals only the JVM's case tables lowercase)."""
     from inf2106_map_reduce_spark.functions import dedup
 
     d = load_table(spark, sf_smoke, "documents")
@@ -329,6 +329,8 @@ def test_arrow_bands_match_jvm_form(spark, sf_smoke):
             (100006, "\tfoo bar baz qux quux corge grault"),
             (100007, "foo bar baz qux quux corge grault\n"),
             (100008, "\t mixed lead and trail tab newline words here \n "),
+            # capitals the JVM lowercases and Python 3.11 does not
+            (100009, "\u1c89 tje and \ua7cb rams horn"),
         ],
         "doc_id bigint, text string",
     )
@@ -346,6 +348,9 @@ def test_arrow_bands_match_jvm_form(spark, sf_smoke):
         .collect()
     }
     assert jvm == arrow
+    # the lowering feeds only the bands; the text column passes through
+    kept = dedup.minhash_band_cols_arrow(edge).where("doc_id = 100009")
+    assert kept.first()["text"] == "\u1c89 tje and \ua7cb rams horn"
 
 
 def test_neardup_screen_semantics(spark):
