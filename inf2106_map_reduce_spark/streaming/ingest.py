@@ -36,10 +36,10 @@ from inf2106_map_reduce_spark.functions.dedup import (
 )
 from inf2106_map_reduce_spark.session import session_cache
 from inf2106_map_reduce_spark.streaming.runtime import (
-    scoped_state_partitions,
+    batch_writer,
+    drain,
     state_partitions_for,
 )
-from inf2106_map_reduce_spark.streaming.windows import _batch_writer
 from inf2106_map_reduce_spark.tables import load_table
 
 #: Deterministic synthetic ingest clock: documents carry no event
@@ -219,21 +219,12 @@ def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5(_norm_text("text")).alias("k"),
         )
     )
-    with scoped_state_partitions(
-        spark,
-        n=state_partitions_for(
+    drain(
+        out,
+        batch_writer(sink, "append"),
+        state_partitions=state_partitions_for(
             state_keys,
             cache_key=(sf_dir, "documents", "neardup_ingest"),
         ),
-        out=out,
-        output_mode="append",
-    ):
-        q = (
-            out.writeStream.foreachBatch(_batch_writer(sink, "append"))
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    )
     return spark.read.parquet(sink).drop("epoch")

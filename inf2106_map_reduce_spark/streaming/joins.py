@@ -23,14 +23,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from inf2106_map_reduce_spark.streaming.runtime import (
-    scoped_state_partitions,
+    batch_writer,
+    drain,
     state_partitions_for,
 )
-from inf2106_map_reduce_spark.tables import (
-    convert_event_ts,
-    load_table,
-    raw_events_schema,
-)
+from inf2106_map_reduce_spark.tables import event_stream, load_table
 
 ATTRIBUTION_HORIZON = "1 hour"
 
@@ -139,15 +136,10 @@ def streaming_click_attribution_full(
 def _attribution_drain(
     spark: SparkSession, sf_dir: str, how: str
 ) -> DataFrame:
-    raw_schema = raw_events_schema(spark, sf_dir)
-
     def _stream() -> DataFrame:
-        return convert_event_ts(
-            spark.readStream.schema(raw_schema)
-            .format("parquet")
-            .option("pathGlobFilter", "events.parquet")
-            .load(sf_dir)
-        ).withWatermark("ts", ATTRIBUTION_HORIZON)
+        return event_stream(spark, sf_dir).withWatermark(
+            "ts", ATTRIBUTION_HORIZON
+        )
 
     clicks = _stream().filter(F.col("event_type") == "click")
     purchases = _stream().filter(F.col("event_type") == "purchase")
@@ -156,33 +148,16 @@ def _attribution_drain(
     sink = tempfile.mkdtemp(prefix="stream_sink_")
     # A stream-stream join keeps FOUR state stores per partition — the
     # per-partition maintenance cost is the whole game here (7.6 s at
-    # 32 partitions vs 2.4 s at 8 on identical sf0.1 input); see
-    # runtime.scoped_state_partitions for the sizing rule.
-    with scoped_state_partitions(
-        spark,
+    # 32 partitions vs 2.4 s at 8 on identical sf0.1 input); see the
+    # runtime module docstring for the sizing rule.
+    drain(
+        out,
+        batch_writer(sink, "append"),
         # state = both join buffers keyed by user_id → user cardinality
         # (from the batch view) sizes the partitions
-        n=state_partitions_for(
+        state_partitions=state_partitions_for(
             load_table(spark, sf_dir, "events").select("user_id"),
             cache_key=(sf_dir, "events", "user_id"),
         ),
-        out=out,
-        output_mode="append",
-    ):
-        # HARNESS-ONLY: repartition(1) packs the tiny AvailableNow batch
-        # into one file so the gate reads a single-part sink. A
-        # production sink writes unrepartitioned (one file per state
-        # partition) and readers glob the directory.
-        q = (
-            out.writeStream.foreachBatch(
-                lambda df, _epoch: df.repartition(1)
-                .write.mode("append")
-                .parquet(sink)
-            )
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(sink)
+    )
+    return spark.read.parquet(sink).drop("epoch")

@@ -1,4 +1,6 @@
-"""Streaming runtime knobs shared by every stream runner.
+"""Streaming runtime shared by every stream runner: the one
+AvailableNow drain (:func:`drain`), its parquet sink writer
+(:func:`batch_writer`), and the state partition sizing rule.
 
 A Structured Streaming query's STATE partition count is pinned into
 the checkpoint by ``spark.sql.shuffle.partitions`` at first start —
@@ -23,21 +25,25 @@ from __future__ import annotations
 
 import math
 import os
-from contextlib import contextmanager
+import re
+import shutil
+import tempfile
+from contextlib import contextmanager, nullcontext
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from inf2106_map_reduce_spark.session import session_cache
 
-#: Fallback when no key sample is supplied (and the env override for
-#: deployments that know their cardinality): 4 is sized to the BENCH
+#: Fallback when no key sample is supplied: 4 is sized to the BENCH
 #: scale factor (sf0.1, ~10k keys in flight) — NOT a universal
 #: constant. Preferred path: :func:`state_partitions_for` derives the
 #: count from the DATA (approx-distinct of the state keys on a batch
 #: view of the source), so sizing tracks the corpus instead of a
-#: hand-pinned number.
-STATE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "4"))
+#: hand-pinned number; ``SPARK_GRAFT_STATE_PARTITIONS`` overrides both
+#: there.
+STATE_PARTITIONS = 4
 
 #: Sizing rule: ~100k keys in flight per state partition (each
 #: partition carries fixed per-micro-batch maintenance cost — delta
@@ -117,28 +123,24 @@ def state_partitions_for(
     return max(STATE_PARTITIONS_FLOOR, min(STATE_PARTITIONS_CAP, n))
 
 
-#: AvailableNow queries drain one data batch and stop; the trailing
-#: NO-DATA micro-batch Spark schedules to advance the watermark exists
-#: to EVICT state — state a terminating query discards anyway. Every
-#: query in this package emits its results in the data batch itself
-#: (complete-mode window aggs re-emit everything; the inner
-#: stream-stream join, dropDuplicatesWithinWatermark and
-#: NoTimeout/update applyInPandasWithState all emit on arrival), so
-#: the extra batch is a pure fixed cost here (~0.1-0.5 s/query
-#: measured). CONTINUOUS deployments must leave it on — watermark
-#: advancement during idle periods is what bounds their state — hence
-#: the env override rather than a hard-off.
-#:
-#: The one shape for which skipping the no-data batch LOSES results —
-#: an append-mode WATERMARKED AGGREGATION, whose final windows emit
-#: only when the watermark passes them, i.e. in the trailing batch —
-#: is guarded STRUCTURALLY, not by this comment staying true:
-#: :func:`needs_no_data_batch` inspects the analyzed streaming plan at
-#: drain time and forces the batch back ON for that shape
-#: (tests/test_streaming.py drains exactly such a query to prove it).
-NO_DATA_BATCHES = os.environ.get("SPARK_GRAFT_NO_DATA_BATCHES", "false")
-
-
+# AvailableNow queries drain one data batch and stop; the trailing
+# NO-DATA micro-batch Spark schedules to advance the watermark exists
+# to EVICT state — state a terminating query discards anyway. Every
+# query in this package emits its results in the data batch itself
+# (complete-mode window aggs re-emit everything; the inner
+# stream-stream join, dropDuplicatesWithinWatermark and
+# NoTimeout/update applyInPandasWithState all emit on arrival), so
+# the extra batch is a pure fixed cost here (~0.1-0.5 s/query
+# measured), and a stateful :func:`drain` turns it off. CONTINUOUS
+# deployments must leave it on — watermark advancement during idle
+# periods is what bounds their state — but every query in this
+# package is an AvailableNow drain.
+#
+# The shapes for which skipping the no-data batch LOSES results are
+# guarded STRUCTURALLY, not by this comment staying true:
+# :func:`needs_no_data_batch` inspects the analyzed streaming plan at
+# drain time and forces the batch back ON for them
+# (tests/test_streaming.py drains such a query to prove it).
 def needs_no_data_batch(out, output_mode: str) -> bool:
     """True when skipping the trailing no-data micro-batch would DROP
     output. Three shapes qualify (all inspected from the ANALYZED
@@ -160,39 +162,109 @@ def needs_no_data_batch(out, output_mode: str) -> bool:
         return False
     if "Aggregate" in plan or "EventTimeTimeout" in plan:
         return True
-    import re as _re
-
-    return _re.search(r"Join (LeftOuter|RightOuter|FullOuter)", plan) is not None
+    return re.search(r"Join (LeftOuter|RightOuter|FullOuter)", plan) is not None
 
 
 @contextmanager
-def scoped_state_partitions(
-    spark: SparkSession,
-    n: int | None = None,
-    out=None,
-    output_mode: str | None = None,
-):
-    """Temporarily set the streaming-run confs (state partition count,
-    no-data micro-batch policy) while a streaming query is started and
-    drained (AvailableNow), restoring the batch defaults afterwards.
-    Safe because each harness run uses a fresh checkpoint; the confs
-    are read at query start.
-
-    Pass the streaming DataFrame (``out``) and its ``output_mode`` so
-    the no-data-batch policy can be derived from the plan: append-mode
-    watermarked aggregations get the trailing batch forced ON (their
-    final windows emit only when the watermark advances past them);
-    every other shape follows :data:`NO_DATA_BATCHES`. The guard only
-    ever forces the batch ON — the env override can enable it
-    globally, never disable it for a shape that needs it."""
-    _NO_DATA_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
+def _scoped_state_partitions(out: DataFrame, n: int, output_mode: str):
+    """Set the streaming-run confs (state partition count ``n``,
+    no-data micro-batch policy) while a stateful query is started and
+    drained, restoring the session's values afterwards. Safe because
+    each drain uses a fresh checkpoint; the confs are read at query
+    start. The trailing no-data batch runs only where
+    :func:`needs_no_data_batch` finds a shape that needs it."""
+    spark = out.sparkSession
+    no_data_key = "spark.sql.streaming.noDataMicroBatches.enabled"
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    old_nd = spark.conf.get(_NO_DATA_KEY)
-    nd = "true" if needs_no_data_batch(out, output_mode) else NO_DATA_BATCHES
-    spark.conf.set("spark.sql.shuffle.partitions", str(n or STATE_PARTITIONS))
-    spark.conf.set(_NO_DATA_KEY, nd)
+    old_nd = spark.conf.get(no_data_key)
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set(
+        no_data_key, str(needs_no_data_batch(out, output_mode)).lower()
+    )
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
-        spark.conf.set(_NO_DATA_KEY, old_nd)
+        spark.conf.set(no_data_key, old_nd)
+
+
+def batch_writer(sink: str, output_mode: str):
+    """foreachBatch parquet sink function, IDEMPOTENT under micro-batch
+    retry (foreachBatch is at-least-once): complete mode overwrites the
+    sink root (each batch re-emits the whole result table, so a retry
+    replaces it wholesale); append and update modes route each epoch's
+    rows into their own ``epoch=<id>`` partition directory and
+    OVERWRITE it, so a retried batch replaces its own prior output
+    instead of duplicating rows. Exactly-once by idempotence — the
+    standard foreachBatch dedup recipe for non-transactional sinks.
+    Read the sink back with ``spark.read.parquet(sink).drop("epoch")``
+    (the drop is a no-op for complete mode).
+
+    HARNESS-ONLY: ``repartition(1)`` packs each small AvailableNow
+    batch into one file (unlike coalesce(1) the shuffle boundary keeps
+    the upstream plan parallel). A production sink drops it and lets
+    the writers partition."""
+    if output_mode == "complete":
+
+        def write_batch(df, _epoch):
+            df.repartition(1).write.mode("overwrite").parquet(sink)
+
+    else:
+
+        def write_batch(df, epoch):
+            df.repartition(1).write.mode("overwrite").parquet(
+                f"{sink}/epoch={epoch}"
+            )
+
+    return write_batch
+
+
+def drain(
+    out: DataFrame,
+    write_batch,
+    output_mode: str = "append",
+    state_partitions: int | None = None,
+) -> StreamingQuery:
+    """Run the streaming DataFrame ``out`` to completion — the one
+    place a stream's lifecycle lives: create a FRESH checkpoint, start
+    a ``foreachBatch(write_batch)`` query under Trigger.AvailableNow,
+    wait for it, stop it in a ``finally`` and remove the checkpoint.
+    A failing batch surfaces as the ``StreamingQueryException``
+    ``awaitTermination`` raises, with no query left active and no
+    checkpoint left behind. Returns the terminated query (its
+    ``recentProgress`` stays readable).
+
+    Every call gets a new checkpoint, so epochs start at 0: the
+    versioned upsert drains read table version ``epoch - 1`` and rely
+    on it.
+
+    ``state_partitions`` is for STATEFUL queries: the drain then runs
+    with ``spark.sql.shuffle.partitions`` set to it (the count freezes
+    into the state store at first start; see the module docstring) and
+    with the trailing no-data batch only where
+    :func:`needs_no_data_batch` says the plan needs it. ``None`` leaves
+    the session confs as they are — the stateless drains' batch bodies
+    shuffle at the session's partition count."""
+    ckpt = tempfile.mkdtemp(prefix="ckpt_")
+    scope = (
+        nullcontext()
+        if state_partitions is None
+        else _scoped_state_partitions(out, state_partitions, output_mode)
+    )
+    try:
+        with scope:
+            q = (
+                out.writeStream.foreachBatch(write_batch)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            try:
+                q.awaitTermination()
+            finally:
+                q.stop()
+    finally:
+        # a failed removal must not mask the query's own exception
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return q

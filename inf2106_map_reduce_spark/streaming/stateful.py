@@ -11,7 +11,7 @@ swapping APIs when protobuf is available is a mechanical change.
 
 The reference is strictly batch (SURVEY.md §2.5); these are the
 superset streaming surface. Both run as REAL streams
-(``readStream`` → Trigger.AvailableNow → memory sink) so the registry
+(``readStream`` → ``runtime.drain`` → parquet sink) so the registry
 exercises genuine streaming execution, with deterministic results the
 DuckDB oracle can check:
 
@@ -45,26 +45,13 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from inf2106_map_reduce_spark.session import WORK_ROOT
 
 from inf2106_map_reduce_spark.streaming.runtime import (
-    scoped_state_partitions,
+    batch_writer,
+    drain,
     state_partitions_for,
 )
-from inf2106_map_reduce_spark.tables import (
-    convert_event_ts,
-    load_table,
-    raw_events_schema,
-)
+from inf2106_map_reduce_spark.tables import event_stream, load_table
 
 WATERMARK = "1 hour"
-
-
-def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw_schema = raw_events_schema(spark, sf_dir)
-    return convert_event_ts(
-        spark.readStream.schema(raw_schema)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
 
 
 def _run_to_table(
@@ -74,46 +61,34 @@ def _run_to_table(
     state_keys=None,
     state_key_id: tuple | None = None,
 ) -> DataFrame:
-    """Run to completion through a foreachBatch parquet sink and read
-    the result back — no driver-side materialization (the memory sink
-    collects to the driver; fine for tests, wrong as the shipped path).
-    Append/update batches accumulate via mode=append; AvailableNow over
-    the single events file yields one batch, so update mode emits each
-    key once. ``state_keys`` (a batch projection of the state key
+    """Run to completion through the epoch-partitioned foreachBatch
+    parquet sink (runtime.batch_writer) and read the result back — no
+    driver-side materialization (the memory sink collects to the
+    driver; fine for tests, wrong as the shipped path). AvailableNow
+    over the single events file yields one batch, so update mode emits
+    each key once. ``state_keys`` (a batch projection of the state key
     columns) sizes the state partition count from the data
     (runtime.state_partitions_for)."""
     sink = tempfile.mkdtemp(prefix="stream_sink_")
-    with scoped_state_partitions(
-        spark,
+    drain(
+        out_stream,
+        batch_writer(sink, mode),
+        output_mode=mode,
         # the Python-state rule: this module's operators are the
         # applyInPandasWithState lanes, where every group pays a
         # per-group Python round-trip — see
         # runtime.PY_STATE_KEYS_PER_SQ for the model and measurements
-        n=state_partitions_for(
+        state_partitions=state_partitions_for(
             state_keys, cache_key=state_key_id, py_state=True
         ),
-        out=out_stream,
-        output_mode=mode,
-    ):
-        q = (
-            out_stream.writeStream.foreachBatch(
-                lambda df, _epoch: df.repartition(1)
-                .write.mode("append")
-                .parquet(sink)
-            )
-            .outputMode(mode)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(sink)
+    )
+    return spark.read.parquet(sink).drop("epoch")
 
 
 def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry query: streaming dedup on (user_id, event_type) with
     watermark-bounded state; returns the distinct key set."""
-    stream = _event_stream(spark, sf_dir).withWatermark("ts", WATERMARK)
+    stream = event_stream(spark, sf_dir).withWatermark("ts", WATERMARK)
     deduped = stream.dropDuplicatesWithinWatermark(["user_id", "event_type"])
     return _run_to_table(
         deduped.select("user_id", "event_type"),
@@ -149,7 +124,7 @@ def _user_stats_fn(
 def streaming_user_stats_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry query: custom stateful per-user aggregator via
     applyInPandasWithState (Arrow-batched, O(1) state per key)."""
-    stream = _event_stream(spark, sf_dir).select("user_id", "value")
+    stream = event_stream(spark, sf_dir).select("user_id", "value")
     out = stream.groupBy("user_id").applyInPandasWithState(
         _user_stats_fn,
         outputStructType="user_id bigint, n_events bigint, total_value double",

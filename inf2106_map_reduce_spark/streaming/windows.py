@@ -21,14 +21,11 @@ from inf2106_map_reduce_spark.session import session_cache
 from inf2106_map_reduce_spark.streaming import stateful as stream_stateful
 
 from inf2106_map_reduce_spark.streaming.runtime import (
-    scoped_state_partitions,
+    batch_writer,
+    drain,
     state_partitions_for,
 )
-from inf2106_map_reduce_spark.tables import (
-    convert_event_ts,
-    load_table,
-    raw_events_schema,
-)
+from inf2106_map_reduce_spark.tables import event_stream, load_table
 
 WATERMARK = "1 hour"
 
@@ -107,30 +104,6 @@ def multires_rollup(events: DataFrame) -> DataFrame:
     )
 
 
-def _batch_writer(sink: str, output_mode: str):
-    """foreachBatch sink function, IDEMPOTENT under micro-batch retry
-    (foreachBatch is at-least-once): complete mode overwrites the sink
-    root (each batch re-emits the whole result table, so a retry
-    replaces it wholesale); append mode routes each epoch's finalized
-    rows into their own ``epoch=<id>`` partition directory and
-    OVERWRITES it, so a retried batch replaces its own prior output
-    instead of duplicating rows. Exactly-once by idempotence — the
-    standard foreachBatch dedup recipe for non-transactional sinks."""
-    if output_mode == "complete":
-
-        def write_batch(df, _epoch):
-            df.repartition(1).write.mode("overwrite").parquet(sink)
-
-    else:
-
-        def write_batch(df, epoch):
-            df.repartition(1).write.mode("overwrite").parquet(
-                f"{sink}/epoch={epoch}"
-            )
-
-    return write_batch
-
-
 def _run_available_now(
     spark: SparkSession,
     sf_dir: str,
@@ -141,55 +114,29 @@ def _run_available_now(
     output_mode: str = "complete",
 ) -> DataFrame:
     """Execute a windowed transform as a REAL stream over the parquet
-    events table (Trigger.AvailableNow → foreachBatch parquet sink)
-    and return the result read back from the sink. No driver-side
-    materialization: each micro-batch's result is written distributed
-    to parquet — complete mode overwrites (the whole table is re-emitted
-    per batch); append mode writes each batch's newly-FINALIZED rows
-    into its own ``epoch=<id>`` partition directory with per-partition
-    overwrite, so the sink union across epochs is the query result AND
-    a retried micro-batch (foreachBatch is at-least-once) replaces its
-    own partition instead of duplicating rows — exactly-once by
-    idempotence. The same code ships against kafka/file sources in
-    production."""
-    raw_schema = raw_events_schema(spark, sf_dir)
-    # the streaming file source wants a directory; glob-filter to the
-    # events file within the sf dir
-    stream = convert_event_ts(
-        spark.readStream.schema(raw_schema)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    events table (one :func:`runtime.drain` through the
+    :func:`runtime.batch_writer` parquet sink) and return the result
+    read back from the sink. No driver-side materialization: each
+    micro-batch's result is written distributed to parquet — complete
+    mode overwrites (the whole table is re-emitted per batch); append
+    mode writes each batch's newly-FINALIZED rows into its own
+    ``epoch=<id>`` partition, so the sink union across epochs is the
+    query result and a retried micro-batch replaces its own partition.
+    The same code ships against kafka/file sources in production."""
+    stream = event_stream(spark, sf_dir)
     if with_watermark:
         stream = stream.withWatermark("ts", WATERMARK)
     out = transform(stream)
     sink = tempfile.mkdtemp(prefix="stream_sink_")
-    _write_batch = _batch_writer(sink, output_mode)
-    with scoped_state_partitions(
-        spark,
-        n=state_partitions_for(state_keys, cache_key=state_key_id),
-        out=out,
+    drain(
+        out,
+        batch_writer(sink, output_mode),
         output_mode=output_mode,
-    ):
-        q = (
-            # repartition(1): the result is a windowed aggregate
-            # (thousands of rows) — one output file avoids tiny-file
-            # task+commit costs, and unlike coalesce(1) the shuffle
-            # boundary keeps the upstream aggregation parallel. At
-            # scale, drop it and let the sink partition.
-            out.writeStream.foreachBatch(_write_batch)
-            .outputMode(output_mode)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    read_back = spark.read.parquet(sink)
-    if output_mode != "complete":
-        # the epoch partition column is sink plumbing, not query output
-        read_back = read_back.drop("epoch")
-    return read_back
+        state_partitions=state_partitions_for(
+            state_keys, cache_key=state_key_id
+        ),
+    )
+    return spark.read.parquet(sink).drop("epoch")
 
 
 def streaming_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -434,6 +381,22 @@ def streaming_window_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _span_stream(
+    spark: SparkSession, src: str, schema: str = "user_id bigint, ts timestamp"
+) -> DataFrame:
+    """Rate-limited stream over a staged span directory: one span file
+    per micro-batch, oldest first (the order
+    :func:`stream_stateful.stage_session_spans` pins), ``_STAGED`` and
+    other non-parquet markers skipped."""
+    return (
+        spark.readStream.schema(schema)
+        .format("parquet")
+        .option("maxFilesPerTrigger", 1)
+        .option("pathGlobFilter", "*.parquet")
+        .load(src)
+    )
+
+
 def streaming_backfill_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry query: RATE-LIMITED BACKFILL of the events snapshot —
     the historical-reprocessing shape: replay an accumulated archive
@@ -487,15 +450,9 @@ def backfill_lag_over(
     so tests can drive it over synthetic spans (the boundary pin in
     tests/test_round11_operators.py stages events whose window ends
     land EXACTLY on the per-batch watermarks)."""
-    stream = (
-        spark.readStream.schema("user_id bigint, ts timestamp")
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .load(src)
-    )
     out = (
-        stream.withWatermark("ts", WATERMARK)
+        _span_stream(spark, src)
+        .withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -505,21 +462,13 @@ def backfill_lag_over(
         )
     )
     sink = tempfile.mkdtemp(prefix="backfill_sink_")
-    _write_batch = _batch_writer(sink, "append")
-    with scoped_state_partitions(
-        spark,
-        n=state_partitions_for(state_keys, cache_key=state_key_id),
-        out=out,
-        output_mode="append",
-    ):
-        q = (
-            out.writeStream.foreachBatch(_write_batch)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = drain(
+        out,
+        batch_writer(sink, "append"),
+        state_partitions=state_partitions_for(
+            state_keys, cache_key=state_key_id
+        ),
+    )
     # O(batches) progress rows: the watermark each batch evicted with
     wm_rows = [
         (
@@ -660,13 +609,6 @@ def _upsert_drain_from(
     vacuum/retention entries can run maintenance over fresh version
     histories of their own."""
     table_root = tempfile.mkdtemp(prefix="upsert_table_")
-    stream = (
-        spark.readStream.schema("user_id bigint, ts timestamp")
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .load(src)
-    )
     empty = spark.createDataFrame(
         [], "user_id bigint, n_events bigint, first_ts timestamp, last_ts timestamp"
     )
@@ -686,14 +628,7 @@ def _upsert_drain_from(
             "overwrite"
         ).parquet(f"{table_root}/v={epoch}")
 
-    q = (
-        stream.writeStream.foreachBatch(_merge_batch)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(_span_stream(spark, src), _merge_batch)
     last = max(
         int(name.split("=", 1)[1])
         for name in os.listdir(table_root)
@@ -902,13 +837,6 @@ def _grouped_upsert_drain_from(
 
     Returns ``(table_root, last_epoch)``."""
     table_root = tempfile.mkdtemp(prefix="upsert_grouped_")
-    stream = (
-        spark.readStream.schema("user_id bigint, ts timestamp")
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .load(src)
-    )
     empty = spark.createDataFrame(
         [],
         "g int, user_id bigint, n_events bigint, "
@@ -999,14 +927,7 @@ def _grouped_upsert_drain_from(
             "g"
         ).mode("overwrite").parquet(f"{table_root}/v={epoch}")
 
-    q = (
-        stream.writeStream.foreachBatch(_merge_batch)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(_span_stream(spark, src), _merge_batch)
     last = max(
         int(name.split("=", 1)[1])
         for name in os.listdir(table_root)
@@ -1772,25 +1693,11 @@ def _run_dlq_split(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     src = _dlq_source_dir(spark, sf_dir)
     good_root = tempfile.mkdtemp(prefix="dlq_good_")
     dlq_root = tempfile.mkdtemp(prefix="dlq_bad_")
-    stream = (
-        spark.readStream.schema(_DLQ_EVENT_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .load(src)
-    )
 
     def _route_batch(batch_df, epoch):
         route_batch(batch_df, epoch, good_root, dlq_root, dlq_reason())
 
-    q = (
-        stream.writeStream.foreachBatch(_route_batch)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(_span_stream(spark, src, _DLQ_EVENT_SCHEMA), _route_batch)
     return good_root, dlq_root
 
 
@@ -1906,14 +1813,7 @@ def streaming_dlq_redrive(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _reroute_batch(batch_df, epoch):
         route_batch(batch_df, epoch, re_good, still, redrive_reason())
 
-    q = (
-        stream.writeStream.foreachBatch(_reroute_batch)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _reroute_batch)
     return _dlq_summary(
         spark, re_good, "redriven_good", F.lit("ok")
     ).unionByName(

@@ -89,19 +89,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def raw_events_schema(spark: SparkSession, sf_dir: str):
-    """Schema of the raw events parquet — what ``readStream.schema(...)``
-    needs. Depending on the generator vintage, ts arrives as bigint
-    nanos (under ``nanosAsLong``) or timestamp_ntz micros; streaming
-    readers pipe through :func:`convert_event_ts` to normalize either.
-    Sets the legacy-nanos conf first so it works on a vanilla session."""
+def event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as a file-source STREAM: ``readStream`` over
+    ``sf_dir`` glob-filtered to ``events.parquet`` (the streaming file
+    source wants a directory). Depending on the generator vintage, ts
+    arrives as bigint nanos (under ``nanosAsLong``) or timestamp_ntz
+    micros; :func:`convert_event_ts` normalizes either. Sets the
+    legacy-nanos conf first so it works on a vanilla session."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, "events.parquet")
     schema = _SCHEMA_CACHE.get(path)
     if schema is None:
         schema = spark.read.parquet(path).schema
         _SCHEMA_CACHE[path] = schema
-    return schema
+    return convert_event_ts(
+        spark.readStream.schema(schema)
+        .format("parquet")
+        .option("pathGlobFilter", "events.parquet")
+        .load(sf_dir)
+    )
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

@@ -99,21 +99,13 @@ def test_full_outer_plan_shape_and_no_data_batch(spark, sf_oracle):
     the exact shape runtime.needs_no_data_batch forces the trailing
     micro-batch for (dropping it would lose every null-extended
     row)."""
-    from inf2106_map_reduce_spark.tables import (
-        convert_event_ts,
-        raw_events_schema,
-    )
+    from inf2106_map_reduce_spark.tables import event_stream
     from pyspark.sql import functions as F
 
-    schema = raw_events_schema(spark, sf_oracle)
-
     def _stream():
-        return convert_event_ts(
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .option("pathGlobFilter", "events.parquet")
-            .load(sf_oracle)
-        ).withWatermark("ts", stream_joins.ATTRIBUTION_HORIZON)
+        return event_stream(spark, sf_oracle).withWatermark(
+            "ts", stream_joins.ATTRIBUTION_HORIZON
+        )
 
     out = stream_joins.click_purchase_pairs(
         _stream().filter(F.col("event_type") == "click"),

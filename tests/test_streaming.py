@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from inf2106_map_reduce_spark.streaming import windows as W
@@ -117,30 +118,26 @@ def test_stream_stream_join_matches_batch_join(spark, sf_oracle):
 
 
 def test_append_watermarked_agg_gets_no_data_batch(spark, sf_oracle):
-    """Structural guard for the NO_DATA_BATCHES default: an APPEND-mode
+    """Structural guard for the no-data-batch policy: an APPEND-mode
     WATERMARKED AGGREGATION only emits a window once the watermark
     passes it — under an AvailableNow drain that happens in the
-    trailing no-data micro-batch, which the harness default skips.
-    needs_no_data_batch must detect the shape from the analyzed plan
-    and force the batch back on; without it this query would return
-    zero finalized windows and silently lose results."""
+    trailing no-data micro-batch, which a stateful drain skips by
+    default. needs_no_data_batch must detect the shape from the
+    analyzed plan and force the batch back on; without it this query
+    would return zero finalized windows and silently lose results."""
     import tempfile
 
     from pyspark.sql import functions as F
 
     from inf2106_map_reduce_spark.streaming.runtime import (
+        STATE_PARTITIONS,
+        batch_writer,
+        drain,
         needs_no_data_batch,
-        scoped_state_partitions,
     )
-    from inf2106_map_reduce_spark.tables import convert_event_ts, raw_events_schema
+    from inf2106_map_reduce_spark.tables import event_stream
 
-    raw_schema = raw_events_schema(spark, sf_oracle)
-    stream = convert_event_ts(
-        spark.readStream.schema(raw_schema)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_oracle)
-    ).withWatermark("ts", "1 hour")
+    stream = event_stream(spark, sf_oracle).withWatermark("ts", "1 hour")
     out = stream.groupBy(F.window("ts", "1 hour")).agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -152,20 +149,10 @@ def test_append_watermarked_agg_gets_no_data_batch(spark, sf_oracle):
     assert needs_no_data_batch(None, "append") is False
 
     sink = tempfile.mkdtemp(prefix="stream_sink_")
-    with scoped_state_partitions(spark, out=out, output_mode="append"):
-        q = (
-            out.writeStream.foreachBatch(
-                lambda df, _epoch: df.repartition(1)
-                .write.mode("append")
-                .parquet(sink)
-            )
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    emitted = spark.read.parquet(sink).count()
+    drain(
+        out, batch_writer(sink, "append"), state_partitions=STATE_PARTITIONS
+    )
+    emitted = spark.read.parquet(sink).drop("epoch").count()
     # every window strictly below max(ts) - 1h is finalized; the events
     # table spans days, so many windows must appear
     assert emitted > 0, "append-mode watermarked agg lost its final windows"
@@ -203,20 +190,10 @@ def test_no_data_batch_forced_for_outer_stream_stream_join(spark, sf_oracle):
 
     from inf2106_map_reduce_spark.streaming.joins import click_purchase_pairs
     from inf2106_map_reduce_spark.streaming.runtime import needs_no_data_batch
-    from inf2106_map_reduce_spark.tables import (
-        convert_event_ts,
-        raw_events_schema,
-    )
-
-    raw_schema = raw_events_schema(spark, sf_oracle)
+    from inf2106_map_reduce_spark.tables import event_stream
 
     def stream():
-        return convert_event_ts(
-            spark.readStream.schema(raw_schema)
-            .format("parquet")
-            .option("pathGlobFilter", "events.parquet")
-            .load(sf_oracle)
-        ).withWatermark("ts", "1 hour")
+        return event_stream(spark, sf_oracle).withWatermark("ts", "1 hour")
 
     clicks = stream().filter(F.col("event_type") == "click")
     purchases = stream().filter(F.col("event_type") == "purchase")
@@ -250,12 +227,47 @@ def test_streaming_append_emits_only_finalized_windows(spark, sf_smoke):
     assert len(keys) == len(set(keys))
 
 
-def test_append_epoch_writer_is_retry_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once: replaying an epoch through the
-    append-mode writer must REPLACE that epoch's rows, not duplicate
-    them — and other epochs' output must survive."""
+def test_drain_stops_query_and_removes_checkpoint(spark, tmp_path, monkeypatch):
+    """drain owns the whole stream lifecycle: a clean drain fills the
+    sink, and a drain whose batch function raises surfaces the
+    StreamingQueryException — in both cases no query stays active and
+    no checkpoint dir is left behind."""
+    from pyspark.errors import StreamingQueryException
+
+    from inf2106_map_reduce_spark.streaming.runtime import batch_writer, drain
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    src = str(tmp_path / "src")
+    schema = "k int, v string"
+    spark.createDataFrame([(1, "a"), (2, "b")], schema).write.parquet(src)
+
+    def stream():
+        return spark.readStream.schema(schema).parquet(src)
+
     sink = str(tmp_path / "sink")
-    write = W._batch_writer(sink, "append")
+    drain(stream(), batch_writer(sink, "append"))
+    assert spark.read.parquet(sink).drop("epoch").count() == 2
+    assert not list(tmp_path.glob("ckpt_*"))
+
+    def failing_batch(_df, _epoch):
+        raise RuntimeError("batch failed")
+
+    with pytest.raises(StreamingQueryException):
+        drain(stream(), failing_batch)
+    assert spark.streams.active == []
+    assert not list(tmp_path.glob("ckpt_*"))
+
+
+@pytest.mark.parametrize("output_mode", ["append", "update"])
+def test_append_epoch_writer_is_retry_idempotent(spark, tmp_path, output_mode):
+    """foreachBatch is at-least-once: replaying an epoch through the
+    epoch-partitioned writer (append lanes, and the stateful lane's
+    update mode) must REPLACE that epoch's rows, not duplicate them —
+    and other epochs' output must survive."""
+    from inf2106_map_reduce_spark.streaming.runtime import batch_writer
+
+    sink = str(tmp_path / "sink")
+    write = batch_writer(sink, output_mode)
     df1 = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
     df2 = spark.createDataFrame([(3, "c")], "k int, v string")
     write(df1, 0)
@@ -429,27 +441,13 @@ def _write_span_file(spark, src_dir, i, rows):
 
 
 def _drain_session_stream(spark, src_dir):
-    import os
-
     from inf2106_map_reduce_spark.streaming import stateful
-    from inf2106_map_reduce_spark.streaming.runtime import (
-        scoped_state_partitions,
-    )
+    from inf2106_map_reduce_spark.streaming.runtime import batch_writer, drain
 
     out = stateful.session_timeout_stream(src_dir, spark)
     sink = tempfile.mkdtemp(prefix="sess_sink_")
-    with scoped_state_partitions(spark, n=2, out=out, output_mode="append"):
-        q = (
-            out.writeStream.foreachBatch(
-                lambda df, _e: df.write.mode("append").parquet(sink)
-            )
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sess_ck_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(sink)
+    drain(out, batch_writer(sink, "append"), state_partitions=2)
+    return spark.read.parquet(sink).drop("epoch")
 
 
 def test_session_timeout_boundary(spark):
