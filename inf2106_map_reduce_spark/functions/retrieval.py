@@ -248,25 +248,28 @@ def mmr_rerank(
     mapreduce/src/MapServant.java stops at word counting — so this is
     superset API like the rest of this module).
 
-    Spark shape: the greedy loop is UNROLLED into ``k`` tiny
-    DataFrame steps over two bounded, eagerly-checkpointed inputs —
-    the ``n_candidates``-row relevance list and its directed pairwise
-    cosine matrix (``n²`` bounded by the candidate contract, never by
-    corpus size). Each step anti-joins the picked set, takes the max
-    pairwise sim to it per survivor, and picks the arg-max via
-    TakeOrdered(1); the running selection is re-checkpointed per step
-    so the plan stays linear in ``k`` (the PageRank/k-core checkpoint
-    discipline). For a query FLEET, the same unrolled loop holds with
-    every step keyed by query_id (row_number-over-window arg-max
-    instead of limit(1)): k passes over candidate-bounded data,
-    embarrassingly parallel across queries.
+    Spark shape: the greedy state is bounded by ``n_candidates``, never
+    by corpus size, so it runs on the driver over ONE collect. The
+    ``n_candidates``-row relevance list is eagerly checkpointed; one
+    query then returns, per candidate, ``rel`` and the step-1 score
+    ``ROUND(lam*rel, 6)``, and for every ordered pair ``(a, b)`` the
+    rounded cosine ``sim`` and the pair score
+    ``ROUND(lam*rel_a - mu*sim, 6)`` (``n²`` rows, bounded by the
+    candidate contract). A later step's score for ``a`` is
+    ``ROUND(lam*rel_a - mu*mx, 6)`` with ``mx`` the largest ``sim`` to
+    a picked neighbour, which is exactly the pair score at that
+    neighbour, so the driver loop only compares Spark-computed values
+    and never rounds. The picks come back as a JVM literal plan (no
+    Python worker, no rescan). For a query FLEET the same shape holds
+    keyed by query_id: one collect of candidate-bounded pairs per
+    query, embarrassingly parallel across queries.
 
     Determinism: rel and sim are rounded-6 cosines (the
     ``cosine_batch`` fold is bit-identical to the oracle's
     ``list_sum``); each mmr score is ``ROUND(lam*rel - mu*mx, 6)``
-    with the identical literal doubles, so the greedy trajectory —
-    not just the final set — hash-matches the oracle's unrolled CTE
-    chain.
+    with the identical literal doubles, and ties go to the smaller
+    vec_id, so the greedy trajectory — not just the final set —
+    hash-matches the oracle's unrolled CTE chain.
     """
     cand = (
         vector_fns.brute_force_topk(
@@ -276,59 +279,66 @@ def mmr_rerank(
         .select("vec_id", F.col("cos_sim").alias("rel"), "embedding")
         .localCheckpoint(eager=True)
     )
-    a = cand.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("emb_a"))
+    rels = cand.select(
+        F.col("vec_id").alias("id_a"),
+        "rel",
+        F.round(F.lit(lam) * F.col("rel"), 6).alias("mmr1"),
+    )
+    a = cand.select(
+        F.col("vec_id").alias("id_a"), "rel", F.col("embedding").alias("emb_a")
+    )
     b = cand.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("emb_b"))
-    sim = (
+    pairs = (
         a.join(b, F.col("id_a") != F.col("id_b"))
         .select(
             "id_a",
+            "rel",
             "id_b",
             F.round(
                 vector_fns.cosine_batch(F.col("emb_a"), F.col("emb_b")), 6
             ).alias("sim"),
         )
-        .localCheckpoint(eager=True)
-    )
-    rels = cand.select("vec_id", "rel")
-    selected = (
-        rels.orderBy(F.desc("rel"), F.asc("vec_id"))
-        .limit(1)
         .select(
-            F.lit(1).alias("sel_rank"),
-            "vec_id",
-            "rel",
-            F.round(F.lit(lam) * F.col("rel"), 6).alias("mmr"),
+            "id_a",
+            "id_b",
+            "sim",
+            F.round(F.lit(lam) * F.col("rel") - F.lit(mu) * F.col("sim"), 6).alias(
+                "pair"
+            ),
         )
-        .localCheckpoint(eager=True)
     )
-    for t in range(2, k + 1):
-        picked = selected.select(F.col("vec_id").alias("id_b"))
-        mx = (
-            sim.join(F.broadcast(picked), "id_b")
-            .groupBy("id_a")
-            .agg(F.max("sim").alias("mx"))
-        )
-        step = (
-            rels.join(selected.select("vec_id"), "vec_id", "left_anti")
-            .join(mx, F.col("vec_id") == F.col("id_a"))
-            .select(
-                "vec_id",
-                "rel",
-                F.round(
-                    F.lit(lam) * F.col("rel") - F.lit(mu) * F.col("mx"), 6
-                ).alias("mmr"),
-            )
-            .orderBy(F.desc("mmr"), F.asc("vec_id"))
-            .limit(1)
-            .select(F.lit(t).alias("sel_rank"), "vec_id", "rel", "mmr")
-        )
-        selected = selected.union(step).localCheckpoint(eager=True)
-    return selected.select(
-        "sel_rank",
-        "vec_id",
-        F.col("rel").alias("relevance"),
-        F.col("mmr").alias("mmr_score"),
+    # candidate rows carry no id_b, pair rows no rel
+    rows = rels.unionByName(pairs, allowMissingColumns=True).collect()
+    rel: dict = {}
+    pair: dict = {}
+    for r in rows:
+        if r.id_b is None:
+            rel[r.id_a] = (r.rel, r.mmr1)
+        else:
+            pair[r.id_a, r.id_b] = (r.sim, r.pair)
+    picks = []
+    # per survivor: (sim, score) at its most similar picked neighbour
+    nearest: dict = {}
+    while rel and len(picks) < k:
+        if picks:
+            v = min(rel, key=lambda i: (-nearest[i][1], i))
+            score = nearest[v][1]
+        else:
+            v = min(rel, key=lambda i: (-rel[i][0], i))
+            score = rel[v][1]
+        picks.append((len(picks) + 1, v, rel.pop(v)[0], score))
+        for i in rel:
+            if i not in nearest or pair[i, v][0] > nearest[i][0]:
+                nearest[i] = pair[i, v]
+    schema = (
+        "array<struct<sel_rank:int,"
+        f"vec_id:{cand.schema['vec_id'].dataType.simpleString()},"
+        "relevance:double,mmr_score:double>>"
     )
+    literal = F.array(
+        *(F.struct(*(F.lit(x) for x in pick)) for pick in picks)
+    ).cast(schema)
+    return cand.sparkSession.range(1).select(F.inline(literal))
 
 
 def docs_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:

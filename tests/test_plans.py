@@ -456,10 +456,9 @@ def test_training_manifest_broadcasts_all_filters(spark, sf_oracle):
 
 
 def test_mmr_final_plan_is_constant_depth(spark, sf_oracle):
-    """The unrolled greedy loop must not stack lineage: each step's
-    selection is re-checkpointed (the PageRank discipline), so the
-    returned plan is a union over checkpointed k-row steps — no
-    corpus rescan, no cartesian, nothing that grows with k."""
+    """The greedy loop runs on the driver over one collect, so the
+    returned plan is a k-row literal (Range + Generate) — no corpus
+    rescan, no cartesian, nothing that grows with k."""
     from inf2106_map_reduce_spark.functions import retrieval
     from inf2106_map_reduce_spark.tables import load_table
 

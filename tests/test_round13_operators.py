@@ -8,8 +8,6 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
-import tempfile
 
 import pandas as pd
 import pytest
@@ -188,13 +186,13 @@ def test_quantile_bins_rejects_degenerate_parameters(spark, sf_oracle):
             stats.quantile_bins(li, "l_extendedprice", **kwargs)
 
 
-def test_stage_spans_requires_ts_column(spark, sf_oracle):
+def test_stage_spans_requires_ts_column(spark, sf_oracle, tmp_path):
     """A staged projection without ts cannot drive the span
     arithmetic — fail with intent, not an unresolved-column error."""
     ev = load_table(spark, sf_oracle, "events")
     with pytest.raises(ValueError, match="must include 'ts'"):
         stream_stateful.stage_session_spans(
-            ev, tempfile.mkdtemp(prefix="span_nots_"), cols=("user_id",)
+            ev, str(tmp_path), cols=("user_id",)
         )
 
 
@@ -405,7 +403,7 @@ def test_dlq_split_routes_each_row_exactly_once(spark, sf_oracle):
     assert {k: tuple(v) for k, v in got.items()} == want
 
 
-def test_dlq_epoch_overwrite_is_idempotent(spark, sf_oracle):
+def test_dlq_epoch_overwrite_is_idempotent(spark, sf_oracle, tmp_path):
     """A retried micro-batch rewrites its epoch partition instead of
     doubling it: routing the same batch twice through the writer body
     leaves exactly one copy in each sink (the at-least-once contract
@@ -413,32 +411,28 @@ def test_dlq_epoch_overwrite_is_idempotent(spark, sf_oracle):
     src = stream_windows._dlq_source_dir(spark, sf_oracle)
     first = sorted(glob.glob(os.path.join(src, "*.parquet")))[0]
     batch = spark.read.parquet(first)
-    good_root = tempfile.mkdtemp(prefix="dlq_idem_good_")
-    dlq_root = tempfile.mkdtemp(prefix="dlq_idem_bad_")
-    try:
+    good_root = str(tmp_path / "good")
+    dlq_root = str(tmp_path / "dlq")
 
-        def route(bdf, epoch):
-            # the REAL router body (not a re-implementation) — drift
-            # between sink and test is impossible
-            stream_windows.route_batch(
-                bdf, epoch, good_root, dlq_root, stream_windows.dlq_reason()
-            )
+    def route(bdf, epoch):
+        # the REAL router body (not a re-implementation) — drift
+        # between sink and test is impossible
+        stream_windows.route_batch(
+            bdf, epoch, good_root, dlq_root, stream_windows.dlq_reason()
+        )
 
-        route(batch, 0)
-        once = (
-            spark.read.parquet(good_root).count(),
-            spark.read.parquet(dlq_root).count(),
-        )
-        route(batch, 0)  # the retry
-        twice = (
-            spark.read.parquet(good_root).count(),
-            spark.read.parquet(dlq_root).count(),
-        )
-        assert once == twice
-        assert sum(once) == batch.count()
-    finally:
-        shutil.rmtree(good_root, ignore_errors=True)
-        shutil.rmtree(dlq_root, ignore_errors=True)
+    route(batch, 0)
+    once = (
+        spark.read.parquet(good_root).count(),
+        spark.read.parquet(dlq_root).count(),
+    )
+    route(batch, 0)  # the retry
+    twice = (
+        spark.read.parquet(good_root).count(),
+        spark.read.parquet(dlq_root).count(),
+    )
+    assert once == twice
+    assert sum(once) == batch.count()
 
 
 def test_dlq_redrive_conserves_the_quarantine(spark, sf_oracle):
@@ -511,22 +505,19 @@ def test_fold_reliability_marginalizes_to_the_audit(spark, sf_oracle):
     assert marg == {r["bin"]: r["n_rows"] for r in flat}
 
 
-def test_staging_cols_param_preserves_default_contract(spark, sf_oracle):
+def test_staging_cols_param_preserves_default_contract(spark, sf_oracle, tmp_path):
     """The generalized stager still stages the 2-column projection by
     default, and the DLQ staging carries the full row — both under the
     same span/mtime invariant (file names and strictly increasing
     pinned mtimes)."""
-    base = tempfile.mkdtemp(prefix="span_default_")
-    try:
-        ev = load_table(spark, sf_oracle, "events").limit(500)
-        stream_stateful.stage_session_spans(ev, base, n_files=2)
-        files = sorted(glob.glob(os.path.join(base, "*.parquet")))
-        assert len(files) == 2
-        assert os.path.getmtime(files[0]) < os.path.getmtime(files[1])
-        cols = spark.read.parquet(files[0]).columns
-        assert cols == ["user_id", "ts"]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    base = str(tmp_path)
+    ev = load_table(spark, sf_oracle, "events").limit(500)
+    stream_stateful.stage_session_spans(ev, base, n_files=2)
+    files = sorted(glob.glob(os.path.join(base, "*.parquet")))
+    assert len(files) == 2
+    assert os.path.getmtime(files[0]) < os.path.getmtime(files[1])
+    cols = spark.read.parquet(files[0]).columns
+    assert cols == ["user_id", "ts"]
     dlq_src = stream_windows._dlq_source_dir(spark, sf_oracle)
     dlq_files = sorted(glob.glob(os.path.join(dlq_src, "*.parquet")))
     assert len(dlq_files) == stream_windows.DLQ_SPAN_FILES

@@ -6,7 +6,6 @@ empty-sink DLQ summaries."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pandas as pd
 import pytest
@@ -89,11 +88,11 @@ def test_encoding_reliability_rejects_mismatched_grid(spark):
     assert sum(r["n_rows"] for r in out.collect()) == 200
 
 
-def test_dlq_summary_of_empty_sink_is_empty(spark):
+def test_dlq_summary_of_empty_sink_is_empty(spark, tmp_path):
     """A sink tree holding only _SUCCESS markers (e.g. a redrive whose
     corrected rules cleared every quarantined row) summarizes to zero
     rows instead of an 'unable to infer schema' error (ADVICE r11)."""
-    root = tempfile.mkdtemp(prefix="dlq_empty_")
+    root = str(tmp_path)
     os.makedirs(os.path.join(root, "epoch=0"), exist_ok=True)
     open(os.path.join(root, "epoch=0", "_SUCCESS"), "w").close()
     out = stream_windows._dlq_summary(

@@ -117,7 +117,7 @@ def test_stream_stream_join_matches_batch_join(spark, sf_oracle):
     assert b == s and len(b) > 0
 
 
-def test_append_watermarked_agg_gets_no_data_batch(spark, sf_oracle):
+def test_append_watermarked_agg_gets_no_data_batch(spark, sf_oracle, tmp_path):
     """Structural guard for the no-data-batch policy: an APPEND-mode
     WATERMARKED AGGREGATION only emits a window once the watermark
     passes it — under an AvailableNow drain that happens in the
@@ -125,8 +125,6 @@ def test_append_watermarked_agg_gets_no_data_batch(spark, sf_oracle):
     default. needs_no_data_batch must detect the shape from the
     analyzed plan and force the batch back on; without it this query
     would return zero finalized windows and silently lose results."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from inf2106_map_reduce_spark.streaming.runtime import (
@@ -148,7 +146,7 @@ def test_append_watermarked_agg_gets_no_data_batch(spark, sf_oracle):
     assert needs_no_data_batch(out, "complete") is False
     assert needs_no_data_batch(None, "append") is False
 
-    sink = tempfile.mkdtemp(prefix="stream_sink_")
+    sink = str(tmp_path)
     drain(
         out, batch_writer(sink, "append"), state_partitions=STATE_PARTITIONS
     )
@@ -420,7 +418,9 @@ def test_neardup_screen_semantics(spark):
 
 
 def _write_span_file(spark, src_dir, i, rows):
-    """One time-span parquet file with a pinned mtime (batch order)."""
+    """One time-span parquet file with a pinned mtime (batch order),
+    written via a scratch dir next to ``src_dir`` (created on first
+    use, so both live in the caller's ``tmp_path``)."""
     import glob as _glob
     import os
     import shutil
@@ -429,7 +429,8 @@ def _write_span_file(spark, src_dir, i, rows):
 
     pdf = pd.DataFrame(rows, columns=["user_id", "ts"])
     pdf["ts"] = pd.to_datetime(pdf["ts"], format="mixed")
-    tmp = tempfile.mkdtemp(prefix="spanw_")
+    os.makedirs(src_dir, exist_ok=True)
+    tmp = f"{src_dir}.w{i}"
     spark.createDataFrame(pdf).repartition(1).write.mode("overwrite").parquet(
         tmp
     )
@@ -441,16 +442,17 @@ def _write_span_file(spark, src_dir, i, rows):
 
 
 def _drain_session_stream(spark, src_dir):
+    """Drain the sessionizer over ``src_dir`` into a sink next to it."""
     from inf2106_map_reduce_spark.streaming import stateful
     from inf2106_map_reduce_spark.streaming.runtime import batch_writer, drain
 
     out = stateful.session_timeout_stream(src_dir, spark)
-    sink = tempfile.mkdtemp(prefix="sess_sink_")
+    sink = f"{src_dir}.sink"
     drain(out, batch_writer(sink, "append"), state_partitions=2)
     return spark.read.parquet(sink).drop("epoch")
 
 
-def test_session_timeout_boundary(spark):
+def test_session_timeout_boundary(spark, tmp_path):
     """Pins Spark's event-time-timeout boundary, which the registry
     oracle's cutoff comparison must mirror: a timeout fires iff
     timeout_ts_ms < watermark_ms, STRICTLY. Final watermark here is
@@ -459,7 +461,7 @@ def test_session_timeout_boundary(spark):
     only the strictly-below one may evict."""
     import os
 
-    src = tempfile.mkdtemp(prefix="sessb_")
+    src = str(tmp_path / "src")
     d = "2024-01-01 "
     # gap 30 min → timeout = ts + 30 min (ms-floored)
     _write_span_file(
@@ -477,12 +479,12 @@ def test_session_timeout_boundary(spark):
     assert sorted(r.user_id for r in got.collect()) == [2]
 
 
-def test_session_timeout_emits_gap_and_timeout_closures(spark):
+def test_session_timeout_emits_gap_and_timeout_closures(spark, tmp_path):
     """Differential scenario across three micro-batches: gap-detected
     closures emit with exact (start, end, n); pending evictions fire
     in the trailing no-data batch; sessions still open at stream end
     (timeout beyond the final watermark) are never emitted."""
-    src = tempfile.mkdtemp(prefix="sessg_")
+    src = str(tmp_path / "src")
     d = "2024-01-01 "
     _write_span_file(
         spark,
@@ -510,7 +512,7 @@ def test_session_timeout_emits_gap_and_timeout_closures(spark):
     }
 
 
-def test_session_timeout_out_of_order_merge_stays_well_formed(spark):
+def test_session_timeout_out_of_order_merge_stays_well_formed(spark, tmp_path):
     """Cross-batch OUT-OF-ORDER arrival must not corrupt the open
     session: a late-but-within-watermark event (Spark does not filter
     it) that predates the open session's end goes through the
@@ -519,7 +521,7 @@ def test_session_timeout_out_of_order_merge_stays_well_formed(spark):
     assignment that left state with end < start and a timeout armed in
     the past (premature eviction of a malformed row, end regressing
     45 min below start in this scenario)."""
-    src = tempfile.mkdtemp(prefix="sesso_")
+    src = str(tmp_path / "src")
     d = "2024-01-01 "
     # batch 0: u1 opens a session at 11:00; wm after b0 = 10:00
     _write_span_file(spark, src, 0, [(1, d + "11:00:00")])
@@ -545,7 +547,7 @@ def test_session_timeout_out_of_order_merge_stays_well_formed(spark):
     }
 
 
-def test_session_timeout_mixed_late_and_ontime_batch(spark):
+def test_session_timeout_mixed_late_and_ontime_batch(spark, tmp_path):
     """The sweep merge must stay exact when ONE batch carries both a
     late event and an on-time event: with open state (11:00) a batch
     holding {10:15 late, 11:10 on-time} gap-splits batch-locally into
@@ -554,7 +556,7 @@ def test_session_timeout_mixed_late_and_ontime_batch(spark):
     {[10:15], [11:00..11:10]}. A first-session-only patch would emit a
     spurious [10:15..11:00] closure and strand 11:10 in a new
     session."""
-    src = tempfile.mkdtemp(prefix="sessm_")
+    src = str(tmp_path / "src")
     d = "2024-01-01 "
     _write_span_file(spark, src, 0, [(1, d + "11:00:00")])
     # wm after batch 0 = 10:00 — both events below are >= wm
@@ -610,7 +612,7 @@ def _reference_emitted_sessions(events_by_user):
     return out
 
 
-def test_session_timeout_fuzz_matches_reference(spark):
+def test_session_timeout_fuzz_matches_reference(spark, tmp_path):
     """Seeded differential fuzz of the whole sessionizer drain: random
     user/event sets (ms-quantized with occasional sub-ms µs values to
     stress the flooring), split into a RANDOM number of ordered span
@@ -644,7 +646,7 @@ def test_session_timeout_fuzz_matches_reference(spark):
         cuts = sorted(
             rng.sample(range(1, len(flat)), min(n_files - 1, len(flat) - 1))
         )
-        src = tempfile.mkdtemp(prefix=f"sessf{case}_")
+        src = str(tmp_path / f"case{case}")
         for i, (lo, hi) in enumerate(
             zip([0] + cuts, cuts + [len(flat)])
         ):
@@ -682,7 +684,7 @@ def _gap_sessions(times_sorted):
     return sess
 
 
-def test_session_timeout_fuzz_with_safe_disorder(spark):
+def test_session_timeout_fuzz_with_safe_disorder(spark, tmp_path):
     """Disorder fuzz: same generator as the ordered fuzz, but each case
     then moves ONE event to a LATER span file under the conditions that
     provably preserve the emitted set (so the same pure reference
@@ -771,7 +773,7 @@ def test_session_timeout_fuzz_with_safe_disorder(spark):
                 files[j].append((u, t))
                 moved_total += 1
                 break
-        src = tempfile.mkdtemp(prefix=f"sessd{case}_")
+        src = str(tmp_path / f"case{case}")
         for i, rows in enumerate(files):
             _write_span_file_us(spark, src, i, rows)
         got = {
@@ -795,7 +797,7 @@ def test_session_timeout_fuzz_with_safe_disorder(spark):
     assert moved_total >= 2, moved_total
 
 
-def test_event_time_timeout_forces_no_data_batch(spark):
+def test_event_time_timeout_forces_no_data_batch(spark, tmp_path):
     """The session-timeout shape must be structurally detected: an
     append-mode stateful operator with EventTimeTimeout needs the
     trailing no-data batch (pending evictions fire there — without it
@@ -806,7 +808,7 @@ def test_event_time_timeout_forces_no_data_batch(spark):
         needs_no_data_batch,
     )
 
-    src = tempfile.mkdtemp(prefix="sessn_")
+    src = str(tmp_path / "src")
     _write_span_file(spark, src, 0, [(1, "2024-01-01 10:00:00")])
     out = stateful.session_timeout_stream(src, spark)
     assert needs_no_data_batch(out, "append") is True
