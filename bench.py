@@ -167,14 +167,6 @@ HEADLINE = (
 PSEUDO_STAGES = ("dedup_stage_build", "docs_tf_stage_build")
 
 
-def jvm_args(spark) -> list[str]:
-    """The driver JVM's ``-X``/``-XX`` input arguments (heap sizes, JIT
-    tier). The module-access flags Spark adds are left out: they are
-    fixed by the Spark version and would crowd the printed line."""
-    bean = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
-    return [a for a in bean.getInputArguments() if a.startswith("-X")]
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -187,17 +179,13 @@ def main() -> None:
             "overwrite"
         ).save()
 
-    # Host-weather calibration: a fixed CPU task (range-sum, no I/O, no
-    # Python) timed in the same session. It runs no repo query, so its
-    # wall clock moves with the host (steal, stalls, thermal) and with
-    # the driver JVM's flags, not with the queries' code. The flags
-    # matter: session.py runs the driver on C1 only, and this hot loop
-    # takes about 2x as long there as under tiered C2 (SCALING.md "JIT
-    # tier"), so the payload records the JVM's flags next to the
-    # probe. Divide cross-round query times by the calibration ratio
-    # only between runs with the same flags (BASELINE.md r06:
-    # identical code measured 74.5 s vs 139–348 s across weather
-    # windows).
+    # Host-weather calibration: a fixed, code-independent CPU task
+    # (range-sum, no I/O, no Python) timed in the same session. Its
+    # wall clock moves ONLY with the host (steal, stalls, thermal),
+    # never with this repo's code — divide cross-round query times by
+    # the calibration ratio before reading them as regressions
+    # (BASELINE.md r06: identical code measured 74.5 s vs 139–348 s
+    # across weather windows).
     def _median5(task) -> float:
         # median of 5 (not min): intermittent stall windows are part of
         # the weather being measured — min would report only the
@@ -317,7 +305,7 @@ def main() -> None:
         # the total (and the full map) but is not a query
         "n_queries": len(timings) - len(PSEUDO_STAGES),
         # fixed reference task (see _calibrate): host-weather gauge,
-        # independent of the queries' code; the scalar stays the mean
+        # independent of this repo's code; the scalar stays the mean
         # of the START/END probes (unchanged cross-round definition).
         # calibration_probes carries every probe in run order — start,
         # one per PROBE_EVERY timed queries, end — and
@@ -325,8 +313,6 @@ def main() -> None:
         # the per-query gate brackets a query by its OWN segment's
         # weather instead of the whole-run interval.
         "calibration_sec": calibration,
-        # the JIT tier moves the probe above (see _calibrate)
-        "jvm_args": jvm_args(spark),
         "calibration_probes": probes,
         "calibration_probe_positions": probe_positions,
         # scan/shuffle weather axis (see _calibrate_scan) — additive

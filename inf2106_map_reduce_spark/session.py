@@ -65,17 +65,13 @@ _SCALE_DEFAULTS: dict[str, str] = {
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-    # The driver JVM compiles with C1 only. Its work is short, cold and
-    # construction-heavy: it plans and codegens hundreds of small
-    # queries, and C2 spent that time re-optimising them. In one cold
-    # iterative perfbench run on 4 vCPUs the JVM used 149.5 CPU-s, and
-    # 90.5 s of it went to the C1/C2 compiler threads (task threads
-    # 18.3 s, py4j/planning 18.5 s); with C1 only they drop to 15.4 s.
-    # The cost is steady-state hot-loop speed (SCALING.md "JIT tier").
-    # Only the driver option is set, so cluster executors keep tiered
-    # C2; Spark puts defaultJavaOptions ahead of extraJavaOptions, so a
-    # caller's own JVM flags still apply.
-    "spark.driver.defaultJavaOptions": "-XX:TieredStopAtLevel=1",
+    # One C1 and one C2 compiler thread in the driver JVM (HotSpot
+    # gives a 4-vCPU host three). In short, cold, plan-heavy sessions
+    # the C2 threads were the JVM's largest CPU consumer, compiling
+    # generated code that ran a few times; one thread compiles only the
+    # hottest queued methods, so hot loops still reach C2 (SCALING.md
+    # "JIT tier"). An extra_conf entry for the key replaces it.
+    "spark.driver.defaultJavaOptions": "-XX:CICompilerCount=2",
     # Quiet progress bars in test output.
     "spark.ui.showConsoleProgress": "false",
     "spark.ui.enabled": "false",

@@ -48,12 +48,7 @@ def test_all_streaming_queries_are_warmed():
 # BASELINE.md r06: identical code measured 74.5 s vs 139-348 s across
 # host-weather windows, so raw s/q cannot gate anything. bench.py
 # emits calibration_sec (median of 5 fixed range-sum runs — moves with
-# the host and with the driver JVM's JIT tier, not with the queries'
-# code); the gate divides by it. Every anchor calibration below (0.107,
-# 0.127, 0.099) is a tiered-C2 reading. A C1-only driver (session.py,
-# recorded in the payload's jvm_args) reads the probe about 2x slower,
-# which loosens these gates about 2x until the next round-open
-# re-anchors them (BASELINE.md "JIT tier and the calibration anchors").
+# the host, never with this repo's code); the gate divides by it.
 
 #: r07 reference point: calibration 0.107 s on the host where the
 #: 203-entry tree measured 0.752 s/q (within 1.05x of the r01 anchor).
@@ -496,14 +491,6 @@ def test_printed_payload_survives_the_capture_bound():
         "sf": 0.1,
         "n_queries": 999,
         "calibration_sec": 0.999,
-        "jvm_args": [
-            "-XX:TieredStopAtLevel=1",
-            "-Xms4g",
-            "-Xmn512m",
-            "-XX:-UsePerfData",
-            "-XX:+IgnoreUnrecognizedVMOptions",
-            "-Xmx16g",
-        ],
         "calibration_probes": [0.999] * 9,
         "calibration_probe_positions": [999] * 9,
         "calibration_scan_sec": 0.999,

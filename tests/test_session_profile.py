@@ -36,18 +36,19 @@ def test_cluster_profile_overrides_local_defaults_only_where_documented():
     assert conf["spark.sql.adaptive.enabled"] == "true"
     assert conf["spark.sql.session.timeZone"] == "UTC"
     assert conf["spark.sql.execution.arrow.pyspark.enabled"] == "true"
-    # the driver runs C1 only; executors keep tiered C2
-    assert conf["spark.driver.defaultJavaOptions"] == "-XX:TieredStopAtLevel=1"
+    # the driver's compiler-thread cap survives; executors keep the
+    # JVM's own JIT settings
+    assert conf["spark.driver.defaultJavaOptions"] == "-XX:CICompilerCount=2"
     assert not [
         k for k in conf if k.startswith("spark.executor.") and "JavaOptions" in k
     ]
 
 
-def test_live_driver_jvm_runs_c1_only(spark):
+def test_live_driver_jvm_caps_compiler_threads(spark):
     """The shared session's JVM was launched with the driver JIT
     option (the conf dict alone does not prove it reached the JVM)."""
     bean = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
-    assert "-XX:TieredStopAtLevel=1" in list(bean.getInputArguments())
+    assert "-XX:CICompilerCount=2" in list(bean.getInputArguments())
 
 
 def test_get_spark_rejects_unknown_profile():
