@@ -84,7 +84,6 @@ def ngram_novelty(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """First-occurrence n-gram novelty attribution: every distinct
     shingle in the corpus is OWNED by the lowest-id document that
@@ -113,11 +112,8 @@ def ngram_novelty(
     # the shingle table feeds both the ownership aggregate and the
     # join-back; checkpoint it once (the minhash-path idiom at
     # :func:`dedup_candidate_pairs`) so the expensive shingling scan
-    # never replays. checkpoint=False is for PLAN INSPECTION only
-    # (tools/dump_plans needs the unexecuted lineage).
-    sh = shingle_table(df, id_col, text_col)
-    if checkpoint:
-        sh = sh.localCheckpoint(eager=True)
+    # never replays.
+    sh = shingle_table(df, id_col, text_col).localCheckpoint(eager=True)
     owners = sh.groupBy("shingle").agg(F.min(id_col).alias("owner"))
     return (
         sh.join(owners, "shingle")
@@ -143,15 +139,6 @@ def docs_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry query: first-occurrence 3-gram novelty share per
     document — min-doc_id shingle ownership, two linear shuffles."""
     return ngram_novelty(load_table(spark, sf_dir, "documents"))
-
-
-def docs_ngram_novelty_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PLAN-INSPECTION variant (tools/dump_plans): shingle-stage
-    checkpoint disabled so the dumped plan shows the scan lineage;
-    never executed."""
-    return ngram_novelty(
-        load_table(spark, sf_dir, "documents"), checkpoint=False
-    )
 
 
 def minhash_signatures(

@@ -288,8 +288,11 @@ def mmr_rerank(
         F.col("vec_id").alias("id_a"), "rel", F.col("embedding").alias("emb_a")
     )
     b = cand.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("emb_b"))
+    # broadcast the n_candidates-row side: the checkpoint's inherited
+    # size estimate is the embeddings table's, so unhinted the planner
+    # picks a non-broadcast CartesianProduct
     pairs = (
-        a.join(b, F.col("id_a") != F.col("id_b"))
+        a.join(F.broadcast(b), F.col("id_a") != F.col("id_b"))
         .select(
             "id_a",
             "rel",

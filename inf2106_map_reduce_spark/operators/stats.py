@@ -694,7 +694,6 @@ _ISO_INTERNAL_NAMES = frozenset(
 def isotonic_calibration(
     scored: DataFrame,
     n_bins: int = ROC_BINS,
-    checkpoint: bool = True,
     group_cols: tuple[str, ...] = (),
     weight_cols: tuple[str, str] | None = None,
 ) -> DataFrame:
@@ -771,8 +770,6 @@ def isotonic_calibration(
     # stage idiom, e.g. the reused shingle table in functions/dedup)
     # materializes the ≤ n_bins-row frame so the data scan runs
     # exactly once — without it each consumer would replay the scan.
-    # checkpoint=False is for PLAN INSPECTION only (tools/dump_plans
-    # needs the unexecuted lineage to show the scan evidence).
     idx = hist.select(
         *gc,
         "bin",
@@ -781,9 +778,7 @@ def isotonic_calibration(
         F.row_number().over(w_ord).alias("i"),
         F.sum("n").over(w_cum).alias("cn"),
         F.sum("pos").over(w_cum).alias("cp"),
-    )
-    if checkpoint:
-        idx = idx.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     a = idx.select(
         *[F.col(g).alias(f"_ga_{g}") for g in gc],
         F.col("i").alias("h"),
@@ -894,7 +889,6 @@ def target_encoding(
     label: Column,
     n_folds: int = N_ENC_FOLDS,
     m: float = ENC_SMOOTHING,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Out-of-fold smoothed target encoding — the leakage-safe form of
     the most common high-cardinality categorical feature in tabular
@@ -931,14 +925,15 @@ def target_encoding(
     # totals, global totals); an eager localCheckpoint materializes
     # the categories × folds frame once so the data scan runs exactly
     # once — the grid is aggregate-sized (≤ |categories|·n_folds), so
-    # the checkpoint is bounded even at 100 TB. checkpoint=False is
-    # for PLAN INSPECTION only (tools/dump_plans).
-    cell = base.groupBy("category", "fold").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("y").cast("bigint").alias("pos"),
+    # the checkpoint is bounded even at 100 TB.
+    cell = (
+        base.groupBy("category", "fold")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("y").cast("bigint").alias("pos"),
+        )
+        .localCheckpoint(eager=True)
     )
-    if checkpoint:
-        cell = cell.localCheckpoint(eager=True)
     w_cat = Window.partitionBy("category")
     per_cat = cell.select(
         "category",
@@ -982,7 +977,7 @@ def target_encoding(
 def _lineitem_enc_key() -> Column:
     """The lineitem primary key as the fold-hash input — ONE
     definition shared by the encoding fit, the reliability audit's
-    row-side re-derivation, and their plan variants."""
+    row-side re-derivation."""
     return F.concat_ws(
         ":",
         F.col("l_orderkey").cast("string"),
@@ -1020,22 +1015,6 @@ def lineitem_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     complements from one cell-grid pass (session-cached, shared with
     the reliability audit)."""
     return _registry_encoding_grid(spark, sf_dir)
-
-
-def lineitem_target_encoding_plan(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """PLAN-INSPECTION variant (tools/dump_plans): checkpoint disabled
-    so the dumped plan shows the scan lineage; see
-    :func:`lineitem_isotonic_calibration_plan`."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return target_encoding(
-        li,
-        "l_suppkey",
-        _lineitem_enc_key(),
-        F.col("l_returnflag") == "R",
-        checkpoint=False,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1245,18 +1224,6 @@ def lineitem_isotonic_calibration(
     return isotonic_calibration(logreg_score(base, w))
 
 
-def lineitem_isotonic_calibration_plan(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """PLAN-INSPECTION variant (tools/dump_plans): the same query with
-    the histogram-stage checkpoint disabled, so the dumped plan shows
-    the real scan lineage (pushdown, pruning) instead of a bare
-    ExistingRDD. Never executed — the duplicated scan subtrees it
-    shows are exactly what the checkpoint exists to prevent."""
-    base, w = _registry_lineitem_model(spark, sf_dir)
-    assert w is not None
-    return isotonic_calibration(logreg_score(base, w), checkpoint=False)
-
 
 def _registry_scored_with_status(
     spark: SparkSession, sf_dir: str
@@ -1299,17 +1266,6 @@ def lineitem_status_isotonic(
         )
     return isotonic_calibration(scored, group_cols=("seg",))
 
-
-def lineitem_status_isotonic_plan(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """PLAN-INSPECTION variant (tools/dump_plans): histogram-stage
-    checkpoint disabled; see :func:`lineitem_isotonic_calibration_plan`."""
-    scored = _registry_scored_with_status(spark, sf_dir)
-    assert scored is not None
-    return isotonic_calibration(
-        scored, checkpoint=False, group_cols=("seg",)
-    )
 
 
 def lineitem_fold_reliability(
@@ -1730,10 +1686,9 @@ def _joint_bin_hist(binned: DataFrame, gc: list[str]) -> DataFrame:
     carried only partial histograms; now the later stages don't
     re-read and re-bin the fact table either. Every double downstream
     is computed from the SAME integers through the SAME IEEE
-    expression tree, so results are bit-identical (equality between
-    the two paths pinned in tests/test_r15_optimization.py; the
-    checkpoint=False plan-inspection path keeps the per-stage
-    data-scan lineage for PLANS.md)."""
+    expression tree, so results are bit-identical to the per-row
+    histogram (pinned against :func:`_stump_hist` in
+    tests/test_r15_optimization.py)."""
     return (
         binned.groupBy(*gc, *[f"b_{name}" for name, *_ in STUMP_BINS])
         .agg(
@@ -1817,23 +1772,21 @@ def tree_depth2(
     df: DataFrame | None,
     binned: DataFrame | None = None,
     group_cols: tuple[str, ...] = (),
-    checkpoint: bool | None = None,
 ) -> DataFrame:
     """Greedy depth-2 histogram tree: choose the root split (as
     :func:`decision_stump`), route every row to its L/R child with the
     root choice joined in as a broadcast 1-row scalar (the
-    pagerank-scalar idiom — no driver action, the whole tree is one
-    lazy plan), then run the SAME histogram split search per child.
+    pagerank-scalar idiom, over the materialized root frame), then
+    run the SAME histogram split search per child.
     The emitted child-split rows carry the four leaf populations
     (n/pos of each grandchild) — the depth-2 tree's leaf stats.
 
-    Plan (executed path): ONE data scan total — the joint bin
-    histogram (:func:`_joint_bin_hist`) is collapsed once; level 1's
-    48-row histogram and level 2's routed 96-row histogram are exact
+    Plan: ONE data scan total — the joint bin histogram
+    (:func:`_joint_bin_hist`) is collapsed once; level 1's 48-row
+    histogram and level 2's routed 96-row histogram are exact
     weighted regroups of the same checkpointed cells (the L/R routing
     is a pure function of the bin columns). Everything after the scan
-    operates on histogram rows only. The plan-inspection path
-    (``checkpoint=False``) keeps the one-scan-per-level lineage.
+    operates on histogram rows only.
 
     A child with no valid split (single occupied bin on every feature)
     would emit no row — deterministic on both engines; with 16 bins
@@ -1851,8 +1804,8 @@ def tree_depth2(
     elects its own root (the rank window partitions by group), the
     routing join becomes a broadcast equi-join against the
     ≤ |groups|-row root frame, and the per-child split search
-    partitions by (group, node) — still one data scan per level for
-    ALL groups. ``binned`` must carry the group columns."""
+    partitions by (group, node) — still one data scan for ALL
+    groups. ``binned`` must carry the group columns."""
     if (df is None) == (binned is None):
         raise ValueError(
             "tree_depth2 takes exactly one input frame: df (fixed "
@@ -1863,17 +1816,12 @@ def tree_depth2(
     gc = list(group_cols)
     if binned is None:
         binned = _stump_binned(df)
-    # executed path: both levels' histograms derive from the ONE
-    # joint-bin collapse (see _joint_bin_hist) — the level-2 routing
-    # is a pure function of the bin columns, so the child histograms
-    # are exact weighted regroups of the same cells; lazy path keeps
-    # one data scan per level for PLANS.md
-    ck = MATERIALIZE_STAGE_WINNERS if checkpoint is None else checkpoint
-    src = _joint_bin_hist(binned, gc) if ck else binned
-    gains1 = _split_gains(
-        _stump_hist_from_joint(src, gc) if ck else _stump_hist(binned, gc),
-        gc,
-    )
+    # both levels' histograms derive from the ONE joint-bin collapse
+    # (see _joint_bin_hist) — the level-2 routing is a pure function
+    # of the bin columns, so the child histograms are exact weighted
+    # regroups of the same cells
+    src = _joint_bin_hist(binned, gc)
+    gains1 = _split_gains(_stump_hist_from_joint(src, gc), gc)
     w_glob = Window.partitionBy(*gc).orderBy(
         F.col("gain").desc(), "feature", "split_bin"
     )
@@ -1888,12 +1836,11 @@ def tree_depth2(
             F.col("split_bin").alias("root_bin"),
         )
     )
-    # materialize the ≤ |groups|-row root frame before the level-2
-    # scan joins it back (see MATERIALIZE_STAGE_WINNERS — same values,
-    # the level-2 plan compiles against a tiny ExistingRDD instead of
-    # re-nesting the level-1 histogram subtree in its broadcast)
-    if ck:
-        root = root.localCheckpoint(eager=True)
+    # materialize the ≤ |groups|-row root frame before level 2 joins
+    # it back (see gbt_boost — same values, the level-2 plan compiles
+    # against a tiny ExistingRDD instead of re-nesting the level-1
+    # histogram subtree in its broadcast)
+    root = root.localCheckpoint(eager=True)
     is_left = None
     for name, *_ in STUMP_BINS:
         term = (F.col("root_feature") == name) & (
@@ -1911,15 +1858,11 @@ def tree_depth2(
         "root_feature",
         "root_bin",
         *[f"b_{name}" for name, *_ in STUMP_BINS],
-        *(("_jn", "_jpos") if ck else ("y",)),
+        "_jn",
+        "_jpos",
     )
     node_cols = [*gc, "node", "root_feature", "root_bin"]
-    gains2 = _split_gains(
-        _stump_hist_from_joint(leafed, node_cols)
-        if ck
-        else _stump_hist(leafed, node_cols),
-        node_cols,
-    )
+    gains2 = _split_gains(_stump_hist_from_joint(leafed, node_cols), node_cols)
     w_node = Window.partitionBy(*gc, "node").orderBy(
         F.col("gain").desc(), "feature", "split_bin"
     )
@@ -1957,29 +1900,8 @@ def lineitem_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: stage-2 residual expression stays bit-identical across engines.
 GBT_SHRINKAGE = 0.5
 
-#: r15 OPTIMIZATION: materialize each boosting stage's winner frame
-#: (1 row ungrouped, ≤ |groups| rows grouped) with an eager
-#: localCheckpoint before the next stage's scan joins it back.
-#: The values are unchanged — the winner is the same rounded-9 ranked
-#: row either way — but the lazy form nests every earlier stage's
-#: whole subtree (scan → explode → histogram → window) inside stage
-#: k's broadcast, and the optimizer/codegen cost of that chain grew
-#: SUPERLINEARLY with depth: measured at sf0.1 warm (median of 3),
-#: K=3 cost 5.26 s lazy while stage increments were 1.52/0.74 s for
-#: K=1/2 — the third stage alone paid ~3 s, far above its share of
-#: scan work. With per-stage materialization the plan each stage
-#: compiles is ONE scan joined to a tiny ExistingRDD.
-#: At 100 TB the trade is the same or better: the winner frame is
-#: aggregate-sized (never data), and K sequential scans execute
-#: identically — only the nested re-analysis/codegen is removed.
-#: False = PLAN-INSPECTION lineage (tools/dump_plans flips the module
-#: flag so PLANS.md keeps showing the full unexecuted scan chain).
-MATERIALIZE_STAGE_WINNERS = True
 
-
-def gbt_two_stage(
-    df: DataFrame, checkpoint: bool | None = None
-) -> DataFrame:
+def gbt_two_stage(df: DataFrame) -> DataFrame:
     """Two-stage gradient boosting with stump base learners under
     SQUARED loss — the GBDT outer loop the histogram primitive exists
     for, in its exactly-replayable form.
@@ -2002,30 +1924,22 @@ def gbt_two_stage(
     ``n_L1`` counts the bin's rows that fell in the stage-1 left
     leaf — the ONLY extra histogram column stage 2 needs.
 
-    Plan (executed path): ONE data scan total — both stages'
-    histograms are exact weighted regroups of the checkpointed joint
-    bin cells (:func:`_joint_bin_hist`; stage 2's ``l1`` routing is a
-    pure function of the bin columns), with the stage-1 choice still
+    Plan: ONE data scan total — both stages' histograms are exact
+    weighted regroups of the checkpointed joint bin cells
+    (:func:`_joint_bin_hist`; stage 2's ``l1`` routing is a pure
+    function of the bin columns), with the stage-1 choice still
     joined back as a broadcast scalar; all split search runs on
-    histogram rows. The plan-inspection path (``checkpoint=False``)
-    keeps the one-scan-per-stage lineage — the shape deeper ensembles
-    iterate.
+    histogram rows.
 
     Returns one row per stage: ``(stage, feature, split_bin, n_left,
     n_right, gamma_left, gamma_right, score)`` — γ published rounded
     to 9; ranking uses the round-9 score with (feature, split_bin)
     tie-break."""
-    # executed path: one joint-bin collapse serves both stages (see
-    # _joint_bin_hist) — stage 2's l1 routing is a pure function of
-    # the bin columns, so its histogram is an exact weighted regroup
-    # of the same cells; lazy path keeps one data scan per stage
-    ck = MATERIALIZE_STAGE_WINNERS if checkpoint is None else checkpoint
-    binned = _stump_binned(df)
-    src = _joint_bin_hist(binned, []) if ck else binned
-    cum1 = _cum_counts(
-        _stump_hist_from_joint(src, []) if ck else _stump_hist(binned, []),
-        [],
-    )
+    # one joint-bin collapse serves both stages (see _joint_bin_hist)
+    # — stage 2's l1 routing is a pure function of the bin columns, so
+    # its histogram is an exact weighted regroup of the same cells
+    src = _joint_bin_hist(_stump_binned(df), [])
+    cum1 = _cum_counts(_stump_hist_from_joint(src, []), [])
     nl, posl, nt, post = (F.col(c) for c in ("nl", "posl", "nt", "post"))
     ybar = post / nt
     sum_rl = posl - nl * ybar
@@ -2058,10 +1972,9 @@ def gbt_two_stage(
             "ybar",
         )
     )
-    # materialize the 1-row stage-1 winner before stage 2's scan
-    # joins it back (see MATERIALIZE_STAGE_WINNERS)
-    if ck:
-        r1 = r1.localCheckpoint(eager=True)
+    # materialize the 1-row stage-1 winner before stage 2 joins it
+    # back (see gbt_boost)
+    r1 = r1.localCheckpoint(eager=True)
     is_left = None
     for name, *_ in STUMP_BINS:
         term = (F.col("root_feature") == name) & (
@@ -2082,7 +1995,8 @@ def gbt_two_stage(
             "ybar",
             is_left.cast("int").alias("l1"),
             *[f"b_{name}" for name, *_ in STUMP_BINS],
-            *(("_jn", "_jpos") if ck else ("y",)),
+            "_jn",
+            "_jpos",
         )
     )
     carry = [
@@ -2103,28 +2017,17 @@ def gbt_two_stage(
             for name, *_ in STUMP_BINS
         ]
     )
-    if ck:
-        hist2 = (
-            staged.select(
-                *carry, F.explode(pairs).alias("p"), "_jn", "_jpos", "l1"
-            )
-            .groupBy(*carry, "p.feature", "p.bin")
-            .agg(
-                F.sum("_jn").alias("n"),
-                F.sum("_jpos").alias("pos"),
-                F.sum(F.col("l1") * F.col("_jn")).alias("nl1"),
-            )
+    hist2 = (
+        staged.select(
+            *carry, F.explode(pairs).alias("p"), "_jn", "_jpos", "l1"
         )
-    else:
-        hist2 = (
-            staged.select(*carry, F.explode(pairs).alias("p"), "y", "l1")
-            .groupBy(*carry, "p.feature", "p.bin")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("y").cast("bigint").alias("pos"),
-                F.sum("l1").cast("bigint").alias("nl1"),
-            )
+        .groupBy(*carry, "p.feature", "p.bin")
+        .agg(
+            F.sum("_jn").alias("n"),
+            F.sum("_jpos").alias("pos"),
+            F.sum(F.col("l1") * F.col("_jn")).alias("nl1"),
         )
+    )
     cum2 = _cum_counts(hist2, carry, extra=("nl1",))
     nl1l, nl1t = F.col("nl1l"), F.col("nl1t")
     gl, gr, yb = F.col("g_l"), F.col("g_r"), F.col("ybar")
@@ -2192,14 +2095,13 @@ def gbt_boost(
     binned: DataFrame | None = None,
     group_cols: tuple[str, ...] = (),
     wide: bool = False,
-    checkpoint: bool | None = None,
     joint: DataFrame | None = None,
 ) -> DataFrame:
     """K-stage gradient boosting of histogram stumps under squared
     loss — :func:`gbt_two_stage`'s closed-form residual recursion
     carried to arbitrary depth (§7.6's "deeper boosting": each extra
-    stage is ONE more data scan plus one more carried membership
-    column through the histogram).
+    stage is one more regroup of the joint histogram plus one more
+    carried membership column through it).
 
     Why the recursion stays exact at any depth: after stage ``i`` the
     model correction is piecewise-constant over the stage-``i`` leaf
@@ -2222,16 +2124,14 @@ def gbt_boost(
     may differ in the last ulp — each entry's oracle mirrors its own
     formulation.
 
-    Plan (executed path): ONE data scan total — the joint bin
-    histogram (see :func:`_joint_bin_hist`) is collapsed and
-    checkpointed up front, and every stage's per-(feature, bin)
-    histogram (including the carried membership sums) is an exact
-    weighted regroup of those aggregate-sized cells; stage k still
-    joins the stage-(k−1) winner back as a broadcast scalar. At
-    100 TB the one scan shuffles O(Π bins) partial joint cells per
-    task and the split search stays histogram-sized. The
-    plan-inspection path (``checkpoint=False``) keeps the original
-    one-explode→histogram-scan-per-stage lineage.
+    Plan: ONE data scan total — the joint bin histogram (see
+    :func:`_joint_bin_hist`) is collapsed and checkpointed up front,
+    and every stage's per-(feature, bin) histogram (including the
+    carried membership sums) is an exact weighted regroup of those
+    aggregate-sized cells; stage k still joins the stage-(k−1) winner
+    back as a broadcast scalar. At 100 TB the one scan shuffles
+    O(Π bins) partial joint cells per task and the split search stays
+    histogram-sized.
 
     Returns one row per stage: ``(stage, feature, split_bin, n_left,
     n_right, gamma_left, gamma_right, score)``, γ rounded to 9,
@@ -2244,8 +2144,8 @@ def gbt_boost(
     elects its own stage-k winner (the rank window partitions by
     group), and stage k's scan joins the per-group winner frame back
     by the group key — a broadcast hash join against a ≤ |groups|-row
-    frame instead of the 1-row crossJoin scalar. Still exactly K data
-    scans; the per-group histogram partitions are MORE parallel than
+    frame instead of the 1-row crossJoin scalar. Still one data scan;
+    the per-group histogram partitions are MORE parallel than
     the global form, never less (one segment's skew cannot serialize
     another's epilogue). The caller supplies a ``binned`` frame that
     carries the group columns (grouped :func:`_quantile_stump_binned`
@@ -2258,12 +2158,11 @@ def gbt_boost(
     unrounded columns (``f1, t1, nw1, nr1, sc1, gl1, gr1, …, ybar``)
     — the model a downstream SCORER needs whole (per-row prediction
     = ybar + Σ ν·γ routed by the carried memberships), consumed by
-    :func:`lineitem_status_gbt_isotonic`. Same K scans, no extra
+    :func:`lineitem_status_gbt_isotonic`. Same scan, no extra
     work — the exploded form is a projection of this frame."""
     if n_stages < 1:
         raise ValueError("n_stages must be >= 1")
     _require_safe_group_cols("gbt_boost", group_cols)
-    ck = MATERIALIZE_STAGE_WINNERS if checkpoint is None else checkpoint
     gc = list(group_cols)
     names = [name for name, *_ in STUMP_BINS]
     # ``binned`` swaps the bin DEFINITION (e.g. the equi-depth
@@ -2292,19 +2191,14 @@ def gbt_boost(
         ]
     )
     winner: DataFrame | None = None
-    # executed path: collapse the data to its joint bin histogram ONCE
-    # and derive every stage's per-(feature, bin) histogram (incl. the
-    # membership sums) from the checkpointed cells — identical
-    # integers, K fewer data scans (see _joint_bin_hist). The lazy
-    # plan-inspection path (ck=False) keeps one data scan per stage.
-    # ``joint`` lets a caller that already collapsed the SAME binned
-    # frame (e.g. the isotonic scorer, which also scores the cells)
-    # share the one collapse instead of paying a second scan.
-    if ck:
-        src = joint if joint is not None else _joint_bin_hist(binned, gc)
-    else:
-        src = binned
-    data_cols = ("_jn", "_jpos") if ck else ("y",)
+    # collapse the data to its joint bin histogram ONCE and derive
+    # every stage's per-(feature, bin) histogram (incl. the membership
+    # sums) from the checkpointed cells — identical integers, K fewer
+    # data scans (see _joint_bin_hist). ``joint`` lets a caller that
+    # already collapsed the SAME binned frame (e.g. the isotonic
+    # scorer, which also scores the cells) share the one collapse
+    # instead of paying a second scan.
+    src = joint if joint is not None else _joint_bin_hist(binned, gc)
     for k in range(1, n_stages + 1):
         if k == 1:
             # the group key is carried from stage 1 (it partitions
@@ -2332,39 +2226,25 @@ def gbt_boost(
                 else src.crossJoin(F.broadcast(winner))
             )
             cur = staged_in.select(
-                *carry, *mems, *[f"b_{name}" for name in names], *data_cols
+                *carry, *mems, *[f"b_{name}" for name in names], "_jn", "_jpos"
             )
-        if ck:
-            # weighted regroup of the joint cells: n/pos/m_i-sums are
-            # Σ over cells of (_jn, _jpos, m_i·_jn) — the same bigint
-            # values the per-row aggregation produces
-            hist = (
-                cur.select(
-                    *carry, F.explode(pairs).alias("p"), *data_cols, *mem_cols
-                )
-                .groupBy(*carry, "p.feature", "p.bin")
-                .agg(
-                    F.sum("_jn").alias("n"),
-                    F.sum("_jpos").alias("pos"),
-                    *[
-                        F.sum(F.col(m) * F.col("_jn")).alias(f"{m}s")
-                        for m in mem_cols
-                    ],
-                )
+        # weighted regroup of the joint cells: n/pos/m_i-sums are Σ
+        # over cells of (_jn, _jpos, m_i·_jn) — the same bigint values
+        # the per-row aggregation produces
+        hist = (
+            cur.select(
+                *carry, F.explode(pairs).alias("p"), "_jn", "_jpos", *mem_cols
             )
-        else:
-            hist = (
-                cur.select(*carry, F.explode(pairs).alias("p"), "y", *mem_cols)
-                .groupBy(*carry, "p.feature", "p.bin")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum("y").cast("bigint").alias("pos"),
-                    *[
-                        F.sum(m).cast("bigint").alias(f"{m}s")
-                        for m in mem_cols
-                    ],
-                )
+            .groupBy(*carry, "p.feature", "p.bin")
+            .agg(
+                F.sum("_jn").alias("n"),
+                F.sum("_jpos").alias("pos"),
+                *[
+                    F.sum(F.col(m) * F.col("_jn")).alias(f"{m}s")
+                    for m in mem_cols
+                ],
             )
+        )
         cum = _cum_counts(
             hist, carry, extra=tuple(f"{m}s" for m in mem_cols)
         )
@@ -2418,10 +2298,16 @@ def gbt_boost(
                 "ybar",
             )
         )
-        # materialize the aggregate-sized winner so stage k+1's scan
-        # joins an ExistingRDD instead of re-nesting the whole earlier
-        # subtree in its broadcast (see MATERIALIZE_STAGE_WINNERS)
-        if ck and k < n_stages:
+        # materialize the aggregate-sized winner (1 row ungrouped,
+        # ≤ |groups| grouped) before stage k+1 joins it back. The
+        # values are unchanged, but the lazy form nests every earlier
+        # stage's whole subtree (explode → histogram → window) inside
+        # stage k's broadcast, and its optimizer/codegen cost grew
+        # SUPERLINEARLY with depth: at sf0.1 warm (median of 3) K=3
+        # cost 5.26 s lazy while stage increments were 1.52/0.74 s
+        # for K=1/2. Materialized, each stage compiles against a tiny
+        # ExistingRDD.
+        if k < n_stages:
             winner = winner.localCheckpoint(eager=True)
     if wide:
         return winner
@@ -2450,8 +2336,8 @@ def gbt_boost(
 def lineitem_gbt_stages3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry query: THREE gradient-boosting stages of histogram
     stumps (squared loss, shrinkage 0.5) via the uniform closed-form
-    recursion — one scan per stage, the whole trajectory's splits,
-    leaf values, and SSE scores."""
+    recursion — one joint-histogram scan, the whole trajectory's
+    splits, leaf values, and SSE scores."""
     return gbt_boost(load_table(spark, sf_dir, "lineitem"), 3)
 
 
@@ -2911,7 +2797,6 @@ def quantile_bucket_map(
     width: float,
     n_fine: int = N_QTL_FINE,
     n_buckets: int = N_QTL_BUCKETS,
-    checkpoint: bool = True,
     group_cols: tuple[str, ...] = (),
     cache_key: tuple | None = None,
 ) -> DataFrame:
@@ -2935,10 +2820,9 @@ def quantile_bucket_map(
     ``cache_key`` (the registry passes ``(sf_dir,)``) shares the fit per
     session among every quantile-family registry entry; a caller
     passing one asserts that ``df``'s content is a pure function of
-    it. Keyless calls and ``checkpoint=False`` (an unexecuted lineage,
-    the plan-inspection path) never cache."""
+    it. Keyless calls never cache."""
     _require_safe_group_cols("quantile_bucket_map", group_cols)
-    if cache_key is not None and checkpoint:
+    if cache_key is not None:
         return session_cache(
             df.sparkSession,
             (
@@ -2980,13 +2864,12 @@ def quantile_bucket_map(
             F.expr(f"CAST(((cum - n) * {n_buckets}) DIV nt AS INT)"),
         ).alias("bucket"),
     )
-    return m.localCheckpoint(eager=True) if checkpoint else m
+    return m.localCheckpoint(eager=True)
 
 
 def _quantile_stump_binned(
     df: DataFrame,
     features: tuple[tuple[str, str, float], ...] = QSTUMP_FEATURES,
-    checkpoint: bool = True,
     group_cols: tuple[str, ...] = (),
     cache_key: tuple | None = None,
 ) -> DataFrame:
@@ -3004,15 +2887,15 @@ def _quantile_stump_binned(
     gain the group key; the output carries the group columns, the
     grouped-:func:`gbt_boost` input contract.
 
-    r15 OPTIMIZATION (guide §2.4/§3: remove the join outright): on
-    the executed path (``checkpoint=True``) the per-row bucket is a
-    pure CODEGEN STEP-COUNT EXPRESSION instead of a broadcast join —
-    bucket(fb) = Σ over the map's bucket EDGES of ``fb >= edge``,
+    r15 OPTIMIZATION (guide §2.4/§3: remove the join outright): the
+    per-row bucket is a pure CODEGEN STEP-COUNT EXPRESSION instead of
+    a broadcast join — bucket(fb) = Σ over the map's bucket EDGES of
+    ``fb >= edge``,
     each edge repeated (bucket step) times so skipped buckets (one
     fine bin straddling several equi-depth boundaries) count
     correctly. Identical values to the join (the edges come from the
     SAME session-cached map; equality pinned in
-    tests/test_round17_fixes.py) with three broadcast hash joins per
+    tests/test_r15_optimization.py) with three broadcast hash joins per
     trainer scan replaced by ≤ (n_buckets−1) integer comparisons per
     feature per row — at any scale the scan no longer pays exchange
     or build-side latency for aggregate-sized maps. The collect that
@@ -3020,9 +2903,7 @@ def _quantile_stump_binned(
     materialized, ≤ |groups|·n_fine rows — the adjudicated
     bounded-probe idiom) and is session-cached beside it. Groups
     beyond :data:`_QTL_EXPR_MAX_GROUPS` fall back to the broadcast
-    join (a CASE with thousands of branches would blow up codegen);
-    ``checkpoint=False`` (plan inspection) keeps the join form so
-    PLANS.md shows the full map-derivation lineage."""
+    join (a CASE with thousands of branches would blow up codegen)."""
     gc = list(group_cols)
     out = df.select(
         *gc,
@@ -3034,25 +2915,14 @@ def _quantile_stump_binned(
     )
     for name, col, w in features:
         m = quantile_bucket_map(
-            df,
-            col,
-            w,
-            checkpoint=checkpoint,
-            group_cols=group_cols,
-            cache_key=cache_key,
+            df, col, w, group_cols=group_cols, cache_key=cache_key
         )
-        edges = (
-            _bucket_edges(
-                m,
-                gc,
-                cache_key=(
-                    (cache_key, tuple(gc), name)
-                    if cache_key is not None
-                    else None
-                ),
-            )
-            if checkpoint
-            else None
+        edges = _bucket_edges(
+            m,
+            gc,
+            cache_key=(
+                (cache_key, tuple(gc), name) if cache_key is not None else None
+            ),
         )
         if edges is not None:
             out = out.withColumn(
@@ -3158,9 +3028,9 @@ def lineitem_quantile_gbt(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeding the closed-form residual boosting loop. Identical
     recursion to :func:`lineitem_gbt_stages`' engine
     (:func:`gbt_boost`); only the bin definition changes, arriving
-    per row via three aggregate-sized broadcast maps
-    (:func:`_quantile_stump_binned`), so each stage's scan stays one
-    data pass + three broadcast joins."""
+    per row from three aggregate-sized bucket maps
+    (:func:`_quantile_stump_binned`), so the trainer still makes one
+    joint-histogram data pass."""
     return gbt_boost(
         None,
         2,
@@ -3193,8 +3063,8 @@ def lineitem_quantile_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     search with the adaptive bin definition swapped in via the same
     broadcast bucket maps as :func:`lineitem_quantile_gbt`; completes
     the model stack on adaptive grids (stump → multi-stump → GBT →
-    tree). One data scan per level plus the aggregate-sized map
-    joins."""
+    tree). One joint-histogram scan plus the aggregate-sized bucket
+    maps."""
     li = load_table(spark, sf_dir, "lineitem")
     return tree_depth2(
         None,
@@ -3214,7 +3084,7 @@ def lineitem_status_quantile_tree(
     tree, each now with a grouped leg): every segment fits its own
     bucket maps, elects its own root, and split-searches its own two
     children; the routing crossJoin becomes a broadcast equi-join on
-    the segment key. Still one data scan per level for all segments;
+    the segment key. Still one joint-histogram scan for all segments;
     pinned definitionally equal to the global tree on each segment's
     filtered slice. Segment key aliased ``seg``."""
     li = load_table(spark, sf_dir, "lineitem").withColumn(
@@ -3243,7 +3113,7 @@ def lineitem_status_quantile_gbt(
     and stage winners; stage scans join the per-segment winner frame
     by the segment key). Definitionally equal to running the global
     trainer on each segment's filtered slice — pinned in tests —
-    while still paying exactly one data scan per stage for ALL
+    while still paying one joint-histogram data scan for ALL
     segments. Segment key aliased ``seg``, the per-segment family's
     column contract."""
     li = load_table(spark, sf_dir, "lineitem").withColumn(
@@ -3316,72 +3186,43 @@ def lineitem_status_gbt_isotonic(
     counts are exact weighted regroups), and the isotonic epilogue
     aggregates cell rows, all map-side-combined. Plus the 3
     aggregate-sized bucket-map scans."""
-    scored = _status_qgbt_scored(spark, sf_dir)
     return isotonic_calibration(
-        scored,
+        _qgbt_scored(spark, sf_dir, grouped=True),
         group_cols=("seg",),
-        weight_cols=("_jn", "_jpos") if "_jn" in scored.columns else None,
-    )
-
-
-def _status_qgbt_scored(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
-    """The grouped quantile-GBT's scored frame — per-row ``(seg, p,
-    y)`` on the lazy path, weighted cells ``(seg, p, _jn, _jpos)``
-    on the executed path (r15; see :func:`_qgbt_scored`) — every
-    row/cell routed through its segment's winner leaves exactly like
-    the trainer's carried membership (gbt_boost's m_i
-    definition), using the SHIPPED round-9 leaf values with the sum
-    rounded to 9 (the oracle's identical IEEE tree)."""
-    return _qgbt_scored(
-        spark, sf_dir, checkpoint=checkpoint, grouped=True
+        weight_cols=("_jn", "_jpos"),
     )
 
 
 def _qgbt_scored(
-    spark: SparkSession,
-    sf_dir: str,
-    checkpoint: bool = True,
-    grouped: bool = False,
+    spark: SparkSession, sf_dir: str, grouped: bool = False
 ) -> DataFrame:
     """The quantile-GBT scored frame, global or per-segment:
-    ``grouped=True`` fits per-segment maps and per-segment winners
-    (scores joined back by the segment key); ``grouped=False`` uses
-    the global maps and the 1-row winner frame (crossJoin scalar
-    idiom). One scorer definition, both calibration entries. Output:
-    per-row ``(…, p, y)`` on the lazy path (``checkpoint=False``,
-    plan inspection), weighted joint-histogram cells
-    ``(…, p, _jn, _jpos)`` on the executed path (r15 — see the
-    inline comment; the consumer passes
-    ``weight_cols=("_jn", "_jpos")`` to isotonic_calibration)."""
+    ``grouped=True`` fits per-segment maps (segment key aliased
+    ``seg``) and per-segment winners (scores joined back by the
+    segment key); ``grouped=False`` uses the global maps and the
+    1-row winner frame (crossJoin scalar idiom). One scorer
+    definition, both calibration entries. Every joint-histogram cell
+    is routed through its winner leaves exactly like the trainer's
+    carried membership (gbt_boost's m_i definition), using the
+    SHIPPED round-9 leaf values with the sum rounded to 9 (the
+    oracle's identical IEEE tree). Output: weighted cells
+    ``(…, p, _jn, _jpos)``; the consumer passes
+    ``weight_cols=("_jn", "_jpos")`` to isotonic_calibration."""
     li = load_table(spark, sf_dir, "lineitem")
     gc: tuple[str, ...] = ()
     if grouped:
         li = li.withColumn("seg", F.col("l_linestatus"))
         gc = ("seg",)
-    binned = _quantile_stump_binned(
-        li,
-        checkpoint=checkpoint,
-        group_cols=gc,
-        cache_key=(sf_dir,),
-    )
-    # r15 OPTIMIZATION: on the executed path the scorer consumes the
-    # SAME joint-histogram cells the trainer aggregates from (the
-    # per-row score p is a pure function of the bin columns, so the
-    # per-(group, p) counts are exact weighted regroups of the cells)
-    # — ONE data scan serves trainer AND scorer, and the downstream
-    # isotonic histogram aggregates ≤ cells rows instead of the data.
-    # The lazy plan-inspection path keeps the per-row scored frame.
-    cells = _joint_bin_hist(binned, list(gc)) if checkpoint else None
+    binned = _quantile_stump_binned(li, group_cols=gc, cache_key=(sf_dir,))
+    # r15 OPTIMIZATION: the scorer consumes the SAME joint-histogram
+    # cells the trainer aggregates from (the per-row score p is a pure
+    # function of the bin columns, so the per-(group, p) counts are
+    # exact weighted regroups of the cells) — ONE data scan serves
+    # trainer AND scorer, and the downstream isotonic histogram
+    # aggregates ≤ cells rows instead of the data.
+    cells = _joint_bin_hist(binned, list(gc))
     w = gbt_boost(
-        None,
-        2,
-        binned=binned,
-        group_cols=gc,
-        wide=True,
-        checkpoint=checkpoint,
-        joint=cells,
+        None, 2, binned=binned, group_cols=gc, wide=True, joint=cells
     )
     names = [name for name, *_ in STUMP_BINS]
     nu = F.lit(GBT_SHRINKAGE)
@@ -3398,17 +3239,12 @@ def _qgbt_scored(
         )
 
     p = F.round(F.col("ybar") + nu * leaf(1) + nu * leaf(2), 9)
-    src = cells if checkpoint else binned
     joined = (
-        src.join(F.broadcast(w), list(gc))
+        cells.join(F.broadcast(w), list(gc))
         if gc
-        else src.crossJoin(F.broadcast(w))
+        else cells.crossJoin(F.broadcast(w))
     )
-    if checkpoint:
-        # weighted cell-level scored frame — consumed via
-        # isotonic_calibration(weight_cols=("_jn", "_jpos"))
-        return joined.select(*gc, p.alias("p"), "_jn", "_jpos")
-    return joined.select(*gc, p.alias("p"), F.col("y"))
+    return joined.select(*gc, p.alias("p"), "_jn", "_jpos")
 
 
 def lineitem_gbt_isotonic(
@@ -3423,10 +3259,8 @@ def lineitem_gbt_isotonic(
     sums) fit to one monotone score→P(y=1) map over the 1024-bin
     histogram. Same scorer definition, 1-row broadcast winner frame,
     global PAV tail."""
-    scored = _qgbt_scored(spark, sf_dir)
     return isotonic_calibration(
-        scored,
-        weight_cols=("_jn", "_jpos") if "_jn" in scored.columns else None,
+        _qgbt_scored(spark, sf_dir), weight_cols=("_jn", "_jpos")
     )
 
 
@@ -3706,30 +3540,6 @@ def lineitem_stats_incremental(
     )
 
 
-def lineitem_gbt_isotonic_plan(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """PLAN-INSPECTION variant (tools/dump_plans): checkpoints
-    disabled; see :func:`lineitem_status_gbt_isotonic_plan`."""
-    return isotonic_calibration(
-        _qgbt_scored(spark, sf_dir, checkpoint=False),
-        checkpoint=False,
-    )
-
-
-def lineitem_status_gbt_isotonic_plan(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """PLAN-INSPECTION variant (tools/dump_plans): bucket-map and
-    histogram-stage checkpoints disabled so the dumped plan shows the
-    real scan lineage; see :func:`lineitem_isotonic_calibration_plan`."""
-    return isotonic_calibration(
-        _status_qgbt_scored(spark, sf_dir, checkpoint=False),
-        checkpoint=False,
-        group_cols=("seg",),
-    )
-
-
 def lineitem_status_multi_stump(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3774,7 +3584,6 @@ def encoding_reliability(
     n_folds: int = N_ENC_FOLDS,
     m: float = ENC_SMOOTHING,
     n_bins: int = ENC_RELIABILITY_BINS,
-    checkpoint: bool = True,
     grid: DataFrame | None = None,
     per_fold: bool = False,
     segment_col: str | None = None,
@@ -3803,8 +3612,7 @@ def encoding_reliability(
     surface in the repo (means of round-9 doubles; jitter ≫ 6 orders
     inside the bucket). ``grid`` injects a prefit (checkpointed)
     grid — the registry path passes the session-cached fit so audit
-    and encoding entry share one cell-grid pass (``checkpoint`` then
-    has no effect: it governs only the internal fit). ``per_fold``
+    and encoding entry share one cell-grid pass. ``per_fold``
     adds the fold key to the output grouping — the leakage-variance
     view. ``segment_col`` adds a data segment key (as ``seg``) to the
     output grouping — the per-segment audit: the GRID stays the
@@ -3815,9 +3623,7 @@ def encoding_reliability(
     feature). Count columns marginalize exactly back to the unsplit
     audit by construction — the pinned completeness property."""
     if grid is None:
-        grid = target_encoding(
-            df, cat_col, key_col, label, n_folds, m, checkpoint=checkpoint
-        )
+        grid = target_encoding(df, cat_col, key_col, label, n_folds, m)
     else:
         _require_grid_folds(grid, n_folds)
     seg = [F.col(segment_col).alias("seg")] if segment_col else []
@@ -3897,7 +3703,6 @@ def encoding_stump(
     n_folds: int = N_ENC_FOLDS,
     m: float = ENC_SMOOTHING,
     n_bins: int = ENC_RELIABILITY_BINS,
-    checkpoint: bool = True,
     grid: DataFrame | None = None,
     segment_col: str | None = None,
 ) -> DataFrame:
@@ -3930,9 +3735,7 @@ def encoding_stump(
     a segment whose best boundary (or gain) diverges is where the
     shared encoding stops transferring."""
     if grid is None:
-        grid = target_encoding(
-            df, cat_col, key_col, label, n_folds, m, checkpoint=checkpoint
-        )
+        grid = target_encoding(df, cat_col, key_col, label, n_folds, m)
     else:
         _require_grid_folds(grid, n_folds)
     seg = [F.col(segment_col).alias("seg")] if segment_col else []
@@ -4024,21 +3827,4 @@ def lineitem_encoding_reliability(
         _lineitem_enc_key(),
         F.col("l_returnflag") == "R",
         grid=_registry_encoding_grid(spark, sf_dir),
-    )
-
-
-def lineitem_encoding_reliability_plan(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """PLAN-INSPECTION variant (tools/dump_plans): the grid-stage
-    checkpoint disabled so the dumped plan shows the real two-scan
-    lineage (fit scan + apply scan) instead of a bare ExistingRDD;
-    see :func:`lineitem_target_encoding_plan`."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return encoding_reliability(
-        li,
-        "l_suppkey",
-        _lineitem_enc_key(),
-        F.col("l_returnflag") == "R",
-        checkpoint=False,
     )

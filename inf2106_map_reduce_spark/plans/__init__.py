@@ -5,6 +5,7 @@ from inf2106_map_reduce_spark.plans.inspect import (
     explain_str,
     has_broadcast_join,
     pushed_filters,
+    run_with_plans,
     scan_columns,
     data_shuffle_count,
     shuffle_count,
@@ -14,6 +15,7 @@ __all__ = [
     "explain_str",
     "has_broadcast_join",
     "pushed_filters",
+    "run_with_plans",
     "scan_columns",
     "data_shuffle_count",
     "shuffle_count",

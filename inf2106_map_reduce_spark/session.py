@@ -11,7 +11,10 @@ we would ship to a 1000-executor cluster, with the documented overrides.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 from collections.abc import Callable, Hashable
 from typing import TypeVar
 
@@ -146,10 +149,33 @@ def get_spark(
     return spark
 
 
-#: The live application's id and the session_cache entries built under
-#: it; the first call from another application clears the entries.
+#: The live application's id, the session_cache entries built under
+#: it and its scratch root (None until scratch_dir first asks); the
+#: first call from another application drops both.
 _cache_app_id: str | None = None
 _cache_entries: dict[Hashable, object] = {}
+_scratch_root: str | None = None
+
+
+def _drop_scratch_root() -> None:
+    global _scratch_root
+    if _scratch_root is not None:
+        shutil.rmtree(_scratch_root, ignore_errors=True)
+        _scratch_root = None
+
+
+atexit.register(_drop_scratch_root)
+
+
+def _enter_application(spark: SparkSession) -> None:
+    """Forget the previous application's cache entries and remove its
+    scratch root when ``spark`` belongs to a new application."""
+    global _cache_app_id
+    app_id = spark.sparkContext.applicationId
+    if app_id != _cache_app_id:
+        _cache_entries.clear()
+        _drop_scratch_root()
+        _cache_app_id = app_id
 
 
 def session_cache(
@@ -172,14 +198,27 @@ def session_cache(
 
     Membership decides a hit, so a stored ``None`` is returned as is.
     A ``build()`` that raises stores nothing. The first call under a
-    new application id drops every entry of the old one: their
+    new application id drops every entry of the old one (their
     checkpoint blocks died with the old context, so there is nothing
-    to unpersist."""
-    global _cache_app_id
-    app_id = spark.sparkContext.applicationId
-    if app_id != _cache_app_id:
-        _cache_entries.clear()
-        _cache_app_id = app_id
+    to unpersist) and removes its :func:`scratch_dir` root."""
+    _enter_application(spark)
     if key not in _cache_entries:
         _cache_entries[key] = build()
     return _cache_entries[key]
+
+
+def scratch_dir(spark: SparkSession, prefix: str) -> str:
+    """Create and return a fresh directory for files a returned
+    DataFrame reads lazily (stream sinks, compacted trees), so they
+    must outlive the call that wrote them.
+
+    Every such directory sits under one root per application, made on
+    first use in the temp dir. The root is removed, in this process
+    and before returning, by the first :func:`session_cache` or
+    ``scratch_dir`` call under a new application id (frames over the
+    old root died with the old context), and at interpreter exit."""
+    global _scratch_root
+    _enter_application(spark)
+    if _scratch_root is None:
+        _scratch_root = tempfile.mkdtemp(prefix="spark_graft_scratch_")
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root)

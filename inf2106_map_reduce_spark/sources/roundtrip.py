@@ -300,10 +300,9 @@ def bloom_pruned_join(li: DataFrame, orders: DataFrame) -> DataFrame:
 
 def bloom_runtime_join_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The UNEXECUTED frozen plan behind :func:`bloom_runtime_join` —
-    split out so the plan-pin tests and `tools/dump_plans.py` can
-    inspect the physical plan (might_contain probe, Bloom-aggregate
-    subquery, shuffle join) before execution collapses the returned
-    frame to an RDD scan."""
+    split out so the plan-pin tests can inspect the physical plan
+    (might_contain probe, Bloom-aggregate subquery, shuffle join)
+    before execution collapses the returned frame to an RDD scan."""
     return plan_with_confs(
         _bloom_joined(
             load_table(spark, sf_dir, "lineitem"),

@@ -22,8 +22,6 @@ convention) upgraded from exact-hash to LSH near-dup.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,7 +32,7 @@ from inf2106_map_reduce_spark.functions.dedup import (
     _registry_minhash_sigs,
     minhash_band_cols_arrow,
 )
-from inf2106_map_reduce_spark.session import session_cache
+from inf2106_map_reduce_spark.session import scratch_dir, session_cache
 from inf2106_map_reduce_spark.streaming.runtime import (
     batch_writer,
     drain,
@@ -210,7 +208,7 @@ def streaming_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_copies",
         )
     )
-    sink = tempfile.mkdtemp(prefix="ingest_sink_")
+    sink = scratch_dir(spark, "ingest_sink_")
     state_keys = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % SNAPSHOT_MOD >= SNAPSHOT_LT)

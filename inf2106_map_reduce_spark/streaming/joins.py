@@ -17,11 +17,10 @@ join — which is exactly what the DuckDB oracle checks.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from inf2106_map_reduce_spark.session import scratch_dir
 from inf2106_map_reduce_spark.streaming.runtime import (
     batch_writer,
     drain,
@@ -145,7 +144,7 @@ def _attribution_drain(
     purchases = _stream().filter(F.col("event_type") == "purchase")
     out = click_purchase_pairs(clicks, purchases, how=how)
 
-    sink = tempfile.mkdtemp(prefix="stream_sink_")
+    sink = scratch_dir(spark, "stream_sink_")
     # A stream-stream join keeps FOUR state stores per partition — the
     # per-partition maintenance cost is the whole game here (7.6 s at
     # 32 partitions vs 2.4 s at 8 on identical sf0.1 input); see the

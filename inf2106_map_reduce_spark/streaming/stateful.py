@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from inf2106_map_reduce_spark.session import WORK_ROOT
+from inf2106_map_reduce_spark.session import WORK_ROOT, scratch_dir
 
 from inf2106_map_reduce_spark.streaming.runtime import (
     batch_writer,
@@ -69,7 +69,7 @@ def _run_to_table(
     each key once. ``state_keys`` (a batch projection of the state key
     columns) sizes the state partition count from the data
     (runtime.state_partitions_for)."""
-    sink = tempfile.mkdtemp(prefix="stream_sink_")
+    sink = scratch_dir(spark, "stream_sink_")
     drain(
         out_stream,
         batch_writer(sink, mode),

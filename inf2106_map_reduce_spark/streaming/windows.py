@@ -17,7 +17,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from inf2106_map_reduce_spark.session import session_cache
+from inf2106_map_reduce_spark.session import scratch_dir, session_cache
 from inf2106_map_reduce_spark.streaming import stateful as stream_stateful
 
 from inf2106_map_reduce_spark.streaming.runtime import (
@@ -127,7 +127,7 @@ def _run_available_now(
     if with_watermark:
         stream = stream.withWatermark("ts", WATERMARK)
     out = transform(stream)
-    sink = tempfile.mkdtemp(prefix="stream_sink_")
+    sink = scratch_dir(spark, "stream_sink_")
     drain(
         out,
         batch_writer(sink, output_mode),
@@ -461,7 +461,7 @@ def backfill_lag_over(
             "n_events",
         )
     )
-    sink = tempfile.mkdtemp(prefix="backfill_sink_")
+    sink = scratch_dir(spark, "backfill_sink_")
     q = drain(
         out,
         batch_writer(sink, "append"),
@@ -608,7 +608,7 @@ def _upsert_drain_from(
     directory; returns ``(table_root, last_version)`` so the
     vacuum/retention entries can run maintenance over fresh version
     histories of their own."""
-    table_root = tempfile.mkdtemp(prefix="upsert_table_")
+    table_root = scratch_dir(spark, "upsert_table_")
     empty = spark.createDataFrame(
         [], "user_id bigint, n_events bigint, first_ts timestamp, last_ts timestamp"
     )
@@ -836,7 +836,7 @@ def _grouped_upsert_drain_from(
     are metastore-shaped costs, never data.
 
     Returns ``(table_root, last_epoch)``."""
-    table_root = tempfile.mkdtemp(prefix="upsert_grouped_")
+    table_root = scratch_dir(spark, "upsert_grouped_")
     empty = spark.createDataFrame(
         [],
         "g int, user_id bigint, n_events bigint, "
@@ -1266,7 +1266,7 @@ def _stage_compacted_tree(
     fans out in parallel; the loop below is the same plan serialized
     at test scale."""
     table_root = _cached_grouped_drain(spark, sf_dir)
-    compact_root = tempfile.mkdtemp(prefix="upsert_compacted_")
+    compact_root = scratch_dir(spark, "upsert_compacted_")
     meta = []
     for vname in sorted(os.listdir(table_root)):
         if not vname.startswith("v="):
@@ -1691,8 +1691,8 @@ def _dlq_sink_roots(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 def _run_dlq_split(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Drain the DLQ split stream into fresh good/quarantine sinks."""
     src = _dlq_source_dir(spark, sf_dir)
-    good_root = tempfile.mkdtemp(prefix="dlq_good_")
-    dlq_root = tempfile.mkdtemp(prefix="dlq_bad_")
+    good_root = scratch_dir(spark, "dlq_good_")
+    dlq_root = scratch_dir(spark, "dlq_bad_")
 
     def _route_batch(batch_df, epoch):
         route_batch(batch_df, epoch, good_root, dlq_root, dlq_reason())
@@ -1799,8 +1799,8 @@ def streaming_dlq_redrive(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming plumbing must route every quarantined row exactly once
     to match."""
     _, dlq_root = _dlq_sink_roots(spark, sf_dir)
-    re_good = tempfile.mkdtemp(prefix="dlq_regood_")
-    still = tempfile.mkdtemp(prefix="dlq_still_")
+    re_good = scratch_dir(spark, "dlq_regood_")
+    still = scratch_dir(spark, "dlq_still_")
     stream = (
         spark.readStream.schema(_DLQ_EVENT_SCHEMA + ", reason string")
         .format("parquet")
@@ -1979,7 +1979,7 @@ def _dlq_grouped_age_retention_pass(
         if f.endswith(".parquet")
     )
     n_out = max(1, math.ceil(tree_bytes / COMPACT_TARGET_BYTES))
-    compact_root = tempfile.mkdtemp(prefix=prefix)
+    compact_root = scratch_dir(spark, prefix)
     retained.repartition(n_out).write.mode("overwrite").parquet(
         compact_root
     )
@@ -2111,7 +2111,7 @@ def dlq_retention_pass(
         if f.endswith(".parquet")
     )
     n_out = max(1, math.ceil(tree_bytes / COMPACT_TARGET_BYTES))
-    compact_root = tempfile.mkdtemp(prefix="dlq_retained_")
+    compact_root = scratch_dir(spark, "dlq_retained_")
     retained.repartition(n_out).write.mode("overwrite").parquet(
         compact_root
     )

@@ -25,3 +25,13 @@ def sf_smoke() -> str:
 @pytest.fixture(scope="session")
 def sf_oracle() -> str:
     return SF_ORACLE
+
+
+@pytest.fixture
+def cold_session_cache(monkeypatch):
+    """An empty ``session_cache`` store for one test, so a registry
+    call builds every staged input itself; the shared session's warm
+    entries come back afterwards."""
+    from inf2106_map_reduce_spark import session
+
+    monkeypatch.setattr(session, "_cache_entries", {})

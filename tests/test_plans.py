@@ -592,3 +592,33 @@ def test_plan_audit_artifact_reports_zero_unsanctioned():
     )
     assert m, "PLANS.md is missing the anti-pattern audit section"
     assert int(m.group(2)) == 0, text[m.start(): m.start() + 500]
+
+
+def test_audit_flags_cartesian_hidden_behind_checkpoint(spark):
+    """A non-broadcast CartesianProduct that runs inside an eager
+    localCheckpoint leaves only an ExistingRDD scan in the returned
+    plan; the audit must still flag it from the plan that ran while
+    the frame was built."""
+    import importlib.util
+    import os
+
+    from inf2106_map_reduce_spark.plans import run_with_plans
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "dump_plans", os.path.join(root, "tools", "dump_plans.py")
+    )
+    dump_plans = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(dump_plans)
+
+    def hidden(spark):
+        left = spark.range(3).hint("shuffle_replicate_nl")
+        right = spark.range(4).withColumnRenamed("id", "j")
+        return left.crossJoin(right).localCheckpoint(eager=True)
+
+    df, built = run_with_plans(spark, hidden)
+    returned = explain_str(df, "formatted")
+    assert "CartesianProduct" not in returned, returned
+    assert any("CartesianProduct" in p for p in built), built
+    assert dump_plans.audit_flags(returned, built) == ["cartesian"]
+    assert dump_plans.audit_flags(returned, []) == []

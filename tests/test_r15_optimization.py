@@ -1,24 +1,20 @@
 """Round-15 optimization guards: the trainer-internals changes
-(stage-winner materialization, edge-expression bucket mapping) must be
-pure PLAN changes — every value identical to the lazy / join forms.
+(joint-histogram regroup, edge-expression bucket mapping) must be
+pure PLAN changes — every value identical to the per-row / join
+forms they replaced.
 
 The optimizations under test:
 
-- ``stats.MATERIALIZE_STAGE_WINNERS`` — gbt_boost / gbt_two_stage /
-  tree_depth2 localCheckpoint each stage's aggregate-sized winner
-  frame so stage k's scan compiles against an ExistingRDD instead of
-  re-nesting the whole earlier subtree in its broadcast.
-- ``stats._bucket_edges`` / ``_bucket_step_expr`` — the executed path
-  of ``_quantile_stump_binned`` maps fine bins to equi-depth buckets
+- ``stats._bucket_edges`` / ``_bucket_step_expr`` —
+  ``_quantile_stump_binned`` maps fine bins to equi-depth buckets
   with a codegen step-count expression (edges collected from the
   session-cached bucket map) instead of three broadcast joins.
 - ``stats._joint_bin_hist`` / ``_stump_hist_from_joint`` — the
-  executed path of the multi-stage trainers collapses the data to its
-  joint bin histogram ONCE and derives every stage's per-(feature,
-  bin) histogram (incl. membership sums) as exact weighted regroups
-  of the checkpointed cells; the checkpointed-equals-lazy tests above
-  therefore also pin this path, and the direct histogram-equality
-  test below pins the primitive itself.
+  multi-stage trainers collapse the data to its joint bin histogram
+  ONCE and derive every stage's per-(feature, bin) histogram (incl.
+  membership sums) as exact weighted regroups of the checkpointed
+  cells; the histogram-equality test below pins the primitive, and
+  the oracle parity suite pins every trainer's values.
 """
 
 from __future__ import annotations
@@ -31,29 +27,6 @@ from inf2106_map_reduce_spark.tables import load_table
 
 def _rows(df):
     return sorted(map(str, df.collect()))
-
-
-def test_gbt_boost_checkpointed_equals_lazy(spark, sf_oracle):
-    li = load_table(spark, sf_oracle, "lineitem")
-    assert _rows(stats.gbt_boost(li, 3, checkpoint=True)) == _rows(
-        stats.gbt_boost(li, 3, checkpoint=False)
-    )
-
-
-def test_grouped_gbt_boost_checkpointed_equals_lazy(spark, sf_oracle):
-    li = load_table(spark, sf_oracle, "lineitem").withColumn(
-        "seg", F.col("l_linestatus")
-    )
-    mk = lambda ck: stats.gbt_boost(  # noqa: E731
-        None,
-        2,
-        binned=stats._quantile_stump_binned(
-            li, group_cols=("seg",), checkpoint=ck
-        ),
-        group_cols=("seg",),
-        checkpoint=ck,
-    )
-    assert _rows(mk(True)) == _rows(mk(False))
 
 
 def test_joint_hist_regroup_equals_per_row_hist(spark, sf_oracle):
@@ -80,70 +53,39 @@ def test_joint_hist_regroup_equals_per_row_hist(spark, sf_oracle):
         )
 
 
-def test_grouped_tree_depth2_checkpointed_equals_lazy(spark, sf_oracle):
-    li = load_table(spark, sf_oracle, "lineitem").withColumn(
-        "seg", F.col("l_linestatus")
-    )
-    mk = lambda ck: stats.tree_depth2(  # noqa: E731
-        None,
-        binned=stats._quantile_stump_binned(
-            li, group_cols=("seg",), checkpoint=ck
-        ),
-        group_cols=("seg",),
-        checkpoint=ck,
-    )
-    assert _rows(mk(True)) == _rows(mk(False))
-
-
-def test_gbt_boost_wide_checkpointed_equals_lazy(spark, sf_oracle):
-    """The wide (scorer-facing) winner frame must also be identical
-    between the joint-cell path and the lazy per-stage-scan path."""
-    li = load_table(spark, sf_oracle, "lineitem").withColumn(
-        "seg", F.col("l_linestatus")
-    )
-    mk = lambda ck: stats.gbt_boost(  # noqa: E731
-        None,
-        2,
-        binned=stats._quantile_stump_binned(
-            li, group_cols=("seg",), checkpoint=ck
-        ),
-        group_cols=("seg",),
-        wide=True,
-        checkpoint=ck,
-    )
-    assert _rows(mk(True)) == _rows(mk(False))
-
-
-def test_tree_depth2_checkpointed_equals_lazy(spark, sf_oracle):
-    li = load_table(spark, sf_oracle, "lineitem")
-    assert _rows(stats.tree_depth2(li, checkpoint=True)) == _rows(
-        stats.tree_depth2(li, checkpoint=False)
-    )
-
-
-def test_gbt_two_stage_checkpointed_equals_lazy(spark, sf_oracle):
-    li = load_table(spark, sf_oracle, "lineitem")
-    assert _rows(stats.gbt_two_stage(li, checkpoint=True)) == _rows(
-        stats.gbt_two_stage(li, checkpoint=False)
-    )
-
-
 def test_bucket_expression_equals_join_global_and_grouped(
     spark, sf_oracle
 ):
-    """The step-count expression (checkpoint=True) and the broadcast
-    join (checkpoint=False) must bucket every row identically — the
-    edges come from the same map, so any divergence is an edge-
-    multiplicity bug."""
+    """The step-count expression and a broadcast join against the
+    same bucket maps must bucket every row identically — the edges
+    come from the same map, so any divergence is an edge-multiplicity
+    bug."""
     li = load_table(spark, sf_oracle, "lineitem")
     for gc in ((), ("seg",)):
         d = (
             li.withColumn("seg", F.col("l_linestatus")) if gc else li
         )
         a = stats._quantile_stump_binned(d, group_cols=gc)
-        b = stats._quantile_stump_binned(
-            d, group_cols=gc, checkpoint=False
+        b = d.select(
+            *gc,
+            *[
+                stats._qtl_fine(col, w).alias(f"_fb_{name}")
+                for name, col, w in stats.QSTUMP_FEATURES
+            ],
+            F.expr(stats._STUMP_LABEL_SQL).alias("y"),
         )
+        for name, col, w in stats.QSTUMP_FEATURES:
+            m = stats.quantile_bucket_map(d, col, w, group_cols=gc)
+            b = b.join(
+                F.broadcast(
+                    m.select(
+                        *gc,
+                        F.col("fb").alias(f"_fb_{name}"),
+                        F.col("bucket").alias(f"b_{name}"),
+                    )
+                ),
+                [*gc, f"_fb_{name}"],
+            )
         cols = [*gc, "b_qty", "b_disc", "b_price", "y"]
         assert _rows(a.groupBy(*cols).count()) == _rows(
             b.groupBy(*cols).count()

@@ -15,8 +15,7 @@ from pyspark.sql import functions as F
 from inf2106_map_reduce_spark import session
 from inf2106_map_reduce_spark.functions import pipeline
 from inf2106_map_reduce_spark.operators import stats
-from inf2106_map_reduce_spark.tables import load_table
-from inf2106_map_reduce_spark.plans import explain_str
+from inf2106_map_reduce_spark.plans import explain_str, run_with_plans
 from inf2106_map_reduce_spark.streaming import stateful as stream_stateful
 from inf2106_map_reduce_spark.streaming import windows as stream_windows
 
@@ -42,27 +41,21 @@ def test_stump_is_single_scan(spark, sf_oracle):
     assert "HashAggregate" in plan
 
 
-def test_tree_depth2_is_one_scan_per_level(spark, sf_oracle):
-    """Depth-2 training scans the data exactly TWICE (root level +
-    child level) in the lineage — the one-pass-per-level partial-
-    histogram pattern; the root choice reaches the second scan as a
-    broadcast scalar, never via a driver action. r15: the executed
-    path collapses the data to its joint bin histogram ONCE
-    (stats._joint_bin_hist) and both levels regroup the checkpointed
-    cells, so the LIVE plan shows ZERO data scans (cells + root frame
-    are ExistingRDDs); the unexecuted ``checkpoint=False`` lineage
-    still pins the two-scan contract."""
-    df = stats.lineitem_tree_depth2(spark, sf_oracle)
+def test_tree_depth2_is_one_scan_per_level(
+    spark, sf_oracle, cold_session_cache
+):
+    """Depth-2 training reads the data ONCE for both levels: the data
+    collapses to its joint bin histogram (stats._joint_bin_hist) and
+    both levels regroup the checkpointed cells; the root choice
+    reaches level 2 as a broadcast scalar, never via a driver action.
+    The LIVE plan shows ZERO data scans (cells + root frame are
+    ExistingRDDs); the one scan ran during construction."""
+    df, built = run_with_plans(spark, stats.lineitem_tree_depth2, sf_oracle)
     plan = explain_str(df, "formatted")
     assert _scan_count(plan, "lineitem") == 0, plan
     assert "ExistingRDD" in plan  # the materialized cells + root frame
     assert "CollectLimit" not in plan
-    li = load_table(spark, sf_oracle, "lineitem")
-    unexec = explain_str(
-        stats.tree_depth2(li, checkpoint=False), "formatted"
-    )
-    assert _scan_count(unexec, "lineitem") == 2, unexec
-    assert "ExistingRDD" not in unexec
+    assert sum(_scan_count(p, "lineitem") for p in built) == 1, built
 
 
 def test_tree_depth2_leaf_populations_are_consistent(spark, sf_oracle):
@@ -647,25 +640,21 @@ def test_weighted_reservoir_biases_toward_heavy_rows(spark, sf_oracle):
 # ---------------------------------------------------------------------------
 
 
-def test_gbt_is_one_scan_per_stage(spark, sf_oracle):
-    """Two boosting stages = exactly two data scans in the lineage;
-    the stage-1 choice reaches stage 2 as a broadcast scalar, never a
-    driver action (the depth-2-tree plan contract). r15: the executed
-    path collapses the data to its joint bin histogram ONCE
-    (stats._joint_bin_hist) and both stages regroup the checkpointed
-    cells, so the LIVE plan shows ZERO data scans; the unexecuted
-    ``checkpoint=False`` lineage pins both scans."""
-    df = stats.lineitem_gbt_stages(spark, sf_oracle)
+def test_gbt_is_one_scan_per_stage(
+    spark, sf_oracle, cold_session_cache
+):
+    """Two boosting stages read the data ONCE: the data collapses to
+    its joint bin histogram (stats._joint_bin_hist) and both stages
+    regroup the checkpointed cells; the stage-1 choice reaches stage 2
+    as a broadcast scalar, never a driver action (the depth-2-tree
+    plan contract). The LIVE plan shows ZERO data scans; the one scan
+    ran during construction."""
+    df, built = run_with_plans(spark, stats.lineitem_gbt_stages, sf_oracle)
     plan = explain_str(df, "formatted")
     assert _scan_count(plan, "lineitem") == 0, plan
     assert "ExistingRDD" in plan  # the materialized cells + winner
     assert "CollectLimit" not in plan
-    li = load_table(spark, sf_oracle, "lineitem")
-    unexec = explain_str(
-        stats.gbt_two_stage(li, checkpoint=False), "formatted"
-    )
-    assert _scan_count(unexec, "lineitem") == 2, unexec
-    assert "ExistingRDD" not in unexec
+    assert sum(_scan_count(p, "lineitem") for p in built) == 1, built
 
 
 def test_gbt_matches_independent_reference_fuzz(spark):

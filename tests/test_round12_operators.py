@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from inf2106_map_reduce_spark.functions import dedup
 from inf2106_map_reduce_spark.operators import stats
-from inf2106_map_reduce_spark.plans import explain_str
+from inf2106_map_reduce_spark.plans import explain_str, run_with_plans
 
 
 def _scan_count(plan: str, table: str) -> int:
@@ -24,28 +24,21 @@ def _scan_count(plan: str, table: str) -> int:
 # ---------------------------------------------------------------------------
 
 
-def test_gbt3_is_one_scan_per_stage(spark, sf_oracle):
-    """Three boosting stages = exactly three data scans in the
-    lineage; each stage's winner reaches the next scan as a broadcast
-    scalar, never a driver action (the two-stage plan contract, one
-    level deeper). r15: the executed path collapses the data to its
-    joint bin histogram ONCE (stats._joint_bin_hist) and every stage
-    regroups the checkpointed cells, so the LIVE plan shows ZERO data
-    scans; the unexecuted ``checkpoint=False`` lineage pins the
-    three-scan contract."""
-    df = stats.lineitem_gbt_stages3(spark, sf_oracle)
+def test_gbt3_is_one_scan_per_stage(
+    spark, sf_oracle, cold_session_cache
+):
+    """Three boosting stages read the data ONCE: the data collapses to
+    its joint bin histogram (stats._joint_bin_hist) and every stage
+    regroups the checkpointed cells; each stage's winner reaches the
+    next stage as a broadcast scalar, never a driver action (the
+    two-stage plan contract, one level deeper). The LIVE plan shows
+    ZERO data scans; the one scan ran during construction."""
+    df, built = run_with_plans(spark, stats.lineitem_gbt_stages3, sf_oracle)
     plan = explain_str(df, "formatted")
     assert _scan_count(plan, "lineitem") == 0, plan
     assert "ExistingRDD" in plan  # the materialized cells + winners
     assert "CollectLimit" not in plan
-    from inf2106_map_reduce_spark.tables import load_table
-
-    li = load_table(spark, sf_oracle, "lineitem")
-    unexec = explain_str(
-        stats.gbt_boost(li, 3, checkpoint=False), "formatted"
-    )
-    assert _scan_count(unexec, "lineitem") == 3, unexec
-    assert "ExistingRDD" not in unexec
+    assert sum(_scan_count(p, "lineitem") for p in built) == 1, built
 
 
 def test_gbt_boost_matches_independent_reference_fuzz(spark):
@@ -412,20 +405,6 @@ def test_novelty_attribution_invariants(spark):
     # 'the quick brown' and 'quick brown fox' are owned by doc 1
     assert out[3]["n_novel"] == out[3]["n_shingles"] - 2
     assert 4 not in out  # < 3 words -> no shingles -> no row
-
-
-def test_plan_variants_expose_scan_lineage(spark, sf_oracle):
-    """The dump_plans overrides for the checkpoint-staged round-12
-    entries must show the REAL scan lineage (pushdown/pruning
-    evidence) — if a refactor re-checkpoints them, PLANS.md would
-    silently regenerate to a bare ExistingRDD (the r10 evidence-pin
-    discipline)."""
-    iso = stats.lineitem_isotonic_calibration_plan(spark, sf_oracle)
-    assert _scan_count(explain_str(iso, "formatted"), "lineitem") >= 1
-    enc = stats.lineitem_target_encoding_plan(spark, sf_oracle)
-    assert _scan_count(explain_str(enc, "formatted"), "lineitem") >= 1
-    nov = dedup.docs_ngram_novelty_plan(spark, sf_oracle)
-    assert _scan_count(explain_str(nov, "formatted"), "documents") >= 1
 
 
 def test_novelty_totals_partition_ownership(spark, sf_oracle):

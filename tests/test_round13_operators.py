@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from inf2106_map_reduce_spark import session
 from inf2106_map_reduce_spark.operators import stats
-from inf2106_map_reduce_spark.plans import explain_str
+from inf2106_map_reduce_spark.plans import explain_str, run_with_plans
 from inf2106_map_reduce_spark.streaming import stateful as stream_stateful
 from inf2106_map_reduce_spark.streaming import windows as stream_windows
 from inf2106_map_reduce_spark.tables import load_table
@@ -305,24 +305,23 @@ def test_encoding_reliability_routes_every_row(spark, sf_oracle):
         assert lo - 1e-9 <= r["mean_encoding"] <= hi + 1e-9, r
 
 
-def test_encoding_reliability_plan_shape(spark, sf_oracle):
+def test_encoding_reliability_plan_shape(
+    spark, sf_oracle, cold_session_cache
+):
     """Registry plan: the apply side is the ONE live lineitem scan,
     the grid arrives as the fit's checkpointed frame (ExistingRDD) —
-    the two-scan cost model with the fit paid once at construction.
-    The dump_plans variant exposes the raw lineage: the grid's THREE
-    complement consumers (category window, fold totals, global
-    totals) each replay the fit scan plus the apply scan = 4 static
-    scans — exactly the replay the checkpoint exists to collapse
-    (same evidence shape as the round-12 encoding pin)."""
-    df = stats.lineitem_encoding_reliability(spark, sf_oracle)
+    the two-scan cost model with the fit paid once at construction:
+    the grid's three complement consumers (category window, fold
+    totals, global totals) read the checkpoint, so the fit's one scan
+    is the only construction-time scan."""
+    df, built = run_with_plans(
+        spark, stats.lineitem_encoding_reliability, sf_oracle
+    )
     plan = explain_str(df, "formatted")
     assert _scan_count(plan, "lineitem") == 1, plan
     assert "ExistingRDD" in plan
     assert "CollectLimit" not in plan
-    unexec = stats.lineitem_encoding_reliability_plan(spark, sf_oracle)
-    plan2 = explain_str(unexec, "formatted")
-    assert _scan_count(plan2, "lineitem") == 4, plan2
-    assert "ExistingRDD" not in plan2
+    assert sum(_scan_count(p, "lineitem") for p in built) == 1, built
 
 
 def test_encoding_entries_share_one_session_grid(spark, sf_oracle):

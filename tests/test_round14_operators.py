@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from inf2106_map_reduce_spark.operators import stats
-from inf2106_map_reduce_spark.plans import explain_str
+from inf2106_map_reduce_spark.plans import explain_str, run_with_plans
 from inf2106_map_reduce_spark.streaming import windows as stream_windows
 from inf2106_map_reduce_spark.tables import load_table
 
@@ -481,30 +481,21 @@ def test_quantile_binned_frame_routes_every_row(spark, sf_oracle):
     assert stats_row["qty"] == stats.N_QTL_BUCKETS
 
 
-def test_quantile_gbt_plan_is_one_scan_per_stage(spark, sf_oracle):
-    """The LightGBM cost model survives the bin swap: K = 2 stages =
-    exactly 2 data scans in the lineage (the three bucket maps arrive
-    as checkpointed broadcasts, not rescans). r15: the executed path
-    collapses the data to its joint bin histogram ONCE
-    (stats._joint_bin_hist), so the LIVE plan shows ZERO data scans;
-    the unexecuted ``checkpoint=False`` trainer lineage pins the
-    two-scan contract."""
-    df = stats.lineitem_quantile_gbt(spark, sf_oracle)
+def test_quantile_gbt_plan_is_one_scan_per_stage(
+    spark, sf_oracle, cold_session_cache
+):
+    """The LightGBM cost model survives the bin swap: the data
+    collapses to its joint bin histogram ONCE (stats._joint_bin_hist)
+    and both stages regroup the checkpointed cells, so the LIVE plan
+    shows ZERO data scans. Construction reads lineitem four times:
+    one fine-histogram scan per bucket map (three features) plus the
+    joint histogram."""
+    df, built = run_with_plans(spark, stats.lineitem_quantile_gbt, sf_oracle)
     plan = explain_str(df, "formatted")
     assert plan.count("lineitem.parquet") == 0, plan
     assert "ExistingRDD" in plan  # checkpointed maps + stage winner
     assert "CollectLimit" not in plan
-    li = load_table(spark, sf_oracle, "lineitem")
-    unexec = explain_str(
-        stats.gbt_boost(
-            None,
-            2,
-            binned=stats._quantile_stump_binned(li),
-            checkpoint=False,
-        ),
-        "formatted",
-    )
-    assert unexec.count("lineitem.parquet") == 2, unexec
+    assert sum(p.count("lineitem.parquet") for p in built) == 4, built
 
 
 def test_segmented_encoding_stump_matches_per_segment_runs(
@@ -587,27 +578,20 @@ def test_quantile_tree_children_partition_the_data(spark, sf_oracle):
     assert total == n
 
 
-def test_quantile_tree_plan_is_one_scan_per_level(spark, sf_oracle):
-    """r15: the executed path collapses the data to its joint bin
-    histogram ONCE (stats._joint_bin_hist) and both levels regroup
-    the checkpointed cells, so the LIVE plan shows ZERO data scans;
-    the unexecuted ``checkpoint=False`` lineage pins the two-scan
-    contract."""
-    df = stats.lineitem_quantile_tree(spark, sf_oracle)
+def test_quantile_tree_plan_is_one_scan_per_level(
+    spark, sf_oracle, cold_session_cache
+):
+    """The data collapses to its joint bin histogram ONCE
+    (stats._joint_bin_hist) and both levels regroup the checkpointed
+    cells, so the LIVE plan shows ZERO data scans. Construction reads
+    lineitem four times: three bucket-map scans plus the joint
+    histogram."""
+    df, built = run_with_plans(spark, stats.lineitem_quantile_tree, sf_oracle)
     plan = explain_str(df, "formatted")
     assert plan.count("lineitem.parquet") == 0, plan
     assert "ExistingRDD" in plan  # checkpointed maps + root frame
     assert "CollectLimit" not in plan
-    li = load_table(spark, sf_oracle, "lineitem")
-    unexec = explain_str(
-        stats.tree_depth2(
-            None,
-            binned=stats._quantile_stump_binned(li),
-            checkpoint=False,
-        ),
-        "formatted",
-    )
-    assert unexec.count("lineitem.parquet") == 2, unexec
+    assert sum(p.count("lineitem.parquet") for p in built) == 4, built
 
 
 # ---------------------------------------------------------------------------

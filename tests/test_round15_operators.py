@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from inf2106_map_reduce_spark import session
 from inf2106_map_reduce_spark.operators import stats
-from inf2106_map_reduce_spark.plans import explain_str
+from inf2106_map_reduce_spark.plans import explain_str, run_with_plans
 from inf2106_map_reduce_spark.tables import load_table
 
 
@@ -49,33 +49,24 @@ def test_status_quantile_gbt_matches_per_segment_runs(spark, sf_oracle):
     assert n_checked == len(grouped) == 2 * len(segs)
 
 
-def test_status_quantile_gbt_plan_is_one_scan_per_stage(spark, sf_oracle):
-    """The grouped trainer keeps the LightGBM cost model: K = 2 stages
-    = exactly 2 lineage lineitem scans for ALL segments together (the
-    per-segment bucket maps arrive as checkpointed broadcasts, the
-    stage winner join is a broadcast on the segment key)."""
-    df = stats.lineitem_status_quantile_gbt(spark, sf_oracle)
+def test_status_quantile_gbt_plan_is_one_scan_per_stage(
+    spark, sf_oracle, cold_session_cache
+):
+    """The grouped trainer keeps the LightGBM cost model for ALL
+    segments together: the data collapses to its joint bin histogram
+    ONCE (stats._joint_bin_hist), so the live plan shows ZERO data
+    scans (the stage winner join is a broadcast on the segment key).
+    Construction reads lineitem four times: three per-segment
+    bucket-map scans plus the joint histogram."""
+    df, built = run_with_plans(
+        spark, stats.lineitem_status_quantile_gbt, sf_oracle
+    )
     plan = explain_str(df, "formatted")
-    # r15: the executed path collapses the data to its joint bin
-    # histogram ONCE (stats._joint_bin_hist) — live plan shows ZERO
-    # data scans; the unexecuted lineage pins the two-scan contract
     assert plan.count("lineitem.parquet") == 0, plan
     assert "ExistingRDD" in plan  # checkpointed cells + stage winner
     assert "CollectLimit" not in plan
     assert "BatchEvalPython" not in plan
-    unexec = explain_str(
-        stats.gbt_boost(
-            None,
-            2,
-            binned=stats._quantile_stump_binned(
-                _seg_lineitem(spark, sf_oracle), group_cols=("seg",)
-            ),
-            group_cols=("seg",),
-            checkpoint=False,
-        ),
-        "formatted",
-    )
-    assert unexec.count("lineitem.parquet") == 2, unexec
+    assert sum(p.count("lineitem.parquet") for p in built) == 4, built
 
 
 def test_status_quantile_gbt_emits_full_trajectories(spark, sf_oracle):
@@ -160,32 +151,22 @@ def test_status_quantile_tree_matches_per_segment_runs(spark, sf_oracle):
 
 
 def test_status_quantile_tree_plan_is_one_scan_per_level(
-    spark, sf_oracle
+    spark, sf_oracle, cold_session_cache
 ):
-    """Two levels = exactly 2 lineage lineitem scans for ALL segments
-    (per-segment maps are checkpointed broadcasts; the routing join
-    broadcasts the per-segment root frame)."""
-    df = stats.lineitem_status_quantile_tree(spark, sf_oracle)
+    """Both levels regroup the checkpointed joint bin cells
+    (stats._joint_bin_hist) for ALL segments, so the live plan shows
+    ZERO data scans (the routing join broadcasts the per-segment root
+    frame). Construction reads lineitem four times: three per-segment
+    bucket-map scans plus the joint histogram."""
+    df, built = run_with_plans(
+        spark, stats.lineitem_status_quantile_tree, sf_oracle
+    )
     plan = explain_str(df, "formatted")
-    # r15: both levels regroup the checkpointed joint bin cells
-    # (stats._joint_bin_hist) — live plan shows ZERO data scans; the
-    # unexecuted lineage pins the two-scan contract
     assert plan.count("lineitem.parquet") == 0, plan
     assert "ExistingRDD" in plan
     assert "CollectLimit" not in plan
     assert "BatchEvalPython" not in plan
-    unexec = explain_str(
-        stats.tree_depth2(
-            None,
-            binned=stats._quantile_stump_binned(
-                _seg_lineitem(spark, sf_oracle), group_cols=("seg",)
-            ),
-            group_cols=("seg",),
-            checkpoint=False,
-        ),
-        "formatted",
-    )
-    assert unexec.count("lineitem.parquet") == 2, unexec
+    assert sum(p.count("lineitem.parquet") for p in built) == 4, built
 
 
 def test_status_quantile_gbt3_is_greedy_prefix_stable(spark, sf_oracle):
@@ -215,30 +196,20 @@ def test_status_quantile_gbt3_is_greedy_prefix_stable(spark, sf_oracle):
 
 
 def test_status_quantile_gbt3_plan_is_one_scan_per_stage(
-    spark, sf_oracle
+    spark, sf_oracle, cold_session_cache
 ):
-    df = stats.lineitem_status_quantile_gbt3(spark, sf_oracle)
+    df, built = run_with_plans(
+        spark, stats.lineitem_status_quantile_gbt3, sf_oracle
+    )
     plan = explain_str(df, "formatted")
-    # r15: every stage regroups the checkpointed joint bin cells
+    # every stage regroups the checkpointed joint bin cells
     # (stats._joint_bin_hist) — live plan shows ZERO data scans; the
-    # unexecuted lineage pins the three-scan contract
+    # third stage adds no scan to the four of the K = 2 trainer
     assert plan.count("lineitem.parquet") == 0, plan
     assert "ExistingRDD" in plan
     assert "CollectLimit" not in plan
     assert "BatchEvalPython" not in plan
-    unexec = explain_str(
-        stats.gbt_boost(
-            None,
-            3,
-            binned=stats._quantile_stump_binned(
-                _seg_lineitem(spark, sf_oracle), group_cols=("seg",)
-            ),
-            group_cols=("seg",),
-            checkpoint=False,
-        ),
-        "formatted",
-    )
-    assert unexec.count("lineitem.parquet") == 3, unexec
+    assert sum(p.count("lineitem.parquet") for p in built) == 4, built
 
 
 def test_grouped_gbt_rejects_reserved_group_cols(spark, sf_oracle):

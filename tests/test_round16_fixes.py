@@ -262,8 +262,7 @@ def test_quantile_map_cache_contract(spark, sf_smoke):
     """The registry bucket-map cache follows the encoding-grid
     idiom: same cache_key + parameters → the SAME checkpointed
     frame object (no refit); different group_cols → different fits;
-    checkpoint=False (the plan-inspection path) and keyless calls
-    never cache."""
+    keyless calls never cache."""
     from inf2106_map_reduce_spark.tables import load_table
 
     li = stats.load_table(spark, sf_smoke, "lineitem")
@@ -284,15 +283,11 @@ def test_quantile_map_cache_contract(spark, sf_smoke):
     )
     assert mg is not m1
     n_before = len(session._cache_entries)
-    lazy = stats.quantile_bucket_map(
-        li, "l_extendedprice", stats.QSTUMP_FEATURES[2][2],
-        checkpoint=False, cache_key=key,
-    )
     keyless = stats.quantile_bucket_map(
         li, "l_extendedprice", stats.QSTUMP_FEATURES[2][2],
     )
     assert len(session._cache_entries) == n_before
-    assert lazy is not m1 and keyless is not m1
+    assert keyless is not m1
     # the cached fit is the same map a fresh keyless fit produces
     assert sorted(map(tuple, m1.collect())) == sorted(
         map(tuple, keyless.collect())

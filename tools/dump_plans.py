@@ -1,5 +1,6 @@
 """Regenerate PLANS.md: the formatted physical plan of every bench
-headline query at sf0.01, so the scale claims in SCALING.md can be
+headline query at sf0.01, plus the plans of the SQL executions that
+ran while each was built, so the scale claims in SCALING.md can be
 checked against what Catalyst actually produces (pushed filters,
 broadcast joins, shuffle counts, whole-stage codegen spans).
 
@@ -18,6 +19,7 @@ from inf2106_map_reduce_spark.plans.inspect import (  # noqa: E402
     explain_str,
     has_broadcast_join,
     pushed_filters,
+    run_with_plans,
     shuffle_count,
 )
 from inf2106_map_reduce_spark.queries import REGISTRY  # noqa: E402
@@ -140,116 +142,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     spark = get_spark(app_name="dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
-    # r15: the boosting/tree trainers materialize each stage's
-    # aggregate-sized winner frame (stats.MATERIALIZE_STAGE_WINNERS);
-    # PLANS.md documents the UNEXECUTED scan lineage, so flip the
-    # module flag for the whole dump — every gbt/tree entry then
-    # shows its full one-scan-per-stage chain (the same device as the
-    # checkpoint=False plan variants below, without one named variant
-    # per trainer entry).
-    from inf2106_map_reduce_spark.operators import stats as _stats
-
-    _stats.MATERIALIZE_STAGE_WINNERS = False
-    names = [
-        n
-        for n in DETAIL_QUERIES
-        if not n.startswith("streaming_") and n not in PSEUDO_STAGES
-    ]
-    # Entries whose registry fn EXECUTES eagerly and returns
-    # materialized rows (the frozen-QE checkpoint pattern) would dump
-    # a bare ExistingRDD scan here — inspect their dedicated
-    # plan-inspection helper instead, which returns the frozen,
-    # UNEXECUTED plan.
-    from inf2106_map_reduce_spark.functions.dedup import (
-        docs_ngram_novelty_plan,
-    )
-    from inf2106_map_reduce_spark.operators.stats import (
-        lineitem_encoding_reliability_plan,
-        lineitem_gbt_isotonic_plan,
-        lineitem_isotonic_calibration_plan,
-        lineitem_status_gbt_isotonic_plan,
-        lineitem_status_isotonic_plan,
-        lineitem_target_encoding_plan,
-    )
-    from inf2106_map_reduce_spark.sources.roundtrip import (
-        bloom_runtime_join_plan,
-    )
-
-    plan_overrides = {
-        "bloom_runtime_join": bloom_runtime_join_plan,
-        # round-12 checkpoint-staged entries: dump the UNEXECUTED
-        # lineage (checkpoint disabled) so the scan evidence stays in
-        # PLANS.md; the registry fns themselves return the post-
-        # checkpoint epilogue (zero-scan, pinned by
-        # tests/test_round12_operators.py)
-        "lineitem_isotonic_calibration": lineitem_isotonic_calibration_plan,
-        "lineitem_target_encoding": lineitem_target_encoding_plan,
-        "docs_ngram_novelty": docs_ngram_novelty_plan,
-        # round-13: same pattern — the reliability audit wraps the
-        # encoding's checkpointed grid; the per-segment isotonic wraps
-        # the checkpointed histogram index
-        "lineitem_encoding_reliability": lineitem_encoding_reliability_plan,
-        "lineitem_status_isotonic": lineitem_status_isotonic_plan,
-        # round-16: the GBT-margin calibrations checkpoint their
-        # bucket maps and histogram index; dump the unexecuted lineage
-        "lineitem_status_gbt_isotonic": lineitem_status_gbt_isotonic_plan,
-        "lineitem_gbt_isotonic": lineitem_gbt_isotonic_plan,
-    }
-    dfs = {
-        n: plan_overrides.get(n, REGISTRY[n].fn)(spark, sf_dir)
-        for n in names
-    }
-    out = [
-        "# PLANS — formatted physical plans of the bench headline queries",
-        "",
-        f"Generated by `tools/dump_plans.py` at `{sf_dir}`. Streaming",
-        "entries are omitted (their micro-batch plans are only",
-        "materialized inside query execution); their state sizing is",
-        "documented in `streaming/runtime.py`. Cross-document dedup",
-        "entries (`dedup_minhash_candidates`, `dedup_clusters`, ...)",
-        "show their post-cache plan — a scan of the session-scoped",
-        "localCheckpoint'd candidate-graph stage (`functions/dedup.py`,",
-        "`_doc_stage`). The build cost is its own named bench line",
-        "(`dedup_stage_build` — bench.py forces the build via",
-        "`dedup.build_registry_stage_cache` before timing the registry),",
-        "so consumer lines measure only their own derivation and",
-        "SCALING.md documents the build's shape.",
-        "",
-        "Documents-scan consumers carry one extra Exchange at TEST",
-        "scale only: `tables.ensure_parallelism` repartitions the",
-        "single-split small file up to core count before per-row-heavy",
-        "work (SCALING.md principle 5). The node is added only when the",
-        "scan yields fewer splits than cores — at 100 TB the condition",
-        "is false and the Exchange is structurally absent.",
-        "",
-        "| query | shuffles | broadcast join | pushed filters |",
-        "|---|---|---|---|",
-    ]
-    for name in names:
-        df = dfs[name]
-        out.append(
-            f"| {name} | {shuffle_count(df)} "
-            f"| {'yes' if has_broadcast_join(df) else 'no'} "
-            f"| {'yes' if pushed_filters(df) else 'no'} |"
-        )
-    out.append("")
-    for name in names:
-        out.append(f"## {name}")
-        out.append("")
-        out.append("```")
-        out.append(explain_str(dfs[name]).strip())
-        out.append("```")
-        out.append("")
-
-    # ---- anti-pattern audit over EVERY batch entry -----------------
-    # The scale-killer sweep the per-round review runs by hand,
-    # automated: a non-broadcast CartesianProduct, a row-at-a-time
-    # Python UDF (BatchEvalPython — Arrow/pandas lanes ArrowEvalPython
-    # / *InPandas are the FAST path and not flagged), or a CollectLimit
-    # in any registry entry's plan is a defect at 100 TB. Streaming
-    # entries are excluded for the same reason as above (their
-    # registry fns EXECUTE a stream; the batch transform they share is
-    # audited via its batch sibling).
     # entries whose flag is a DOCUMENTED design decision, not a
     # regression — each must justify itself in its own docstring
     sanctioned = {
@@ -259,26 +151,24 @@ def main() -> None:
         # entry may use this tier
         "udtf_bigrams": "row-python-udf",
     }
+    # One pass over every batch entry: build it once, read its
+    # returned plan and the plans that ran while it was built, and
+    # keep only the strings. Streaming entries are excluded (their
+    # registry fns EXECUTE a stream; the batch transform they share is
+    # audited via its batch sibling), as are the pseudo-stage lines.
+    detail = set(DETAIL_QUERIES)
+    summary: dict[str, str] = {}
+    sections: dict[str, list[str]] = {}
     offenders: list[str] = []
     unsanctioned = 0
     audited = 0
     for name in REGISTRY:
         if name.startswith("streaming_") or name in PSEUDO_STAGES:
             continue
-        plan = explain_str(
-            plan_overrides.get(name, REGISTRY[name].fn)(spark, sf_dir),
-            "formatted",
-        )
+        df, built = run_with_plans(spark, REGISTRY[name].fn, sf_dir)
+        plan = explain_str(df, "formatted")
         audited += 1
-        flags = [
-            flag
-            for flag, marker in (
-                ("cartesian", "CartesianProduct"),
-                ("row-python-udf", "BatchEvalPython"),
-                ("collect-limit", "CollectLimit"),
-            )
-            if marker in plan
-        ]
+        flags = audit_flags(plan, built)
         if flags:
             ok = sanctioned.get(name) == ", ".join(flags)
             if not ok:
@@ -287,13 +177,67 @@ def main() -> None:
                 f"| {name} | {', '.join(flags)} "
                 f"| {'yes' if ok else 'NO'} |"
             )
+        if name not in detail:
+            continue
+        summary[name] = (
+            f"| {name} | {shuffle_count(df)} "
+            f"| {'yes' if has_broadcast_join(df) else 'no'} "
+            f"| {'yes' if pushed_filters(df) else 'no'} | {len(built)} |"
+        )
+        body = [f"## {name}", "", "```", plan.strip(), "```", ""]
+        for i, text in enumerate(built, 1):
+            body += [
+                f"### {name} — construction-time execution {i}",
+                "",
+                "```",
+                text.strip(),
+                "```",
+                "",
+            ]
+        sections[name] = body
+    names = [n for n in DETAIL_QUERIES if n in summary]
+    out = [
+        "# PLANS — formatted physical plans of the bench headline queries",
+        "",
+        f"Generated by `tools/dump_plans.py` at `{sf_dir}`. Streaming",
+        "entries are omitted (their micro-batch plans are only",
+        "materialized inside query execution); their state sizing is",
+        "documented in `streaming/runtime.py`. Each entry shows the plan",
+        "of the frame it returns, then the plans of the SQL executions",
+        "that ran while it was built (eager localCheckpoints of staged",
+        "aggregates, bounded probes): an entry that stages its work",
+        "returns a plan over ExistingRDD scans, and its data scans are",
+        "in those construction-time executions. Stages are shared per",
+        "session (`session.session_cache`), so a stage appears under the",
+        "first entry that built it in registry (name) order (and only",
+        "detail entries are printed below; the audit covers all). The",
+        "cross-document dedup candidate-graph stage (`functions/dedup.py`,",
+        "`_doc_stage`) is thus audited under the first dedup consumer;",
+        "bench.py times its build on its own line (`dedup_stage_build`)",
+        "and SCALING.md documents its shape.",
+        "",
+        "Documents-scan consumers carry one extra Exchange at TEST",
+        "scale only: `tables.ensure_parallelism` repartitions the",
+        "single-split small file up to core count before per-row-heavy",
+        "work (SCALING.md principle 5). The node is added only when the",
+        "scan yields fewer splits than cores — at 100 TB the condition",
+        "is false and the Exchange is structurally absent.",
+        "",
+        "| query | shuffles | broadcast join | pushed filters "
+        "| construction-time executions |",
+        "|---|---|---|---|---|",
+        *(summary[n] for n in names),
+        "",
+    ]
+    for name in names:
+        out.extend(sections[name])
     out.append("## Anti-pattern audit — every batch entry")
     out.append("")
     out.append(
         f"{audited} batch entries audited for non-broadcast cartesian "
-        "products, row-at-a-time Python UDFs (BatchEvalPython), and "
-        "CollectLimit; checkpoint-staged entries audited through their "
-        "unexecuted plan variants where defined. "
+        "products and row-at-a-time Python UDFs (BatchEvalPython) in "
+        "the returned plan and in every construction-time execution, "
+        "and for CollectLimit in the returned plan. "
         f"**{len(offenders)} flagged, {unsanctioned} unsanctioned.**"
     )
     out.append("")
@@ -308,6 +252,35 @@ def main() -> None:
     print(f"wrote PLANS.md ({audited} entries audited, "
           f"{len(offenders)} flagged)")
     spark.stop()
+
+
+#: The anti-pattern audit's markers: ``(flag, plan marker, also in
+#: construction-time plans)``. A non-broadcast CartesianProduct or a
+#: row-at-a-time Python UDF (BatchEvalPython — the Arrow/pandas lanes
+#: ArrowEvalPython / *InPandas are the FAST path and not flagged) is
+#: a defect at 100 TB wherever it runs, so it is flagged in the
+#: returned plan and in every plan that ran while the entry was
+#: built. CollectLimit is flagged in the returned plan only: bounded
+#: ``.first()`` probes during construction are the sanctioned way to
+#: read an aggregate-sized result back to the driver.
+AUDIT_MARKERS = (
+    ("cartesian", "CartesianProduct", True),
+    ("row-python-udf", "BatchEvalPython", True),
+    ("collect-limit", "CollectLimit", False),
+)
+
+
+def audit_flags(
+    returned_plan: str, construction_plans: list[str]
+) -> list[str]:
+    """The audit flags of one registry entry, from its returned plan
+    and its construction-time plans (:func:`run_with_plans`)."""
+    built = "\n".join(construction_plans)
+    return [
+        flag
+        for flag, marker, anywhere in AUDIT_MARKERS
+        if marker in returned_plan or (anywhere and marker in built)
+    ]
 
 
 if __name__ == "__main__":
