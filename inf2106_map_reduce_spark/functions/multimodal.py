@@ -26,11 +26,6 @@ from pyspark.sql import functions as F
 
 from inf2106_map_reduce_spark.tables import load_table
 
-MEDIA_SCHEMA = (
-    "doc_id bigint, media_type string, payload binary, "
-    "meta struct<width:int, height:int, n_bytes:bigint>"
-)
-
 FEATURE_SCHEMA = (
     "doc_id bigint, media_type string, n_bytes bigint, "
     "byte_mean double, header_hex string, "

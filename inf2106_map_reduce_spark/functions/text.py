@@ -345,8 +345,10 @@ def bpe_train_merges(
     Zipf-bounded, not corpus-sized; one corpus-wide shuffle builds it,
     after which every round is a vocab-scale aggregate + a narrow
     replace. The per-round driver collect is the top-1 pair (3
-    values) — the k-means centroid pattern. Ties break
-    deterministically: count desc, then (token_a, token_b) asc.
+    values) — the k-means centroid pattern — together with the
+    previous round's symbol total, so ``rounds`` merges cost
+    ``rounds + 1`` collects. Ties break deterministically: count
+    desc, then (token_a, token_b) asc.
     """
     norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
     w = df.select(F.explode(F.split(norm, " ")).alias("word")).filter(
@@ -381,20 +383,42 @@ def bpe_train_merges(
             ),
         ),
     ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-    out_rows = []
+    out_rows: list[tuple] = []
     v = vocab
-    for r in range(1, rounds + 1):
-        pairs = v.select("wc", F.explode(pair_arr).alias("p"))
-        top = (
-            pairs.groupBy("p.a", "p.b")
-            .agg(F.sum("wc").alias("n"))
-            .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
+    # One collect per round: round r's top pair, plus (as a row with
+    # null tokens) the symbol total of round r-1's merged vocabulary —
+    # its corpus_symbols_after. The final query is that total alone.
+    for r in range(1, rounds + 2):
+        parts = []
+        if r <= rounds:
+            parts.append(
+                v.select("wc", F.explode(pair_arr).alias("p"))
+                .groupBy("p.a", "p.b")
+                .agg(F.sum("wc").alias("n"))
+                .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
+                .limit(1)
+            )
+        if out_rows:
+            parts.append(
+                v.agg(F.sum(F.col("wc") * F.size(symbols)).alias("n")).select(
+                    F.lit(None).cast("string").alias("a"),
+                    F.lit(None).cast("string").alias("b"),
+                    "n",
+                )
+            )
+        if not parts:
             break
-        a, b, n = top[0]["a"], top[0]["b"], top[0]["n"]
+        q = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+        top = None
+        for row in q.collect():
+            if row["a"] is None:
+                out_rows[-1] += (int(row["n"]),)
+            else:
+                top = row
+        if top is None:
+            break
+        a, b = top["a"], top["b"]
+        out_rows.append((r, a, b, int(top["n"])))
         v = v.select(
             "wc",
             F.replace(
@@ -403,10 +427,6 @@ def bpe_train_merges(
                 F.lit(f" {a}{b} "),
             ).alias("seq"),
         )
-        after = v.agg(
-            F.sum(F.col("wc") * F.size(symbols)).alias("t")
-        ).collect()[0]["t"]
-        out_rows.append((r, a, b, int(n), int(after)))
     spark = df.sparkSession
     return spark.createDataFrame(
         out_rows,

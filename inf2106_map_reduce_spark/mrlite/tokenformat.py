@@ -26,8 +26,6 @@ from pyspark.sql import functions as F
 #: Default key for raw (un-piped) tokens — ``TokenRecordReader.java:33``.
 NONE_KEY = "none"
 
-KV_SCHEMA = "key string, value string"
-
 
 #: The reference reader's fixed word buffer (``TokenRecordReader.java:37``
 #: ``buffWord = new char[1000]``): a longer token is silently emitted as

@@ -26,9 +26,11 @@ MapReduce statistics job, re-expressed declaratively.
 from __future__ import annotations
 
 import re
+from decimal import ROUND_HALF_UP, Context, Decimal
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from inf2106_map_reduce_spark.session import session_cache
 from inf2106_map_reduce_spark.tables import load_table
@@ -1565,20 +1567,17 @@ def gini_gain_sql() -> str:
     )
 
 
-def _cum_counts(
-    hist: DataFrame, node_cols: list[str], extra: tuple[str, ...] = ()
-) -> DataFrame:
+def _cum_counts(hist: DataFrame, node_cols: list[str]) -> DataFrame:
     """Cumulative boundary counts over a (node..., feature, bin, n,
-    pos[, extra...]) histogram: per candidate boundary ``bin <=
-    split_bin`` the left-side prefix sums (``nl``/``posl``/``<c>l``)
-    and the node totals (``nt``/``post``/``<c>t``) — one window pass
-    over histogram rows, empty-child boundaries dropped. Both
-    histogram-split criteria (Gini stump/tree, SSE boosting) consume
-    this frame."""
+    pos) histogram: per candidate boundary ``bin <= split_bin`` the
+    left-side prefix sums (``nl``/``posl``) and the node totals
+    (``nt``/``post``) — one window pass over histogram rows,
+    empty-child boundaries dropped. The Gini split search
+    (:func:`_split_gains`) consumes this frame."""
     part = [*node_cols, "feature"]
     w_cum = Window.partitionBy(*part).orderBy("bin")
     w_all = Window.partitionBy(*part)
-    cols = [
+    return hist.select(
         *node_cols,
         "feature",
         F.col("bin").alias("split_bin"),
@@ -1586,11 +1585,7 @@ def _cum_counts(
         F.sum("pos").over(w_cum).alias("posl"),
         F.sum("n").over(w_all).alias("nt"),
         F.sum("pos").over(w_all).alias("post"),
-    ]
-    for c in extra:
-        cols.append(F.sum(c).over(w_cum).alias(f"{c}l"))
-        cols.append(F.sum(c).over(w_all).alias(f"{c}t"))
-    return hist.select(*cols).filter(F.col("nl") < F.col("nt"))
+    ).filter(F.col("nl") < F.col("nt"))
 
 
 def _split_gains(hist: DataFrame, node_cols: list[str]) -> DataFrame:
@@ -1666,12 +1661,14 @@ def _joint_bin_hist(binned: DataFrame, gc: list[str]) -> DataFrame:
     """Collapse a ``_stump_binned``-contract frame to its EXACT joint
     bin histogram: one row per occupied (group..., b_qty, b_disc,
     b_price) cell carrying the cell's row count and positive count
-    (``_jn``/``_jpos`` — both exact integers), eagerly checkpointed.
+    (``_jn``/``_jpos`` — both exact integers). Lazy: :func:`gbt_boost`
+    collects it, and callers that regroup the cells in Spark
+    (:func:`tree_depth2`, :func:`_qgbt_scored`) checkpoint it first.
 
     r15 OPTIMIZATION (guide §1.2 "the distributed algorithm", §2.3
     "aggregate before you shuffle"): the multi-stage histogram
-    trainers (gbt_boost, gbt_two_stage, tree_depth2) previously
-    scanned the DATA once per stage/level, yet each stage's
+    trainers (gbt_boost, tree_depth2) previously scanned the DATA
+    once per stage/level, yet each stage's
     per-(feature, bin) histogram — including the carried membership
     sums — is a pure function of the three bin columns, and therefore
     of this joint histogram: a stage's membership indicator ``m_i``
@@ -1680,7 +1677,8 @@ def _joint_bin_hist(binned: DataFrame, gc: list[str]) -> DataFrame:
     arithmetic end to end — no FP is introduced or reordered).
     Aggregating the joint cells ONCE (≤ Π|bins| = 4096 rows on the
     16-bin fixed grid, ≤ |groups|·10³ on the equi-depth buckets) and
-    re-grouping the checkpointed cells per stage replaces K+1 full
+    deriving every stage from the cells (the booster on the driver,
+    the tree by regrouping the checkpointed cells) replaces K+1 full
     data scans with ONE — the LightGBM-style histogram-reuse step.
     At 100 TB the win is the same or larger: the shuffle already
     carried only partial histograms; now the later stages don't
@@ -1695,7 +1693,6 @@ def _joint_bin_hist(binned: DataFrame, gc: list[str]) -> DataFrame:
             F.count(F.lit(1)).alias("_jn"),
             F.sum("y").cast("bigint").alias("_jpos"),
         )
-        .localCheckpoint(eager=True)
     )
 
 
@@ -1820,7 +1817,7 @@ def tree_depth2(
     # (see _joint_bin_hist) — the level-2 routing is a pure function
     # of the bin columns, so the child histograms are exact weighted
     # regroups of the same cells
-    src = _joint_bin_hist(binned, gc)
+    src = _joint_bin_hist(binned, gc).localCheckpoint(eager=True)
     gains1 = _split_gains(_stump_hist_from_joint(src, gc), gc)
     w_glob = Window.partitionBy(*gc).orderBy(
         F.col("gain").desc(), "feature", "split_bin"
@@ -1837,9 +1834,9 @@ def tree_depth2(
         )
     )
     # materialize the ≤ |groups|-row root frame before level 2 joins
-    # it back (see gbt_boost — same values, the level-2 plan compiles
-    # against a tiny ExistingRDD instead of re-nesting the level-1
-    # histogram subtree in its broadcast)
+    # it back (same values; the level-2 plan compiles against a tiny
+    # ExistingRDD instead of re-nesting the level-1 histogram subtree
+    # in its broadcast)
     root = root.localCheckpoint(eager=True)
     is_left = None
     for name, *_ in STUMP_BINS:
@@ -1900,185 +1897,85 @@ def lineitem_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: stage-2 residual expression stays bit-identical across engines.
 GBT_SHRINKAGE = 0.5
 
+_SCALE9 = Decimal("1e-9")
+#: Wide enough that quantizing any finite double to scale 9 keeps
+#: every digit (the default 28 digits raise at |x| >= 1e19).
+_ROUND9_CONTEXT = Context(prec=400)
 
-def gbt_two_stage(df: DataFrame) -> DataFrame:
-    """Two-stage gradient boosting with stump base learners under
-    SQUARED loss — the GBDT outer loop the histogram primitive exists
-    for, in its exactly-replayable form.
 
-    Squared loss is the deliberate choice over AdaBoost/log-loss:
-    its pseudo-residuals and leaf values are RATIOS OF COUNTS, not
-    ``exp``/``ln`` of them, so every stage stays inside the repo's
-    exact cross-engine arithmetic (last-ulp libm differences in
-    transcendentals could silently flip an argmax; divisions of
-    identical integers cannot).
+def _round9(jvm, x: float) -> float:
+    """Spark's ``round(x, 9)`` of a double, evaluated on the driver.
 
-    Stage 0 is the global mean ``ybar = post/nt``. Stage 1 fits a
-    stump to ``y − ybar`` by SSE reduction — the split maximizing
-    ``sum_r_L²/n_L + sum_r_R²/n_R`` — with the bin residual sums in
-    CLOSED FORM over histogram integers: ``sum_r(bin) = pos − n·ybar``
-    (never a per-row double sum, so no summation-order sensitivity).
-    Stage 2 re-fits to ``y − ybar − ν·γ_leaf(x)``; again the bin sums
-    collapse to integers times the (shared-expression) stage-1
-    doubles: ``(pos − n·ybar) − ν·(n_L1·γ_L + (n − n_L1)·γ_R)`` where
-    ``n_L1`` counts the bin's rows that fell in the stage-1 left
-    leaf — the ONLY extra histogram column stage 2 needs.
+    Spark rounds ``java.math.BigDecimal.valueOf(x)`` HALF_UP at scale
+    9. ``valueOf`` goes through Java's ``Double.toString``, which on
+    Java 17 is not always the shortest decimal (JDK-4511638:
+    2.82879384806159E17 prints as 2.82879384806159008E17), so the
+    string is taken from the JVM: py4j returns that BigDecimal as an
+    exact ``Decimal``. One py4j call per value. Adding 0.0 turns a
+    negative value rounded to zero into +0.0, as Spark's BigDecimal
+    result has no negative zero."""
+    d = jvm.java.math.BigDecimal.valueOf(x)
+    return float(d.quantize(_SCALE9, ROUND_HALF_UP, _ROUND9_CONTEXT)) + 0.0
 
-    Plan: ONE data scan total — both stages' histograms are exact
-    weighted regroups of the checkpointed joint bin cells
-    (:func:`_joint_bin_hist`; stage 2's ``l1`` routing is a pure
-    function of the bin columns), with the stage-1 choice still
-    joined back as a broadcast scalar; all split search runs on
-    histogram rows.
 
-    Returns one row per stage: ``(stage, feature, split_bin, n_left,
-    n_right, gamma_left, gamma_right, score)`` — γ published rounded
-    to 9; ranking uses the round-9 score with (feature, split_bin)
-    tie-break."""
-    # one joint-bin collapse serves both stages (see _joint_bin_hist)
-    # — stage 2's l1 routing is a pure function of the bin columns, so
-    # its histogram is an exact weighted regroup of the same cells
-    src = _joint_bin_hist(_stump_binned(df), [])
-    cum1 = _cum_counts(_stump_hist_from_joint(src, []), [])
-    nl, posl, nt, post = (F.col(c) for c in ("nl", "posl", "nt", "post"))
-    ybar = post / nt
-    sum_rl = posl - nl * ybar
-    sum_rr = (post - posl) - (nt - nl) * ybar
-    score1 = F.round(
-        (sum_rl * sum_rl) / nl + (sum_rr * sum_rr) / (nt - nl), 9
-    )
-    w_glob = Window.orderBy(F.col("score").desc(), "feature", "split_bin")
-    s1 = cum1.select(
-        "feature",
-        "split_bin",
-        nl.alias("nl"),
-        nt.alias("nt"),
-        score1.alias("score"),
-        (sum_rl / nl).alias("g_l"),
-        (sum_rr / (nt - nl)).alias("g_r"),
-        ybar.alias("ybar"),
-    )
-    r1 = (
-        s1.select("*", F.row_number().over(w_glob).alias("_rg"))
-        .filter(F.col("_rg") == 1)
-        .select(
-            F.col("feature").alias("root_feature"),
-            F.col("split_bin").alias("root_bin"),
-            F.col("nl").alias("n_left_1"),
-            (F.col("nt") - F.col("nl")).alias("n_right_1"),
-            F.col("score").alias("score_1"),
-            "g_l",
-            "g_r",
-            "ybar",
-        )
-    )
-    # materialize the 1-row stage-1 winner before stage 2 joins it
-    # back (see gbt_boost)
-    r1 = r1.localCheckpoint(eager=True)
-    is_left = None
-    for name, *_ in STUMP_BINS:
-        term = (F.col("root_feature") == name) & (
-            F.col(f"b_{name}") <= F.col("root_bin")
-        )
-        is_left = term if is_left is None else is_left | term
-    staged = (
-        src
-        .crossJoin(F.broadcast(r1))
-        .select(
-            "root_feature",
-            "root_bin",
-            "n_left_1",
-            "n_right_1",
-            "score_1",
-            "g_l",
-            "g_r",
-            "ybar",
-            is_left.cast("int").alias("l1"),
-            *[f"b_{name}" for name, *_ in STUMP_BINS],
-            "_jn",
-            "_jpos",
-        )
-    )
-    carry = [
-        "root_feature",
-        "root_bin",
-        "n_left_1",
-        "n_right_1",
-        "score_1",
-        "g_l",
-        "g_r",
-        "ybar",
-    ]
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(name).alias("feature"), F.col(f"b_{name}").alias("bin")
-            )
-            for name, *_ in STUMP_BINS
-        ]
-    )
-    hist2 = (
-        staged.select(
-            *carry, F.explode(pairs).alias("p"), "_jn", "_jpos", "l1"
-        )
-        .groupBy(*carry, "p.feature", "p.bin")
-        .agg(
-            F.sum("_jn").alias("n"),
-            F.sum("_jpos").alias("pos"),
-            F.sum(F.col("l1") * F.col("_jn")).alias("nl1"),
-        )
-    )
-    cum2 = _cum_counts(hist2, carry, extra=("nl1",))
-    nl1l, nl1t = F.col("nl1l"), F.col("nl1t")
-    gl, gr, yb = F.col("g_l"), F.col("g_r"), F.col("ybar")
-    nu = F.lit(GBT_SHRINKAGE)
-    sum_r2l = (posl - nl * yb) - nu * (nl1l * gl + (nl - nl1l) * gr)
-    sum_r2t = (post - nt * yb) - nu * (nl1t * gl + (nt - nl1t) * gr)
-    sum_r2r = sum_r2t - sum_r2l
-    score2 = F.round(
-        (sum_r2l * sum_r2l) / nl + (sum_r2r * sum_r2r) / (nt - nl), 9
-    )
-    w_glob2 = Window.orderBy(F.col("score").desc(), "feature", "split_bin")
-    s2 = cum2.select(
-        *carry,
-        "feature",
-        "split_bin",
-        nl.alias("nl"),
-        nt.alias("nt"),
-        score2.alias("score"),
-        (sum_r2l / nl).alias("g2_l"),
-        (sum_r2r / (nt - nl)).alias("g2_r"),
-    )
-    r2 = s2.select("*", F.row_number().over(w_glob2).alias("_rg")).filter(
-        F.col("_rg") == 1
-    )
-    # both stage rows explode out of the ONE winning row — a unionAll
-    # of two selects over r2 would duplicate the whole two-scan
-    # subtree in the plan (4 scans), defeating the one-scan-per-stage
-    # contract the plan test pins
-    rows = F.array(
-        F.struct(
-            F.lit(1).alias("stage"),
-            F.col("root_feature").alias("feature"),
-            F.col("root_bin").alias("split_bin"),
-            F.col("n_left_1").alias("n_left"),
-            F.col("n_right_1").alias("n_right"),
-            F.round(F.col("g_l"), 9).alias("gamma_left"),
-            F.round(F.col("g_r"), 9).alias("gamma_right"),
-            F.col("score_1").alias("score"),
-        ),
-        F.struct(
-            F.lit(2).alias("stage"),
-            F.col("feature").alias("feature"),
-            F.col("split_bin").alias("split_bin"),
-            F.col("nl").alias("n_left"),
-            (F.col("nt") - F.col("nl")).alias("n_right"),
-            F.round(F.col("g2_l"), 9).alias("gamma_left"),
-            F.round(F.col("g2_r"), 9).alias("gamma_right"),
-            F.col("score").alias("score"),
-        ),
-    )
-    return r2.select(F.explode(rows).alias("s")).select("s.*")
+def _boost_group(jvm, cells: list, n_stages: int):
+    """The K-stage recursion over one group's joint-bin cells
+    ``(bins, n, pos)``, ``bins`` in :data:`STUMP_BINS` order. Returns
+    ``(winners, ybar)`` with one unrounded ``(feature, split_bin,
+    n_left, n_right, score, gamma_left, gamma_right)`` per stage, or
+    None when some stage has no candidate split.
+
+    Per stage, each (feature, bin) sums the cells' ``n``, ``pos`` and,
+    for every earlier stage ``i``, the count in stage i's left leaf.
+    Every double is built from those integers by the left-associated
+    expression the oracle renders (``_gbt_boost_oracle``), and ranking
+    is by (round-9 score desc, feature, split_bin)."""
+    nu = GBT_SHRINKAGE
+    names = [name for name, *_ in STUMP_BINS]
+    winners: list[tuple] = []
+    ybar = None
+    for _stage in range(n_stages):
+        routes = [(names.index(f), t) for f, t, *_ in winners]
+        gammas = [(gl, gr) for *_, gl, gr in winners]
+        # per feature: bin -> [n, pos, m_1, ..., m_{k-1}]
+        hist: list[dict] = [{} for _ in names]
+        for bins, n, pos in cells:
+            mem = [n if bins[fi] <= t else 0 for fi, t in routes]
+            for fi, b in enumerate(bins):
+                h = hist[fi].setdefault(b, [0] * (2 + len(winners)))
+                h[0] += n
+                h[1] += pos
+                for i, m in enumerate(mem, start=2):
+                    h[i] += m
+        cands = []
+        for name, per_bin in zip(names, hist):
+            nt, post, *mt = (sum(c) for c in zip(*per_bin.values()))
+            if ybar is None:
+                ybar = post / nt
+            sum_rt = post - nt * ybar
+            for (gl, gr), m_t in zip(gammas, mt):
+                sum_rt = sum_rt - nu * (m_t * gl + (nt - m_t) * gr)
+            acc = [0] * (2 + len(winners))
+            for b in sorted(per_bin):
+                acc = [a + c for a, c in zip(acc, per_bin[b])]
+                nl, posl, *ml = acc
+                if nl >= nt:
+                    continue
+                sum_rl = posl - nl * ybar
+                for (gl, gr), m_l in zip(gammas, ml):
+                    sum_rl = sum_rl - nu * (m_l * gl + (nl - m_l) * gr)
+                sum_rr = sum_rt - sum_rl
+                score = _round9(
+                    jvm, (sum_rl * sum_rl) / nl + (sum_rr * sum_rr) / (nt - nl)
+                )
+                cands.append(
+                    (name, b, nl, nt - nl, score,
+                     sum_rl / nl, sum_rr / (nt - nl))
+                )
+        if not cands:
+            return None
+        winners.append(min(cands, key=lambda c: (-c[4], c[0], c[1])))
+    return winners, ybar
 
 
 def lineitem_gbt_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2086,7 +1983,7 @@ def lineitem_gbt_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     stumps (squared loss, shrinkage 0.5) on the fixed-bin lineitem
     features — the splits, leaf values, and SSE scores of the whole
     trajectory."""
-    return gbt_two_stage(load_table(spark, sf_dir, "lineitem"))
+    return gbt_boost(load_table(spark, sf_dir, "lineitem"), 2)
 
 
 def gbt_boost(
@@ -2098,10 +1995,14 @@ def gbt_boost(
     joint: DataFrame | None = None,
 ) -> DataFrame:
     """K-stage gradient boosting of histogram stumps under squared
-    loss — :func:`gbt_two_stage`'s closed-form residual recursion
-    carried to arbitrary depth (§7.6's "deeper boosting": each extra
-    stage is one more regroup of the joint histogram plus one more
-    carried membership column through it).
+    loss.
+
+    Squared loss is the deliberate choice over AdaBoost/log-loss: its
+    pseudo-residuals and leaf values are RATIOS OF COUNTS, not
+    ``exp``/``ln`` of them, so every stage stays inside the repo's
+    exact cross-engine arithmetic. Stage 0 is the mean ``ybar =
+    post/nt``; stage k fits a stump to the residual by SSE reduction,
+    the split maximizing ``sum_r_L²/n_L + sum_r_R²/n_R``.
 
     Why the recursion stays exact at any depth: after stage ``i`` the
     model correction is piecewise-constant over the stage-``i`` leaf
@@ -2112,54 +2013,44 @@ def gbt_boost(
                                               + (n − m_i_count)·γ_i_R)
 
     where ``m_i_count`` counts the bin's rows that fell in stage-i's
-    left leaf — the only per-stage histogram addition. No per-row
-    double accumulates anywhere, so there is no summation-order
-    sensitivity and the DuckDB oracle can replay the identical IEEE
-    expression tree (left-associated exactly as built here).
+    left leaf. No per-row double accumulates anywhere, and the right
+    sum is ``sum_r_total − sum_r_left`` at every stage, so the DuckDB
+    oracle replays the identical left-associated IEEE expressions.
 
-    Unlike the hand-unrolled two-stage form this uniform loop computes
-    EVERY stage's right-side residual sum as ``sum_r_total −
-    sum_r_left`` (the two-stage stage-1 used the algebraically equal
-    but FP-distinct direct form), so the two functions' stage-1 scores
-    may differ in the last ulp — each entry's oracle mirrors its own
-    formulation.
-
-    Plan: ONE data scan total — the joint bin histogram (see
-    :func:`_joint_bin_hist`) is collapsed and checkpointed up front,
-    and every stage's per-(feature, bin) histogram (including the
-    carried membership sums) is an exact weighted regroup of those
-    aggregate-sized cells; stage k still joins the stage-(k−1) winner
-    back as a broadcast scalar. At 100 TB the one scan shuffles
-    O(Π bins) partial joint cells per task and the split search stays
-    histogram-sized.
+    Plan: the data is collapsed ONCE to its joint bin histogram
+    (:func:`_joint_bin_hist`, ≤ Π|bins| = 4,096 cells per group on the
+    fixed grid) and collected; since a cell's membership in every
+    leaf is a pure function of its bins, all K stages run on the
+    driver over those integers (:func:`_boost_group`). The state is
+    bounded by the bin grid, never by the data. At 100 TB the one scan
+    shuffles O(Π bins) partial cells per task and nothing else runs
+    on the cluster. The result comes back as a literal plan (Range +
+    Generate; no rescan, no Python worker).
 
     Returns one row per stage: ``(stage, feature, split_bin, n_left,
     n_right, gamma_left, gamma_right, score)``, γ rounded to 9,
     ranking by the rounded-9 score with (feature, split_bin)
-    tie-break.
+    tie-break; rounding reproduces Spark's ``round`` (:func:`_round9`).
 
     With ``group_cols`` the WHOLE recursion runs per group (the
-    per-segment trainer a partitioned population gets): the group key
-    rides every histogram group-by and cumulative window, each group
-    elects its own stage-k winner (the rank window partitions by
-    group), and stage k's scan joins the per-group winner frame back
-    by the group key — a broadcast hash join against a ≤ |groups|-row
-    frame instead of the 1-row crossJoin scalar. Still one data scan;
-    the per-group histogram partitions are MORE parallel than
-    the global form, never less (one segment's skew cannot serialize
-    another's epilogue). The caller supplies a ``binned`` frame that
-    carries the group columns (grouped :func:`_quantile_stump_binned`
-    for per-group adaptive bucket grids, or any _stump_binned-contract
-    frame with the group key attached). Output gains the group
-    columns: one row per (group..., stage).
+    per-segment trainer a partitioned population gets): each group
+    elects its own stage winners from its own cells, and a group with
+    no candidate split at some stage drops out. The caller supplies a
+    ``binned`` frame that carries the group columns (grouped
+    :func:`_quantile_stump_binned` for per-group adaptive bucket
+    grids, or any _stump_binned-contract frame with the group key
+    attached). Output gains the group columns: one row per (group...,
+    stage).
 
     ``wide=True`` returns the final WINNER frame instead of the
     exploded per-stage rows: one row per group carrying every stage's
     unrounded columns (``f1, t1, nw1, nr1, sc1, gl1, gr1, …, ybar``)
     — the model a downstream SCORER needs whole (per-row prediction
     = ybar + Σ ν·γ routed by the carried memberships), consumed by
-    :func:`lineitem_status_gbt_isotonic`. Same scan, no extra
-    work — the exploded form is a projection of this frame."""
+    :func:`_qgbt_scored`. ``joint`` lets a caller that already
+    collapsed the SAME binned frame (the scorer, which also scores
+    the cells) share the one collapse instead of paying a second
+    scan."""
     if n_stages < 1:
         raise ValueError("n_stages must be >= 1")
     _require_safe_group_cols("gbt_boost", group_cols)
@@ -2179,158 +2070,56 @@ def gbt_boost(
             "equi-width bins) OR binned (a pre-binned _stump_binned-"
             "contract frame), not both"
         )
-    if binned is None:
-        binned = _stump_binned(df)
-    nu = F.lit(GBT_SHRINKAGE)
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(name).alias("feature"), F.col(f"b_{name}").alias("bin")
-            )
-            for name in names
-        ]
-    )
-    winner: DataFrame | None = None
-    # collapse the data to its joint bin histogram ONCE and derive
-    # every stage's per-(feature, bin) histogram (incl. the membership
-    # sums) from the checkpointed cells — identical integers, K fewer
-    # data scans (see _joint_bin_hist). ``joint`` lets a caller that
-    # already collapsed the SAME binned frame (e.g. the isotonic
-    # scorer, which also scores the cells) share the one collapse
-    # instead of paying a second scan.
-    src = joint if joint is not None else _joint_bin_hist(binned, gc)
-    for k in range(1, n_stages + 1):
-        if k == 1:
-            # the group key is carried from stage 1 (it partitions
-            # every histogram and window below exactly like the
-            # winner's carried columns do at k > 1)
-            cur, carry, mem_cols = src, list(gc), []
+    if joint is None:
+        joint = _joint_bin_hist(
+            binned if binned is not None else _stump_binned(df), gc
+        )
+    groups: dict[tuple, list] = {}
+    cell_cols = [*gc, *[f"b_{name}" for name in names], "_jn", "_jpos"]
+    for r in joint.select(*cell_cols).collect():
+        groups.setdefault(tuple(r[: len(gc)]), []).append(
+            (tuple(r[len(gc): -2]), r["_jn"], r["_jpos"])
+        )
+    spark = joint.sparkSession
+    jvm = spark._jvm
+    rows = []
+    for key, cells in groups.items():
+        model = _boost_group(jvm, cells, n_stages)
+        if model is None:
+            continue
+        winners, ybar = model
+        if wide:
+            rows.append((*key, *(v for w in winners for v in w), ybar))
         else:
-            mems = []
-            for i in range(1, k):
-                is_left = None
-                for name in names:
-                    term = (F.col(f"f{i}") == name) & (
-                        F.col(f"b_{name}") <= F.col(f"t{i}")
-                    )
-                    is_left = term if is_left is None else is_left | term
-                mems.append(is_left.cast("int").alias(f"m{i}"))
-            carry = list(winner.columns)
-            mem_cols = [f"m{i}" for i in range(1, k)]
-            # grouped: equi-join the per-group winner frame back by
-            # the group key (broadcast — ≤ |groups| rows); ungrouped:
-            # the 1-row crossJoin scalar
-            staged_in = (
-                src.join(F.broadcast(winner), gc)
-                if gc
-                else src.crossJoin(F.broadcast(winner))
+            rows.extend(
+                (*key, k, f, t, nl, nr, _round9(jvm, gl), _round9(jvm, gr),
+                 score)
+                for k, (f, t, nl, nr, score, gl, gr) in enumerate(
+                    winners, start=1
+                )
             )
-            cur = staged_in.select(
-                *carry, *mems, *[f"b_{name}" for name in names], "_jn", "_jpos"
-            )
-        # weighted regroup of the joint cells: n/pos/m_i-sums are Σ
-        # over cells of (_jn, _jpos, m_i·_jn) — the same bigint values
-        # the per-row aggregation produces
-        hist = (
-            cur.select(
-                *carry, F.explode(pairs).alias("p"), "_jn", "_jpos", *mem_cols
-            )
-            .groupBy(*carry, "p.feature", "p.bin")
-            .agg(
-                F.sum("_jn").alias("n"),
-                F.sum("_jpos").alias("pos"),
-                *[
-                    F.sum(F.col(m) * F.col("_jn")).alias(f"{m}s")
-                    for m in mem_cols
-                ],
-            )
-        )
-        cum = _cum_counts(
-            hist, carry, extra=tuple(f"{m}s" for m in mem_cols)
-        )
-        nl, posl, nt, post = (
-            F.col(c) for c in ("nl", "posl", "nt", "post")
-        )
-        yb = F.col("ybar") if k > 1 else (post / nt)
-        sum_rl = posl - nl * yb
-        sum_rt = post - nt * yb
-        for i in range(1, k):
-            ml, mt = F.col(f"m{i}sl"), F.col(f"m{i}st")
-            gl_i, gr_i = F.col(f"gl{i}"), F.col(f"gr{i}")
-            sum_rl = sum_rl - nu * (ml * gl_i + (nl - ml) * gr_i)
-            sum_rt = sum_rt - nu * (mt * gl_i + (nt - mt) * gr_i)
-        sum_rr = sum_rt - sum_rl
-        score = F.round(
-            (sum_rl * sum_rl) / nl + (sum_rr * sum_rr) / (nt - nl), 9
-        )
-        staged_cols = [
-            *(F.col(c) for c in carry),
-            F.col("feature"),
-            F.col("split_bin"),
-            nl.alias("cand_nl"),
-            nt.alias("cand_nt"),
-            score.alias("score"),
-            (sum_rl / nl).alias("cand_gl"),
-            (sum_rr / (nt - nl)).alias("cand_gr"),
-        ]
-        if k == 1:
-            staged_cols.append(yb.alias("ybar"))
-        s = cum.select(*staged_cols)
-        # grouped: each group elects its own stage winner; ungrouped:
-        # the unpartitioned window runs over the histogram-sized
-        # candidate frame only (the accepted idiom)
-        w_glob = Window.partitionBy(*gc).orderBy(
-            F.col("score").desc(), "feature", "split_bin"
-        )
-        keep = [c for c in carry if c != "ybar"]
-        winner = (
-            s.select("*", F.row_number().over(w_glob).alias("_rg"))
-            .filter(F.col("_rg") == 1)
-            .select(
-                *keep,
-                F.col("feature").alias(f"f{k}"),
-                F.col("split_bin").alias(f"t{k}"),
-                F.col("cand_nl").alias(f"nw{k}"),
-                (F.col("cand_nt") - F.col("cand_nl")).alias(f"nr{k}"),
-                F.col("score").alias(f"sc{k}"),
-                F.col("cand_gl").alias(f"gl{k}"),
-                F.col("cand_gr").alias(f"gr{k}"),
-                "ybar",
-            )
-        )
-        # materialize the aggregate-sized winner (1 row ungrouped,
-        # ≤ |groups| grouped) before stage k+1 joins it back. The
-        # values are unchanged, but the lazy form nests every earlier
-        # stage's whole subtree (explode → histogram → window) inside
-        # stage k's broadcast, and its optimizer/codegen cost grew
-        # SUPERLINEARLY with depth: at sf0.1 warm (median of 3) K=3
-        # cost 5.26 s lazy while stage increments were 1.52/0.74 s
-        # for K=1/2. Materialized, each stage compiles against a tiny
-        # ExistingRDD.
-        if k < n_stages:
-            winner = winner.localCheckpoint(eager=True)
+    i32, i64, f64 = T.IntegerType(), T.LongType(), T.DoubleType()
     if wide:
-        return winner
-    # all stage rows explode out of the ONE winning row (the two-stage
-    # rationale: a unionAll would duplicate the whole K-scan subtree)
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(k).alias("stage"),
-                F.col(f"f{k}").alias("feature"),
-                F.col(f"t{k}").alias("split_bin"),
-                F.col(f"nw{k}").alias("n_left"),
-                F.col(f"nr{k}").alias("n_right"),
-                F.round(F.col(f"gl{k}"), 9).alias("gamma_left"),
-                F.round(F.col(f"gr{k}"), 9).alias("gamma_right"),
-                F.col(f"sc{k}").alias("score"),
-            )
+        cols = [
+            (f"{c}{k}", typ)
             for k in range(1, n_stages + 1)
+            for c, typ in (("f", T.StringType()), ("t", i32), ("nw", i64),
+                           ("nr", i64), ("sc", f64), ("gl", f64),
+                           ("gr", f64))
+        ] + [("ybar", f64)]
+    else:
+        cols = [
+            ("stage", i32), ("feature", T.StringType()), ("split_bin", i32),
+            ("n_left", i64), ("n_right", i64), ("gamma_left", f64),
+            ("gamma_right", f64), ("score", f64),
         ]
+    schema = T.StructType(
+        [joint.schema[g] for g in gc] + [T.StructField(c, t) for c, t in cols]
     )
-    return winner.select(*gc, F.explode(rows).alias("s")).select(
-        *gc, "s.*"
-    )
+    literal = F.array(
+        *(F.struct(*(F.lit(v) for v in row)) for row in rows)
+    ).cast(T.ArrayType(schema))
+    return spark.range(1).select(F.inline(literal))
 
 
 def lineitem_gbt_stages3(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3044,7 +2833,7 @@ def lineitem_quantile_gbt(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lineitem_quantile_gbt3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry query: the quantile-binned booster carried to THREE
     stages — the same ``binned`` bridge, one more closed-form residual
-    level (stage 3's scan carries both earlier memberships); the
+    level (stage 3 carries both earlier memberships); the
     depth knob of the LightGBM-shaped trainer exercised on adaptive
     bins."""
     return gbt_boost(
@@ -3109,12 +2898,11 @@ def lineitem_status_quantile_gbt(
     §7.9): each segment fits its OWN equi-depth bucket maps to its
     own feature distributions (grouped :func:`quantile_bucket_map`)
     and runs its OWN two-stage closed-form residual recursion
-    (grouped :func:`gbt_boost` — per-segment histograms, windows,
-    and stage winners; stage scans join the per-segment winner frame
-    by the segment key). Definitionally equal to running the global
-    trainer on each segment's filtered slice — pinned in tests —
-    while still paying one joint-histogram data scan for ALL
-    segments. Segment key aliased ``seg``, the per-segment family's
+    (grouped :func:`gbt_boost` — per-segment histograms and stage
+    winners from each segment's own cells). Definitionally equal to
+    running the global trainer on each segment's filtered slice —
+    pinned in tests — while still paying one joint-histogram data
+    scan for ALL segments. Segment key aliased ``seg``, the per-segment family's
     column contract."""
     li = load_table(spark, sf_dir, "lineitem").withColumn(
         "seg", F.col("l_linestatus")
@@ -3135,10 +2923,9 @@ def lineitem_status_quantile_gbt3(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Registry query: the per-segment quantile-binned booster at
-    K = 3 — the depth knob on the GROUPED recursion: stage 3's scan
-    joins the per-segment winner frame carrying BOTH earlier
-    memberships (per-segment m1/m2 columns through the per-segment
-    histograms), exercising the carried-membership arithmetic under
+    K = 3 — the depth knob on the GROUPED recursion: stage 3 carries
+    BOTH earlier memberships (per-segment m1/m2 counts through the
+    per-segment histograms), exercising the carried-membership arithmetic under
     grouping. Pinned greedy-prefix-stable against the K = 2
     per-segment entry (its first two stages equal
     :func:`lineitem_status_quantile_gbt` exactly, per segment)."""
@@ -3220,7 +3007,7 @@ def _qgbt_scored(
     # exact weighted regroups of the cells) — ONE data scan serves
     # trainer AND scorer, and the downstream isotonic histogram
     # aggregates ≤ cells rows instead of the data.
-    cells = _joint_bin_hist(binned, list(gc))
+    cells = _joint_bin_hist(binned, list(gc)).localCheckpoint(eager=True)
     w = gbt_boost(
         None, 2, binned=binned, group_cols=gc, wide=True, joint=cells
     )

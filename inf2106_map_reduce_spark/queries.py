@@ -6589,13 +6589,14 @@ def _gbt_boost_oracle(
     ctes_only: bool = False,
 ) -> str | list[str]:
     """Oracle for the K-stage booster (stats.gbt_boost): a uniform CTE
-    chain per stage mirroring the Spark loop exactly — stage k's left/
+    chain per stage mirroring the driver loop exactly — stage k's left/
     total residual sums are the identical left-associated expression
     trees over the window sums and the carried stage doubles, and the
-    RIGHT sum is (total − left) at EVERY stage (the uniform-loop
-    formulation; the two-stage entry's stage 1 uses the algebraically
-    equal direct form and may differ in the last ulp — each entry's
-    oracle mirrors its own function, see gbt_boost's docstring).
+    RIGHT sum is (total − left) at EVERY stage. (The hand-unrolled
+    ``lineitem_gbt_stages`` oracle computes stage 1's right sum in the
+    algebraically equal direct form; the entry now runs
+    ``gbt_boost(li, 2)``, and the two forms give the same rows at
+    sf0.001, sf0.01 and sf0.1.)
     ``base_cte`` swaps the bin definition (the quantile-binned
     variant) while the stage chain stays identical — the oracle-side
     twin of gbt_boost's ``binned`` parameter. ``seg=True`` renders the

@@ -70,10 +70,12 @@ _SCALE_DEFAULTS: dict[str, str] = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     # One C1 and one C2 compiler thread in the driver JVM (HotSpot
     # gives a 4-vCPU host three). In short, cold, plan-heavy sessions
-    # the C2 threads were the JVM's largest CPU consumer, compiling
-    # generated code that ran a few times; one thread compiles only the
-    # hottest queued methods, so hot loops still reach C2 (SCALING.md
-    # "JIT tier"). An extra_conf entry for the key replaces it.
+    # the C2 threads were the JVM's largest CPU consumer, compiling the
+    # toolchain that plans and generates code (JDK, Janino, Catalyst),
+    # not the generated classes themselves; one thread compiles only
+    # the hottest queued methods, so hot loops still reach C2
+    # (SCALING.md "JIT tier"). An extra_conf entry for the key
+    # replaces it.
     "spark.driver.defaultJavaOptions": "-XX:CICompilerCount=2",
     # Quiet progress bars in test output.
     "spark.ui.showConsoleProgress": "false",

@@ -17,7 +17,6 @@ from inf2106_map_reduce_spark.queries import REGISTRY, oracle_for
 from tests.oracle_utils import assert_matches_oracle, duckdb_connection
 
 ORACLE_QUERIES = sorted(n for n, s in REGISTRY.items() if s.oracle is not None)
-ROWS_ONLY = sorted(n for n, s in REGISTRY.items() if s.oracle is None)
 
 
 @pytest.fixture(scope="module")
@@ -59,10 +58,9 @@ def test_query_matches_oracle_ansi(ansi_spark, sf_oracle, con, name):
     assert_matches_oracle(df, con, oracle_for(name, sf_oracle))
 
 
-@pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_queries_run(spark, sf_oracle, name):
-    df = REGISTRY[name].fn(spark, sf_oracle)
-    assert df.count() >= 0 and len(df.columns) > 0
+def test_every_registry_entry_has_an_oracle():
+    missing = sorted(n for n, s in REGISTRY.items() if s.oracle is None)
+    assert not missing, f"registry entries without a DuckDB oracle: {missing}"
 
 
 def test_entry_contract(spark):

@@ -165,3 +165,66 @@ def test_quantile_closed_form_equals_boundary_definition(hist, n_buckets):
             n_buckets - 1, ((cum - c) * n_buckets) // total
         )
         assert closed_form == by_definition, (b, hist, n_buckets)
+
+
+#: The registry entries whose stage winners stats.gbt_boost picks on
+#: the driver.
+GBT_ENTRIES = (
+    "lineitem_gbt_stages",
+    "lineitem_gbt_stages3",
+    "lineitem_quantile_gbt",
+    "lineitem_quantile_gbt3",
+    "lineitem_status_quantile_gbt",
+    "lineitem_status_quantile_gbt3",
+    "lineitem_status_gbt_isotonic",
+    "lineitem_gbt_isotonic",
+)
+
+
+def test_round9_matches_spark_round(spark, sf_oracle, monkeypatch):
+    """``stats._round9``, the booster's driver-side rounding, equals
+    Spark's ``round(x, 9)`` bit for bit: on every value the GBT
+    registry entries round at sf0.01 (candidate scores and published
+    leaf values), on random doubles from 1e-6 to 1e6 in magnitude, on
+    HALF_UP ties in the 10th decimal, and on values whose Java 17
+    ``Double.toString`` is not the shortest decimal."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from inf2106_map_reduce_spark.operators import stats
+    from inf2106_map_reduce_spark.queries import REGISTRY
+
+    round9 = stats._round9
+    seen: list[float] = []
+
+    def recording(jvm, x):
+        seen.append(x)
+        return round9(jvm, x)
+
+    monkeypatch.setattr(stats, "_round9", recording)
+    for name in GBT_ENTRIES:
+        REGISTRY[name].fn(spark, sf_oracle)
+    assert len(seen) > 500, len(seen)
+
+    rng = random.Random(20261020)
+    values = seen + [
+        rng.choice((-1, 1)) * 10 ** rng.uniform(-6, 6) for _ in range(3000)
+    ]
+    values += [
+        float(f"{rng.choice('+-')}{rng.randrange(10**6)}."
+              f"{rng.randrange(10**9):09d}5")
+        for _ in range(3000)
+    ]
+    values += [2.82879384806159e17, 1e20, -1e-12, 5e-10, -5e-10, 0.0, -0.0]
+    got = spark.createDataFrame(
+        list(enumerate(values)), "i int, x double"
+    ).select("i", F.round("x", 9).alias("r")).collect()
+    assert len(got) == len(values)
+    bad = []
+    for r in got:
+        x = values[r["i"]]
+        mine = round9(spark._jvm, x)
+        if mine.hex() != r["r"].hex():
+            bad.append((x, r["r"], mine))
+    assert not bad, bad[:10]

@@ -644,15 +644,14 @@ def test_gbt_is_one_scan_per_stage(
     spark, sf_oracle, cold_session_cache
 ):
     """Two boosting stages read the data ONCE: the data collapses to
-    its joint bin histogram (stats._joint_bin_hist) and both stages
-    regroup the checkpointed cells; the stage-1 choice reaches stage 2
-    as a broadcast scalar, never a driver action (the depth-2-tree
-    plan contract). The LIVE plan shows ZERO data scans; the one scan
-    ran during construction."""
+    its joint bin histogram (stats._joint_bin_hist), which is
+    collected, and both stages run on the driver over those cells.
+    The LIVE plan is the literal stage rows (Range + Generate) with
+    ZERO data scans; the one scan ran during construction."""
     df, built = run_with_plans(spark, stats.lineitem_gbt_stages, sf_oracle)
     plan = explain_str(df, "formatted")
     assert _scan_count(plan, "lineitem") == 0, plan
-    assert "ExistingRDD" in plan  # the materialized cells + winner
+    assert "Generate" in plan and "Range" in plan, plan  # literal rows
     assert "CollectLimit" not in plan
     assert sum(_scan_count(p, "lineitem") for p in built) == 1, built
 
@@ -716,7 +715,7 @@ def test_gbt_matches_independent_reference_fuzz(spark):
 
         got = {
             r["stage"]: r
-            for r in stats.gbt_two_stage(spark.createDataFrame(pdf)).collect()
+            for r in stats.gbt_boost(spark.createDataFrame(pdf), 2).collect()
         }
         for stage, ref in ((1, s1), (2, s2)):
             g = got[stage]

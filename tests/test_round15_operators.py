@@ -54,16 +54,17 @@ def test_status_quantile_gbt_plan_is_one_scan_per_stage(
 ):
     """The grouped trainer keeps the LightGBM cost model for ALL
     segments together: the data collapses to its joint bin histogram
-    ONCE (stats._joint_bin_hist), so the live plan shows ZERO data
-    scans (the stage winner join is a broadcast on the segment key).
-    Construction reads lineitem four times: three per-segment
-    bucket-map scans plus the joint histogram."""
+    ONCE (stats._joint_bin_hist) and every segment's stages run on the
+    driver over the collected cells, so the live plan is the literal
+    stage rows with ZERO data scans. Construction reads lineitem four
+    times: three per-segment bucket-map scans plus the joint
+    histogram."""
     df, built = run_with_plans(
         spark, stats.lineitem_status_quantile_gbt, sf_oracle
     )
     plan = explain_str(df, "formatted")
     assert plan.count("lineitem.parquet") == 0, plan
-    assert "ExistingRDD" in plan  # checkpointed cells + stage winner
+    assert "Generate" in plan and "Range" in plan, plan  # literal rows
     assert "CollectLimit" not in plan
     assert "BatchEvalPython" not in plan
     assert sum(p.count("lineitem.parquet") for p in built) == 4, built
@@ -202,11 +203,12 @@ def test_status_quantile_gbt3_plan_is_one_scan_per_stage(
         spark, stats.lineitem_status_quantile_gbt3, sf_oracle
     )
     plan = explain_str(df, "formatted")
-    # every stage regroups the checkpointed joint bin cells
-    # (stats._joint_bin_hist) — live plan shows ZERO data scans; the
-    # third stage adds no scan to the four of the K = 2 trainer
+    # every stage runs on the driver over the collected joint bin
+    # cells (stats._joint_bin_hist) — the live plan is the literal
+    # stage rows with ZERO data scans; the third stage adds no scan to
+    # the four of the K = 2 trainer
     assert plan.count("lineitem.parquet") == 0, plan
-    assert "ExistingRDD" in plan
+    assert "Generate" in plan and "Range" in plan, plan  # literal rows
     assert "CollectLimit" not in plan
     assert "BatchEvalPython" not in plan
     assert sum(p.count("lineitem.parquet") for p in built) == 4, built

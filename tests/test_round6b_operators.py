@@ -200,6 +200,28 @@ def test_bpe_train_consecutive_pairs_merge_non_overlapping(spark):
     assert rows[0]["corpus_symbols_after"] == 2
 
 
+def test_bpe_train_stops_when_no_pair_is_left(spark):
+    from inf2106_map_reduce_spark.functions.text import bpe_train_merges
+
+    # one merge empties the pair table: the round-2 query returns only
+    # round 1's symbol total, and training stops there
+    df = spark.createDataFrame([(1, "ab ab")], "doc_id long, text string")
+    rows = [tuple(r) for r in bpe_train_merges(df, rounds=3).collect()]
+    assert rows == [(1, "a", "b", 2, 2)]
+
+
+def test_bpe_train_runs_one_collect_per_round(spark, sf_smoke):
+    """Each round's pair count carries the previous round's symbol
+    total, so 6 rounds run the vocabulary checkpoint plus 7 collects
+    (2 per round before they were folded: 13)."""
+    from inf2106_map_reduce_spark.functions import text
+    from inf2106_map_reduce_spark.plans import run_with_plans
+
+    df, built = run_with_plans(spark, text.vocab_bpe_train, sf_smoke)
+    assert df.count() == text.BPE_TRAIN_ROUNDS
+    assert len(built) == 1 + text.BPE_TRAIN_ROUNDS + 1, built
+
+
 def test_sequence_patterns_contiguous_vs_gapped(spark):
     import datetime
 
