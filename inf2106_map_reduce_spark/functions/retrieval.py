@@ -29,9 +29,10 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from inf2106_map_reduce_spark.functions import vector as vector_fns
-from inf2106_map_reduce_spark.tables import load_table
+from inf2106_map_reduce_spark.tables import literal_frame, load_table
 
 # The fixed audit query: three corpus terms spanning the df range so
 # idf actually differentiates (picked from the synthetic vocabulary).
@@ -333,15 +334,15 @@ def mmr_rerank(
         for i in rel:
             if i not in nearest or pair[i, v][0] > nearest[i][0]:
                 nearest[i] = pair[i, v]
-    schema = (
-        "array<struct<sel_rank:int,"
-        f"vec_id:{cand.schema['vec_id'].dataType.simpleString()},"
-        "relevance:double,mmr_score:double>>"
+    schema = T.StructType(
+        [
+            T.StructField("sel_rank", T.IntegerType()),
+            T.StructField("vec_id", cand.schema["vec_id"].dataType),
+            T.StructField("relevance", T.DoubleType()),
+            T.StructField("mmr_score", T.DoubleType()),
+        ]
     )
-    literal = F.array(
-        *(F.struct(*(F.lit(x) for x in pick)) for pick in picks)
-    ).cast(schema)
-    return cand.sparkSession.range(1).select(F.inline(literal))
+    return literal_frame(cand.sparkSession, schema, picks)
 
 
 def docs_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:

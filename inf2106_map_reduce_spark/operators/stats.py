@@ -25,6 +25,7 @@ MapReduce statistics job, re-expressed declaratively.
 
 from __future__ import annotations
 
+import logging
 import re
 from decimal import ROUND_HALF_UP, Context, Decimal
 
@@ -33,7 +34,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from inf2106_map_reduce_spark.session import session_cache
-from inf2106_map_reduce_spark.tables import load_table
+from inf2106_map_reduce_spark.tables import literal_frame, load_table
+
+_log = logging.getLogger(__name__)
 
 
 def _moments(x: Column, y: Column) -> list[Column]:
@@ -1661,9 +1664,10 @@ def _joint_bin_hist(binned: DataFrame, gc: list[str]) -> DataFrame:
     """Collapse a ``_stump_binned``-contract frame to its EXACT joint
     bin histogram: one row per occupied (group..., b_qty, b_disc,
     b_price) cell carrying the cell's row count and positive count
-    (``_jn``/``_jpos`` — both exact integers). Lazy: :func:`gbt_boost`
-    collects it, and callers that regroup the cells in Spark
-    (:func:`tree_depth2`, :func:`_qgbt_scored`) checkpoint it first.
+    (``_jn``/``_jpos`` — both exact integers). Lazy:
+    :func:`_joint_cells` collects it for the driver-side booster and
+    scorer, and :func:`tree_depth2`, which regroups the cells in
+    Spark, checkpoints it first.
 
     r15 OPTIMIZATION (guide §1.2 "the distributed algorithm", §2.3
     "aggregate before you shuffle"): the multi-stage histogram
@@ -1677,9 +1681,10 @@ def _joint_bin_hist(binned: DataFrame, gc: list[str]) -> DataFrame:
     arithmetic end to end — no FP is introduced or reordered).
     Aggregating the joint cells ONCE (≤ Π|bins| = 4096 rows on the
     16-bin fixed grid, ≤ |groups|·10³ on the equi-depth buckets) and
-    deriving every stage from the cells (the booster on the driver,
-    the tree by regrouping the checkpointed cells) replaces K+1 full
-    data scans with ONE — the LightGBM-style histogram-reuse step.
+    deriving every stage from the cells (the booster and its scorer
+    on the driver, the tree by regrouping the checkpointed cells)
+    replaces K+1 full data scans with ONE — the LightGBM-style
+    histogram-reuse step.
     At 100 TB the win is the same or larger: the shuffle already
     carried only partial histograms; now the later stages don't
     re-read and re-bin the fact table either. Every double downstream
@@ -1694,6 +1699,19 @@ def _joint_bin_hist(binned: DataFrame, gc: list[str]) -> DataFrame:
             F.sum("y").cast("bigint").alias("_jpos"),
         )
     )
+
+
+def _joint_cells(binned: DataFrame, gc: list[str]) -> dict[tuple, list]:
+    """Collect :func:`_joint_bin_hist` of ``binned`` once, as the
+    driver-side booster's input: per group key, the cells ``(bins, n,
+    pos)`` with ``bins`` in :data:`STUMP_BINS` order (≤ 4,096 cells
+    per group on the fixed grid, ≤ 10³ on the equi-depth buckets)."""
+    groups: dict[tuple, list] = {}
+    for r in _joint_bin_hist(binned, gc).collect():
+        groups.setdefault(tuple(r[: len(gc)]), []).append(
+            (tuple(r[len(gc): -2]), r["_jn"], r["_jpos"])
+        )
+    return groups
 
 
 def _stump_hist_from_joint(
@@ -1991,8 +2009,6 @@ def gbt_boost(
     n_stages: int,
     binned: DataFrame | None = None,
     group_cols: tuple[str, ...] = (),
-    wide: bool = False,
-    joint: DataFrame | None = None,
 ) -> DataFrame:
     """K-stage gradient boosting of histogram stumps under squared
     loss.
@@ -2040,22 +2056,11 @@ def gbt_boost(
     :func:`_quantile_stump_binned` for per-group adaptive bucket
     grids, or any _stump_binned-contract frame with the group key
     attached). Output gains the group columns: one row per (group...,
-    stage).
-
-    ``wide=True`` returns the final WINNER frame instead of the
-    exploded per-stage rows: one row per group carrying every stage's
-    unrounded columns (``f1, t1, nw1, nr1, sc1, gl1, gr1, …, ybar``)
-    — the model a downstream SCORER needs whole (per-row prediction
-    = ybar + Σ ν·γ routed by the carried memberships), consumed by
-    :func:`_qgbt_scored`. ``joint`` lets a caller that already
-    collapsed the SAME binned frame (the scorer, which also scores
-    the cells) share the one collapse instead of paying a second
-    scan."""
+    stage)."""
     if n_stages < 1:
         raise ValueError("n_stages must be >= 1")
     _require_safe_group_cols("gbt_boost", group_cols)
     gc = list(group_cols)
-    names = [name for name, *_ in STUMP_BINS]
     # ``binned`` swaps the bin DEFINITION (e.g. the equi-depth
     # bucket maps of _quantile_stump_binned) while the recursion,
     # ranking, and carried-scalar arithmetic stay byte-identical —
@@ -2070,56 +2075,31 @@ def gbt_boost(
             "equi-width bins) OR binned (a pre-binned _stump_binned-"
             "contract frame), not both"
         )
-    if joint is None:
-        joint = _joint_bin_hist(
-            binned if binned is not None else _stump_binned(df), gc
-        )
-    groups: dict[tuple, list] = {}
-    cell_cols = [*gc, *[f"b_{name}" for name in names], "_jn", "_jpos"]
-    for r in joint.select(*cell_cols).collect():
-        groups.setdefault(tuple(r[: len(gc)]), []).append(
-            (tuple(r[len(gc): -2]), r["_jn"], r["_jpos"])
-        )
-    spark = joint.sparkSession
+    if binned is None:
+        binned = _stump_binned(df)
+    spark = binned.sparkSession
     jvm = spark._jvm
     rows = []
-    for key, cells in groups.items():
+    for key, cells in _joint_cells(binned, gc).items():
         model = _boost_group(jvm, cells, n_stages)
         if model is None:
             continue
-        winners, ybar = model
-        if wide:
-            rows.append((*key, *(v for w in winners for v in w), ybar))
-        else:
-            rows.extend(
-                (*key, k, f, t, nl, nr, _round9(jvm, gl), _round9(jvm, gr),
-                 score)
-                for k, (f, t, nl, nr, score, gl, gr) in enumerate(
-                    winners, start=1
-                )
+        rows.extend(
+            (*key, k, f, t, nl, nr, _round9(jvm, gl), _round9(jvm, gr), score)
+            for k, (f, t, nl, nr, score, gl, gr) in enumerate(
+                model[0], start=1
             )
+        )
     i32, i64, f64 = T.IntegerType(), T.LongType(), T.DoubleType()
-    if wide:
-        cols = [
-            (f"{c}{k}", typ)
-            for k in range(1, n_stages + 1)
-            for c, typ in (("f", T.StringType()), ("t", i32), ("nw", i64),
-                           ("nr", i64), ("sc", f64), ("gl", f64),
-                           ("gr", f64))
-        ] + [("ybar", f64)]
-    else:
-        cols = [
-            ("stage", i32), ("feature", T.StringType()), ("split_bin", i32),
-            ("n_left", i64), ("n_right", i64), ("gamma_left", f64),
-            ("gamma_right", f64), ("score", f64),
-        ]
+    cols = [
+        ("stage", i32), ("feature", T.StringType()), ("split_bin", i32),
+        ("n_left", i64), ("n_right", i64), ("gamma_left", f64),
+        ("gamma_right", f64), ("score", f64),
+    ]
     schema = T.StructType(
-        [joint.schema[g] for g in gc] + [T.StructField(c, t) for c, t in cols]
+        [binned.schema[g] for g in gc] + [T.StructField(c, t) for c, t in cols]
     )
-    literal = F.array(
-        *(F.struct(*(F.lit(v) for v in row)) for row in rows)
-    ).cast(T.ArrayType(schema))
-    return spark.range(1).select(F.inline(literal))
+    return literal_frame(spark, schema, rows)
 
 
 def lineitem_gbt_stages3(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2148,6 +2128,64 @@ def lineitem_gbt_stages3(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_QTL_FINE = 4096
 QTL_FINE_WIDTH = 32.0
 N_QTL_BUCKETS = 10
+
+
+def _qtl_fine(col: str, width: float, n_fine: int = N_QTL_FINE) -> Column:
+    """The equi-width fine bin shared by every quantile-family stage
+    (one definition, mirrored textually by the oracles)."""
+    return F.greatest(
+        F.lit(0),
+        F.least(
+            F.lit(n_fine - 1),
+            F.floor(F.col(col).cast("double") / F.lit(width)).cast("int"),
+        ),
+    )
+
+
+def _qtl_fine_pairs(
+    features: tuple[tuple[str, str, float], ...], n_fine: int = N_QTL_FINE
+) -> Column:
+    """One ``(feature, fb)`` struct per feature of a row, to explode
+    into a per-feature fine histogram in one scan (the
+    :func:`_stump_hist` idiom)."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(name).alias("feature"),
+                _qtl_fine(col, w, n_fine).alias("fb"),
+            )
+            for name, col, w in features
+        ]
+    )
+
+
+def _qtl_bucketed(
+    hist: DataFrame, part: list[str], n_buckets: int
+) -> DataFrame:
+    """A fine histogram ``(part..., fb, n, ...)`` plus, per fine bin,
+    its cumulative count ``cum``, its partition's total ``nt`` and its
+    equi-depth ``bucket`` — the closed form of :func:`quantile_bins`,
+    one window pass over histogram rows partitioned by ``part``. Every
+    quantile-family stage buckets through this one definition."""
+    w = Window.partitionBy(*part).orderBy("fb")
+    c = hist.select(
+        "*",
+        F.sum("n")
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .alias("cum"),
+        F.sum("n")
+        .over(
+            w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        )
+        .alias("nt"),
+    )
+    return c.withColumn(
+        "bucket",
+        F.least(
+            F.lit(n_buckets - 1),
+            F.expr(f"CAST(((cum - n) * {n_buckets}) DIV nt AS INT)"),
+        ),
+    )
 
 
 #: Column names the quantile family (quantile_bins /
@@ -2242,41 +2280,13 @@ def quantile_bins(
         )
     _require_safe_group_cols("quantile_bins", group_cols)
     gc = list(group_cols)
-    fine = F.greatest(
-        F.lit(0),
-        F.least(
-            F.lit(n_fine - 1),
-            F.floor(F.col(col).cast("double") / F.lit(width)).cast("int"),
-        ),
-    )
     hist = (
-        df.select(*gc, fine.alias("fb"))
+        df.select(*gc, _qtl_fine(col, width, n_fine).alias("fb"))
         .groupBy(*gc, "fb")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    w_cum = (
-        Window.partitionBy(*gc)
-        .orderBy("fb")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = (
-        Window.partitionBy(*gc)
-        .orderBy("fb")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    c = hist.select(
-        *gc,
-        "fb",
-        "n",
-        F.sum("n").over(w_cum).alias("cum"),
-        F.sum("n").over(w_all).alias("nt"),
-    )
-    bucket = F.least(
-        F.lit(n_buckets - 1),
-        F.expr(f"CAST(((cum - n) * {n_buckets}) DIV nt AS INT)"),
-    )
     return (
-        c.select(*gc, bucket.alias("bucket"), "fb", "n", "nt")
+        _qtl_bucketed(hist, gc, n_buckets)
         .groupBy(*gc, "bucket")
         .agg(
             F.count(F.lit(1)).alias("n_fine_bins"),
@@ -2352,44 +2362,20 @@ def quantile_stump(
             "quantile_stump needs width > 0, n_fine >= 1, n_buckets >= 2 "
             f"(got width={width}, n_fine={n_fine}, n_buckets={n_buckets})"
         )
-    fine = F.greatest(
-        F.lit(0),
-        F.least(
-            F.lit(n_fine - 1),
-            F.floor(F.col(col).cast("double") / F.lit(width)).cast("int"),
-        ),
-    )
     hist = (
-        df.select(fine.alias("fb"), label.cast("int").alias("y"))
+        df.select(
+            _qtl_fine(col, width, n_fine).alias("fb"),
+            label.cast("int").alias("y"),
+        )
         .groupBy("fb")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("y").cast("bigint").alias("pos"),
         )
     )
-    w_cum = (
-        Window.orderBy("fb")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = (
-        Window.orderBy("fb")
-        .rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-    )
-    c = hist.select(
-        "fb",
-        "n",
-        "pos",
-        F.sum("n").over(w_cum).alias("cum"),
-        F.sum("n").over(w_all).alias("nt"),
-    )
-    bucket = F.least(
-        F.lit(n_buckets - 1),
-        F.expr(f"CAST(((cum - n) * {n_buckets}) DIV nt AS INT)"),
-    )
     bhist = (
-        c.select(bucket.alias("bin"), "n", "pos")
+        _qtl_bucketed(hist, [], n_buckets)
+        .select(F.col("bucket").alias("bin"), "n", "pos")
         .groupBy("bin")
         .agg(F.sum("n").alias("n"), F.sum("pos").alias("pos"))
         .select(F.lit(f"{col}_q{n_buckets}").alias("feature"), "*")
@@ -2471,26 +2457,11 @@ def quantile_stump_multi(
         )
     _require_safe_group_cols("quantile_stump_multi", group_cols)
     gc = list(group_cols)
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(name).alias("feature"),
-                F.greatest(
-                    F.lit(0),
-                    F.least(
-                        F.lit(n_fine - 1),
-                        F.floor(
-                            F.col(col).cast("double") / F.lit(w)
-                        ).cast("int"),
-                    ),
-                ).alias("fb"),
-            )
-            for name, col, w in features
-        ]
-    )
     hist = (
         df.select(
-            *gc, F.explode(pairs).alias("p"), label.cast("int").alias("y")
+            *gc,
+            F.explode(_qtl_fine_pairs(features, n_fine)).alias("p"),
+            label.cast("int").alias("y"),
         )
         .groupBy(*gc, "p.feature", "p.fb")
         .agg(
@@ -2498,31 +2469,9 @@ def quantile_stump_multi(
             F.sum("y").cast("bigint").alias("pos"),
         )
     )
-    w_cum = (
-        Window.partitionBy(*gc, "feature")
-        .orderBy("fb")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = (
-        Window.partitionBy(*gc, "feature")
-        .orderBy("fb")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    c = hist.select(
-        *gc,
-        "feature",
-        "fb",
-        "n",
-        "pos",
-        F.sum("n").over(w_cum).alias("cum"),
-        F.sum("n").over(w_all).alias("nt"),
-    )
-    bucket = F.least(
-        F.lit(n_buckets - 1),
-        F.expr(f"CAST(((cum - n) * {n_buckets}) DIV nt AS INT)"),
-    )
     bhist = (
-        c.select(*gc, "feature", bucket.alias("bin"), "n", "pos")
+        _qtl_bucketed(hist, [*gc, "feature"], n_buckets)
+        .select(*gc, "feature", F.col("bucket").alias("bin"), "n", "pos")
         .groupBy(*gc, "feature", "bin")
         .agg(F.sum("n").alias("n"), F.sum("pos").alias("pos"))
     )
@@ -2568,92 +2517,71 @@ def lineitem_multi_binned_stump(
     )
 
 
-def _qtl_fine(col: str, width: float, n_fine: int = N_QTL_FINE) -> Column:
-    """The equi-width fine bin shared by every quantile-family stage
-    (one definition, mirrored textually by the oracles)."""
-    return F.greatest(
-        F.lit(0),
-        F.least(
-            F.lit(n_fine - 1),
-            F.floor(F.col(col).cast("double") / F.lit(width)).cast("int"),
-        ),
-    )
-
-
-def quantile_bucket_map(
+def _quantile_maps(
     df: DataFrame,
-    col: str,
-    width: float,
-    n_fine: int = N_QTL_FINE,
-    n_buckets: int = N_QTL_BUCKETS,
+    features: tuple[tuple[str, str, float], ...],
     group_cols: tuple[str, ...] = (),
     cache_key: tuple | None = None,
-) -> DataFrame:
-    """The ``(fb, bucket)`` equi-depth assignment map for one feature:
-    the :func:`quantile_bins` closed form materialized as a ≤
-    n_fine-row frame, so PER-ROW bucket ids become one broadcast
-    equi-join instead of a second rank pass. This is the bridge that
-    lets row-level trainers (the GBT loop) consume adaptive bins: the
-    map is aggregate-sized, eagerly checkpointed (its one fine-
-    histogram scan runs once, not once per boosting stage), and exact
-    integers end to end — the oracle replays the identical map as a
-    CTE join.
+) -> dict[tuple, dict[str, list[tuple[int, int]]]]:
+    """The ``(fb, bucket)`` equi-depth assignment of every feature, fit
+    in ONE scan and collected once: ``{group key: {feature: [(fb,
+    bucket), …]}}``, each list sorted by ``fb``. Each row explodes into
+    one ``(feature, fb)`` pair per feature, the hash aggregate
+    map-side-combines to ≤ |groups|·|features|·n_fine histogram rows,
+    and :func:`_qtl_bucketed` applies :func:`quantile_bins`' closed
+    form per (group..., feature). Exact integers end to end; the
+    oracle replays the same maps as CTEs.
 
-    With ``group_cols`` the map is fit PER GROUP (every group gets
-    bucket edges adapted to its own distribution — the per-segment
-    form of :func:`quantile_bins`): the histogram and both windows
-    gain the group key, the frame grows to ≤ groups × n_fine rows
-    (still aggregate-sized for the low-cardinality segment keys this
-    serves), and the consumer's join gains the group columns.
+    With ``group_cols`` every group gets its own maps (edges adapted
+    to its own distributions — the per-segment form of
+    :func:`quantile_bins`).
 
-    ``cache_key`` (the registry passes ``(sf_dir,)``) shares the fit per
-    session among every quantile-family registry entry; a caller
-    passing one asserts that ``df``'s content is a pure function of
-    it. Keyless calls never cache."""
-    _require_safe_group_cols("quantile_bucket_map", group_cols)
+    ``cache_key`` (the registry passes ``(sf_dir,)``) shares the fit
+    per session among every quantile-family registry entry, one entry
+    per (cache_key, group_cols, features); a caller passing one
+    asserts that ``df``'s content is a pure function of it. Keyless
+    calls never cache."""
+    _require_safe_group_cols("_quantile_maps", group_cols)
+    gc = list(group_cols)
     if cache_key is not None:
         return session_cache(
             df.sparkSession,
-            (
-                "qtl_map", cache_key, col, width, n_fine, n_buckets,
-                tuple(group_cols),
-            ),
-            lambda: quantile_bucket_map(
-                df, col, width, n_fine, n_buckets, group_cols=group_cols
-            ),
+            ("qtl_maps", cache_key, tuple(gc), tuple(features)),
+            lambda: _quantile_maps(df, features, group_cols),
         )
-    gc = list(group_cols)
     hist = (
-        df.select(*gc, _qtl_fine(col, width, n_fine).alias("fb"))
-        .groupBy(*gc, "fb")
+        df.select(*gc, F.explode(_qtl_fine_pairs(features)).alias("p"))
+        .groupBy(*gc, "p.feature", "p.fb")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    w_cum = (
-        Window.partitionBy(*gc)
-        .orderBy("fb")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = (
-        Window.partitionBy(*gc)
-        .orderBy("fb")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    c = hist.select(
-        *gc,
-        "fb",
-        "n",
-        F.sum("n").over(w_cum).alias("cum"),
-        F.sum("n").over(w_all).alias("nt"),
-    )
-    m = c.select(
-        *gc,
-        "fb",
-        F.least(
-            F.lit(n_buckets - 1),
-            F.expr(f"CAST(((cum - n) * {n_buckets}) DIV nt AS INT)"),
-        ).alias("bucket"),
-    )
-    return m.localCheckpoint(eager=True)
+    maps: dict[tuple, dict[str, list[tuple[int, int]]]] = {}
+    for r in (
+        _qtl_bucketed(hist, [*gc, "feature"], N_QTL_BUCKETS)
+        .select(*gc, "feature", "fb", "bucket")
+        .collect()
+    ):
+        maps.setdefault(tuple(r[: len(gc)]), {}).setdefault(
+            r["feature"], []
+        ).append((r["fb"], r["bucket"]))
+    for per_feature in maps.values():
+        for pairs in per_feature.values():
+            pairs.sort()
+    return maps
+
+
+def _step_edges(pairs: list[tuple[int, int]]) -> list[int]:
+    """The edges of one fb-sorted ``(fb, bucket)`` map with step
+    multiplicity: the first fb of bucket ``B_j`` appears ``B_j −
+    B_{j−1}`` times (``B_0`` times for the first), so ``Σ [fb >=
+    edge] = bucket(fb)`` for every occupied fine bin — also where one
+    dominant fine bin skips whole buckets. Buckets never decrease
+    along fb (they come from a running count)."""
+    edges: list[int] = []
+    prev = 0
+    for fb, bucket in pairs:
+        edges.extend([fb] * (bucket - prev))
+        prev = bucket
+    return edges
 
 
 def _quantile_stump_binned(
@@ -2664,36 +2592,29 @@ def _quantile_stump_binned(
 ) -> DataFrame:
     """The :func:`_stump_binned` contract (``b_qty/b_disc/b_price``
     plus the 0/1 label) with EQUI-DEPTH buckets instead of the fixed
-    equi-width grid: each feature's per-row bucket arrives by a
-    broadcast join against its :func:`quantile_bucket_map` (inner
-    join loses nothing — every row's fine bin exists in the map by
-    construction: same expression, same data). Drop-in binned input
-    for :func:`gbt_boost`.
+    equi-width grid, from the per-feature maps of
+    :func:`_quantile_maps` (one scan and one collect for all
+    features). Drop-in binned input for :func:`gbt_boost`.
 
     With ``group_cols`` each group gets its OWN per-feature bucket
-    maps (edges fit to the group's distributions — the per-segment
-    binning of grouped :func:`quantile_bucket_map`) and the map joins
-    gain the group key; the output carries the group columns, the
-    grouped-:func:`gbt_boost` input contract.
+    maps (edges fit to the group's distributions); the output carries
+    the group columns, the grouped-:func:`gbt_boost` input contract.
 
     r15 OPTIMIZATION (guide §2.4/§3: remove the join outright): the
     per-row bucket is a pure CODEGEN STEP-COUNT EXPRESSION instead of
     a broadcast join — bucket(fb) = Σ over the map's bucket EDGES of
-    ``fb >= edge``,
-    each edge repeated (bucket step) times so skipped buckets (one
-    fine bin straddling several equi-depth boundaries) count
-    correctly. Identical values to the join (the edges come from the
-    SAME session-cached map; equality pinned in
-    tests/test_r15_optimization.py) with three broadcast hash joins per
-    trainer scan replaced by ≤ (n_buckets−1) integer comparisons per
-    feature per row — at any scale the scan no longer pays exchange
-    or build-side latency for aggregate-sized maps. The collect that
-    derives the edges is the map itself (already eagerly
-    materialized, ≤ |groups|·n_fine rows — the adjudicated
-    bounded-probe idiom) and is session-cached beside it. Groups
-    beyond :data:`_QTL_EXPR_MAX_GROUPS` fall back to the broadcast
-    join (a CASE with thousands of branches would blow up codegen)."""
+    ``fb >= edge``, each edge repeated (bucket step) times so skipped
+    buckets (one fine bin straddling several equi-depth boundaries)
+    count correctly (:func:`_step_edges`). Identical values to the
+    join (equality pinned in tests/test_r15_optimization.py), with ≤
+    (n_buckets−1) integer comparisons per feature per row instead of
+    three broadcast hash joins per trainer scan. Past
+    :data:`_QTL_EXPR_MAX_GROUPS` observed groups the maps are
+    broadcast-joined instead (a CASE with thousands of branches would
+    blow up codegen); the inner joins lose nothing, since every row's
+    fine bin is in its group's map by construction."""
     gc = list(group_cols)
+    maps = _quantile_maps(df, features, group_cols, cache_key)
     out = df.select(
         *gc,
         *[
@@ -2702,33 +2623,33 @@ def _quantile_stump_binned(
         ],
         F.expr(_STUMP_LABEL_SQL).alias("y"),
     )
-    for name, col, w in features:
-        m = quantile_bucket_map(
-            df, col, w, group_cols=group_cols, cache_key=cache_key
-        )
-        edges = _bucket_edges(
-            m,
-            gc,
-            cache_key=(
-                (cache_key, tuple(gc), name) if cache_key is not None else None
-            ),
-        )
-        if edges is not None:
+    use_expr = len(maps) <= _QTL_EXPR_MAX_GROUPS
+    _log.debug(
+        "quantile bucket maps: %d groups, expression cap %d -> %s",
+        len(maps),
+        _QTL_EXPR_MAX_GROUPS,
+        "step expression" if use_expr else "broadcast join",
+    )
+    for name, *_ in features:
+        if use_expr:
+            edges = {key: _step_edges(fm[name]) for key, fm in maps.items()}
             out = out.withColumn(
                 f"b_{name}",
                 _bucket_step_expr(F.col(f"_fb_{name}"), edges, gc),
             )
-        else:
-            out = out.join(
-                F.broadcast(
-                    m.select(
-                        *gc,
-                        F.col("fb").alias(f"_fb_{name}"),
-                        F.col("bucket").alias(f"b_{name}"),
-                    )
-                ),
-                [*gc, f"_fb_{name}"],
-            )
+            continue
+        schema = T.StructType(
+            [df.schema[g] for g in gc]
+            + [
+                T.StructField(f"_fb_{name}", T.IntegerType()),
+                T.StructField(f"b_{name}", T.IntegerType()),
+            ]
+        )
+        m = df.sparkSession.createDataFrame(
+            [(*key, fb, b) for key, fm in maps.items() for fb, b in fm[name]],
+            schema,
+        )
+        out = out.join(F.broadcast(m), [*gc, f"_fb_{name}"])
     return out.select(
         *gc, *[f"b_{name}" for name, *_ in STUMP_BINS], "y"
     )
@@ -2739,43 +2660,6 @@ def _quantile_stump_binned(
 #: values) but a thousand-branch CASE would regress compile time —
 #: past the cap the broadcast-join form is the right plan anyway.
 _QTL_EXPR_MAX_GROUPS = 64
-
-def _bucket_edges(
-    m: DataFrame, gc: list[str], cache_key: tuple | None = None
-) -> dict[tuple, list[int]] | None:
-    """Collect a quantile bucket map into per-group EDGE lists with
-    step multiplicity: for each group, edge fb ``f_j`` of occupied
-    bucket ``B_j`` appears ``B_j − B_{j−1}`` times (``B_0`` times for
-    the first), so ``Σ [fb >= f_j] = bucket(fb)`` exactly for every
-    OCCUPIED fine bin — including histories where one huge fine bin
-    skips whole buckets. Returns None past
-    :data:`_QTL_EXPR_MAX_GROUPS` (caller falls back to the join).
-    ``cache_key`` shares the bounded collect per session beside the
-    cached map it was derived from."""
-    if cache_key is not None:
-        return session_cache(
-            m.sparkSession,
-            ("qtl_edges", cache_key),
-            lambda: _bucket_edges(m, gc),
-        )
-    rows = m.collect()
-    per_group: dict[tuple, list[tuple[int, int]]] = {}
-    for r in rows:
-        key = tuple(r[g] for g in gc)
-        per_group.setdefault(key, []).append((r["fb"], r["bucket"]))
-    if len(per_group) > _QTL_EXPR_MAX_GROUPS:
-        return None
-    edges: dict[tuple, list[int]] = {}
-    for key, pairs in per_group.items():
-        pairs.sort()
-        es: list[int] = []
-        prev_bucket = 0
-        for fb, bucket in pairs:
-            if bucket > prev_bucket:
-                es.extend([fb] * (bucket - prev_bucket))
-                prev_bucket = bucket
-        edges[key] = es
-    return edges
 
 
 def _bucket_step_expr(
@@ -2817,9 +2701,10 @@ def lineitem_quantile_gbt(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeding the closed-form residual boosting loop. Identical
     recursion to :func:`lineitem_gbt_stages`' engine
     (:func:`gbt_boost`); only the bin definition changes, arriving
-    per row from three aggregate-sized bucket maps
-    (:func:`_quantile_stump_binned`), so the trainer still makes one
-    joint-histogram data pass."""
+    per row from the bucket maps of :func:`_quantile_stump_binned`
+    (one fine-histogram scan for all three features), so building
+    the entry reads the data twice: the map fit and the joint
+    histogram."""
     return gbt_boost(
         None,
         2,
@@ -2850,10 +2735,9 @@ def lineitem_quantile_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry query: the greedy DEPTH-2 tree on EQUI-DEPTH decile
     features — :func:`tree_depth2`'s routing and per-child split
     search with the adaptive bin definition swapped in via the same
-    broadcast bucket maps as :func:`lineitem_quantile_gbt`; completes
-    the model stack on adaptive grids (stump → multi-stump → GBT →
-    tree). One joint-histogram scan plus the aggregate-sized bucket
-    maps."""
+    bucket maps as :func:`lineitem_quantile_gbt`; completes the model
+    stack on adaptive grids (stump → multi-stump → GBT → tree). One
+    joint-histogram scan plus the one bucket-map fit scan."""
     li = load_table(spark, sf_dir, "lineitem")
     return tree_depth2(
         None,
@@ -2896,7 +2780,7 @@ def lineitem_status_quantile_gbt(
     """Registry query: the quantile-binned booster PER SEGMENT
     (l_linestatus) — the grouped leg of the trainer family (SURVEY
     §7.9): each segment fits its OWN equi-depth bucket maps to its
-    own feature distributions (grouped :func:`quantile_bucket_map`)
+    own feature distributions (grouped :func:`_quantile_maps`)
     and runs its OWN two-stage closed-form residual recursion
     (grouped :func:`gbt_boost` — per-segment histograms and stage
     winners from each segment's own cells). Definitionally equal to
@@ -2954,7 +2838,7 @@ def lineitem_status_gbt_isotonic(
     squared-loss booster's piecewise-constant margin) are fit to a
     monotone score→P(y=1) map PER SEGMENT via the same minimax
     closed form as :func:`lineitem_status_isotonic`. Composes the
-    grouped trainer (:func:`gbt_boost` ``wide=True`` over the
+    grouped booster and scorer (:func:`_qgbt_scored` over the
     per-segment equi-depth bins) with
     :func:`isotonic_calibration(group_cols)` — each segment
     calibrates its OWN model's scores on its own rows.
@@ -2967,12 +2851,13 @@ def lineitem_status_gbt_isotonic(
     PAV over at most 4 occupied histogram bins — exactly the
     score-resolution a 2-stage stump ensemble ships.
 
-    Scale: ONE data scan total (r15) — trainer stages AND the scorer
-    consume the checkpointed joint-bin cells (:func:`_joint_bin_hist`;
-    scores are a pure function of the bin columns, so the per-(seg, p)
-    counts are exact weighted regroups), and the isotonic epilogue
-    aggregates cell rows, all map-side-combined. Plus the 3
-    aggregate-sized bucket-map scans."""
+    Scale: two data scans total, both map-side-combined — the one
+    bucket-map fit for all features, and the joint-bin histogram
+    (:func:`_joint_bin_hist`), collected once; trainer stages AND
+    the scorer run on those cells on the driver (scores are a pure
+    function of the bin columns, so the per-(seg, p) counts are exact
+    sums of cell counts), and the isotonic epilogue reads ≤ 4 literal
+    rows per segment."""
     return isotonic_calibration(
         _qgbt_scored(spark, sf_dir, grouped=True),
         group_cols=("seg",),
@@ -2983,55 +2868,65 @@ def lineitem_status_gbt_isotonic(
 def _qgbt_scored(
     spark: SparkSession, sf_dir: str, grouped: bool = False
 ) -> DataFrame:
-    """The quantile-GBT scored frame, global or per-segment:
-    ``grouped=True`` fits per-segment maps (segment key aliased
-    ``seg``) and per-segment winners (scores joined back by the
-    segment key); ``grouped=False`` uses the global maps and the
-    1-row winner frame (crossJoin scalar idiom). One scorer
-    definition, both calibration entries. Every joint-histogram cell
-    is routed through its winner leaves exactly like the trainer's
-    carried membership (gbt_boost's m_i definition), using the
-    SHIPPED round-9 leaf values with the sum rounded to 9 (the
-    oracle's identical IEEE tree). Output: weighted cells
-    ``(…, p, _jn, _jpos)``; the consumer passes
+    """The quantile-GBT scored frame, global or per-segment
+    (``grouped=True`` fits per-segment maps and boosters, segment key
+    aliased ``seg``). One scorer definition, both calibration entries.
+
+    The joint-bin cells are collected once (:func:`_joint_cells`);
+    per group the 2-stage booster runs on them (:func:`_boost_group`)
+    and every cell is routed through both stages' winners exactly like
+    the trainer's carried membership (gbt_boost's m_i definition).
+    The score uses the SHIPPED round-9 leaf values with the sum
+    rounded to 9, ``p = round((ybar + ν·leaf₁) + ν·leaf₂, 9)``, the
+    oracle's identical IEEE tree; :func:`_round9` runs once per
+    distinct value. A score is a pure function of the cell's bins, so
+    the per-(group, p) counts are exact sums of cell counts.
+
+    Output: a literal ``(group..., p, _jn, _jpos)`` frame, ≤ 4 rows
+    per group (one per leaf pair); the consumer passes
     ``weight_cols=("_jn", "_jpos")`` to isotonic_calibration."""
     li = load_table(spark, sf_dir, "lineitem")
-    gc: tuple[str, ...] = ()
+    gc: list[str] = []
     if grouped:
         li = li.withColumn("seg", F.col("l_linestatus"))
-        gc = ("seg",)
-    binned = _quantile_stump_binned(li, group_cols=gc, cache_key=(sf_dir,))
-    # r15 OPTIMIZATION: the scorer consumes the SAME joint-histogram
-    # cells the trainer aggregates from (the per-row score p is a pure
-    # function of the bin columns, so the per-(group, p) counts are
-    # exact weighted regroups of the cells) — ONE data scan serves
-    # trainer AND scorer, and the downstream isotonic histogram
-    # aggregates ≤ cells rows instead of the data.
-    cells = _joint_bin_hist(binned, list(gc)).localCheckpoint(eager=True)
-    w = gbt_boost(
-        None, 2, binned=binned, group_cols=gc, wide=True, joint=cells
+        gc = ["seg"]
+    binned = _quantile_stump_binned(
+        li, group_cols=tuple(gc), cache_key=(sf_dir,)
     )
+    jvm = spark._jvm
+    nu = GBT_SHRINKAGE
     names = [name for name, *_ in STUMP_BINS]
-    nu = F.lit(GBT_SHRINKAGE)
-
-    def leaf(k: int) -> Column:
-        is_left = None
-        for name in names:
-            term = (F.col(f"f{k}") == name) & (
-                F.col(f"b_{name}") <= F.col(f"t{k}")
+    rows = []
+    for key, cells in _joint_cells(binned, gc).items():
+        model = _boost_group(jvm, cells, 2)
+        if model is None:
+            continue
+        winners, ybar = model
+        stages = [
+            (names.index(f), t, _round9(jvm, gl), _round9(jvm, gr))
+            for f, t, _nl, _nr, _sc, gl, gr in winners
+        ]
+        weights: dict[tuple[float, float], list[int]] = {}
+        for bins, n, pos in cells:
+            leaves = tuple(
+                gl if bins[fi] <= t else gr for fi, t, gl, gr in stages
             )
-            is_left = term if is_left is None else is_left | term
-        return F.when(is_left, F.round(F.col(f"gl{k}"), 9)).otherwise(
-            F.round(F.col(f"gr{k}"), 9)
+            w = weights.setdefault(leaves, [0, 0])
+            w[0] += n
+            w[1] += pos
+        rows.extend(
+            (*key, _round9(jvm, (ybar + nu * leaf1) + nu * leaf2), n, pos)
+            for (leaf1, leaf2), (n, pos) in weights.items()
         )
-
-    p = F.round(F.col("ybar") + nu * leaf(1) + nu * leaf(2), 9)
-    joined = (
-        cells.join(F.broadcast(w), list(gc))
-        if gc
-        else cells.crossJoin(F.broadcast(w))
+    schema = T.StructType(
+        [binned.schema[g] for g in gc]
+        + [
+            T.StructField("p", T.DoubleType()),
+            T.StructField("_jn", T.LongType()),
+            T.StructField("_jpos", T.LongType()),
+        ]
     )
-    return joined.select(*gc, p.alias("p"), "_jn", "_jpos")
+    return literal_frame(spark, schema, rows)
 
 
 def lineitem_gbt_isotonic(
@@ -3044,8 +2939,8 @@ def lineitem_gbt_isotonic(
     per-segment trainer → per-segment calibration): the shipped
     2-stage booster's raw predictions (≤ 4 distinct round-9 leaf
     sums) fit to one monotone score→P(y=1) map over the 1024-bin
-    histogram. Same scorer definition, 1-row broadcast winner frame,
-    global PAV tail."""
+    histogram. Same scorer definition (:func:`_qgbt_scored`), global
+    PAV tail."""
     return isotonic_calibration(
         _qgbt_scored(spark, sf_dir), weight_cols=("_jn", "_jpos")
     )
@@ -3106,7 +3001,14 @@ def _spread_small_scan(df: DataFrame) -> DataFrame:
     # spread); above it the Expand win dominates (lineitem_table_stats
     # 2.79 s → 2.22 s). Both bounds derive from the split size, never
     # from the local core count.
-    if size > max_split or size <= max_split // 32:
+    spread = max_split // 32 < size <= max_split
+    _log.debug(
+        "spread gate: size estimate %d B, split %d B -> %s",
+        size,
+        max_split,
+        "spread" if spread else "keep",
+    )
+    if not spread:
         return df
     return df.repartition(spark.sparkContext.defaultParallelism)
 

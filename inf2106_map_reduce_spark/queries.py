@@ -6260,12 +6260,14 @@ def _qtl_fine_sql(col: str, width: float) -> str:
 def _quantile_binned_base_cte(seg_sql: str | None = None) -> str:
     """The ``base`` CTE chain for the quantile-binned GBT: per-feature
     ``(fb, bucket)`` equi-depth maps (the quantile closed form) joined
-    back to each row's fine bin — mirrors
-    ``stats._quantile_stump_binned`` exactly. ``seg_sql`` (a column
-    expression, e.g. ``l_linestatus``) renders the PER-SEGMENT form
-    from the same template: the segment key groups each fine
-    histogram, partitions the rank windows, and keys the map joins —
-    grouped ``quantile_bucket_map`` term for term."""
+    back to each row's fine bin — the same maps
+    ``stats._quantile_stump_binned`` buckets by (one histogram per
+    feature here, one exploded histogram for all features there; the
+    counts are identical). ``seg_sql`` (a column expression, e.g.
+    ``l_linestatus``) renders the PER-SEGMENT form from the same
+    template: the segment key groups each fine histogram, partitions
+    the rank windows, and keys the map joins — grouped
+    ``stats._quantile_maps`` term for term."""
     sel = "seg, " if seg_sql else ""
     part = "PARTITION BY seg " if seg_sql else ""
     segdef = f"{seg_sql} AS seg, " if seg_sql else ""
@@ -6577,8 +6579,8 @@ def _gbt_boost_ctes(
     shared by :func:`_gbt_boost_oracle` (which appends the exploded
     stage-row select) and :func:`_status_qgbt_isotonic_oracle` (which
     instead SCORES rows against the final winner CTE ``w{K}`` — the
-    SQL twin of gbt_boost's ``wide=True``). One definition of the
-    trainer arithmetic, every consumer."""
+    SQL twin of the driver-side scorer ``stats._qgbt_scored``). One
+    definition of the trainer arithmetic, every consumer."""
     return _gbt_boost_oracle(n_stages, base_cte, seg, ctes_only=True)
 
 
@@ -6828,7 +6830,8 @@ def _qgbt_isotonic_oracle(seg: bool) -> str:
     (:func:`_gbt_boost_ctes` — equi-depth maps + the 2-stage residual
     recursion, per-segment when ``seg``) feeds a SCORED CTE that
     routes every row through the winner's leaves exactly like the
-    Spark scorer (shipped round-9 leaf values, ν = the shrinkage
+    driver-side scorer ``stats._qgbt_scored`` (shipped round-9 leaf
+    values, ν = the shrinkage
     literal, left-associated sum rounded to 9 before binning), then
     the shared PAV tail from :func:`_isotonic_oracle` fits the
     monotone map — the whole pipeline one declarative replay, one

@@ -292,7 +292,8 @@ def _session_timeout_fn(
     # under 8x data in the scaling probe but with a large constant
     # (42 s at 8x sf0.1); numpy diff/split of the sorted µs array does
     # the identical strict-> gap split batch-wide (probe re-measured
-    # after this rewrite — see SCALING.md round-10 rows).
+    # after this rewrite: 5.6× under 8× users, with the framework's
+    # per-key cost dominating — SCALING.md "Measured scale-up evidence").
     arr = np.sort(
         np.concatenate(
             [pdf["ts"].astype("int64").to_numpy() // 1000 for pdf in pdf_iter]

@@ -656,7 +656,7 @@ def streaming_upsert_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal).
 
     The pass drains its OWN fresh version history each call (the
-    measured ~1.6 s warm drain, SCALING.md) rather than sharing a
+    measured ~1.6 s warm drain at 1× sf0.1) rather than sharing a
     session cache: vacuum deletes files, and a deterministic,
     idempotent audit beats saving one drain — a shared tree would
     make the second run report zero deletions.

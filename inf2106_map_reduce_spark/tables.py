@@ -13,6 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLE_NAMES: tuple[str, ...] = (
     "region",
@@ -108,6 +109,20 @@ def event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
     )
+
+
+def literal_frame(
+    spark: SparkSession, schema: T.StructType, rows: list[tuple]
+) -> DataFrame:
+    """A small driver-side result as a literal plan: one Range row
+    inlined into ``rows`` (tuples in ``schema`` field order). The plan
+    scans nothing and needs no Python worker, so downstream rereads
+    are free; every value becomes a literal in the plan, so keep
+    ``rows`` to a few thousand values."""
+    literal = F.array(
+        *(F.struct(*(F.lit(v) for v in row)) for row in rows)
+    ).cast(T.ArrayType(schema))
+    return spark.range(1).select(F.inline(literal))
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

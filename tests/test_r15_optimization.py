@@ -5,10 +5,10 @@ forms they replaced.
 
 The optimizations under test:
 
-- ``stats._bucket_edges`` / ``_bucket_step_expr`` —
+- ``stats._step_edges`` / ``_bucket_step_expr`` —
   ``_quantile_stump_binned`` maps fine bins to equi-depth buckets
-  with a codegen step-count expression (edges collected from the
-  session-cached bucket map) instead of three broadcast joins.
+  with a codegen step-count expression (edges derived from the maps
+  ``_quantile_maps`` collects) instead of three broadcast joins.
 - ``stats._joint_bin_hist`` / ``_stump_hist_from_joint`` — the
   multi-stage trainers collapse the data to its joint bin histogram
   ONCE and derive every stage's per-(feature, bin) histogram (incl.
@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from inf2106_map_reduce_spark.operators import stats
+from inf2106_map_reduce_spark.plans import explain_str
 from inf2106_map_reduce_spark.tables import load_table
 
 
@@ -54,57 +55,44 @@ def test_joint_hist_regroup_equals_per_row_hist(spark, sf_oracle):
 
 
 def test_bucket_expression_equals_join_global_and_grouped(
-    spark, sf_oracle
+    spark, sf_oracle, monkeypatch
 ):
-    """The step-count expression and a broadcast join against the
-    same bucket maps must bucket every row identically — the edges
-    come from the same map, so any divergence is an edge-multiplicity
-    bug."""
+    """The step-count expression and the broadcast-join fallback (the
+    plan past _QTL_EXPR_MAX_GROUPS groups) must bucket every row
+    identically — both read the same collected maps, so any
+    divergence is an edge-multiplicity bug."""
     li = load_table(spark, sf_oracle, "lineitem")
-    for gc in ((), ("seg",)):
-        d = (
-            li.withColumn("seg", F.col("l_linestatus")) if gc else li
+    cases = ((), ("seg",))
+    cols = {gc: [*gc, "b_qty", "b_disc", "b_price", "y"] for gc in cases}
+    frames = {
+        gc: li.withColumn("seg", F.col("l_linestatus")) if gc else li
+        for gc in cases
+    }
+    want = {
+        gc: _rows(
+            stats._quantile_stump_binned(d, group_cols=gc)
+            .groupBy(*cols[gc]).count()
         )
-        a = stats._quantile_stump_binned(d, group_cols=gc)
-        b = d.select(
-            *gc,
-            *[
-                stats._qtl_fine(col, w).alias(f"_fb_{name}")
-                for name, col, w in stats.QSTUMP_FEATURES
-            ],
-            F.expr(stats._STUMP_LABEL_SQL).alias("y"),
-        )
-        for name, col, w in stats.QSTUMP_FEATURES:
-            m = stats.quantile_bucket_map(d, col, w, group_cols=gc)
-            b = b.join(
-                F.broadcast(
-                    m.select(
-                        *gc,
-                        F.col("fb").alias(f"_fb_{name}"),
-                        F.col("bucket").alias(f"b_{name}"),
-                    )
-                ),
-                [*gc, f"_fb_{name}"],
-            )
-        cols = [*gc, "b_qty", "b_disc", "b_price", "y"]
-        assert _rows(a.groupBy(*cols).count()) == _rows(
-            b.groupBy(*cols).count()
-        ), gc
+        for gc, d in frames.items()
+    }
+    monkeypatch.setattr(stats, "_QTL_EXPR_MAX_GROUPS", 0)
+    for gc, d in frames.items():
+        joined = stats._quantile_stump_binned(d, group_cols=gc)
+        assert "BroadcastHashJoin" in explain_str(joined, "formatted")
+        assert _rows(joined.groupBy(*cols[gc]).count()) == want[gc], gc
 
 
 def test_bucket_edges_handle_skipped_buckets(spark):
     """A fine bin so dominant that the cumulative rank jumps several
     equi-depth boundaries in one step must still bucket exactly like
     the map: the edge list repeats that bin's first fb once per
-    skipped bucket (the multiplicity contract of _bucket_edges)."""
+    skipped bucket (the multiplicity contract of _step_edges)."""
     # 90% of rows in one fine bin: buckets 0..8 collapse onto it
     vals = [5.0] * 900 + [float(100 + 32 * i) for i in range(100)]
     df = spark.createDataFrame([(v,) for v in vals], "x double")
-    m = stats.quantile_bucket_map(df, "x", 32.0)
-    edges = stats._bucket_edges(m, [])
-    assert edges is not None
-    want = {r["fb"]: r["bucket"] for r in m.collect()}
-    es = edges[()]
+    pairs = stats._quantile_maps(df, (("x", "x", 32.0),))[()]["x"]
+    es = stats._step_edges(pairs)
+    want = dict(pairs)
     got = {fb: sum(1 for e in es if fb >= e) for fb in want}
     assert got == want
     # the dominant bin's successor must carry multiplicity > 1
@@ -112,13 +100,16 @@ def test_bucket_edges_handle_skipped_buckets(spark):
 
 
 def test_bucket_edges_fall_back_past_group_cap(spark, sf_oracle):
-    """More groups than _QTL_EXPR_MAX_GROUPS returns None — the
-    caller keeps the broadcast-join plan instead of compiling a
-    thousand-branch CASE."""
+    """More groups than _QTL_EXPR_MAX_GROUPS keep the broadcast-join
+    plan instead of compiling a thousand-branch CASE, and the joins
+    route every row (each group's map holds every fine bin its rows
+    fall in)."""
     li = load_table(spark, sf_oracle, "lineitem").withColumn(
         "g", F.col("l_orderkey") % 1000
     )
-    m = stats.quantile_bucket_map(
-        li, "l_extendedprice", stats.QTL_FINE_WIDTH, group_cols=("g",)
-    )
-    assert stats._bucket_edges(m, ["g"]) is None
+    maps = stats._quantile_maps(li, stats.QSTUMP_FEATURES, ("g",))
+    assert len(maps) > stats._QTL_EXPR_MAX_GROUPS
+    binned = stats._quantile_stump_binned(li, group_cols=("g",))
+    plan = explain_str(binned, "simple")
+    assert plan.count("BroadcastHashJoin") == len(stats.QSTUMP_FEATURES)
+    assert binned.count() == li.count()

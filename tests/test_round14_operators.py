@@ -488,14 +488,15 @@ def test_quantile_gbt_plan_is_one_scan_per_stage(
     collapses to its joint bin histogram ONCE (stats._joint_bin_hist)
     and both stages run on the driver over the collected cells, so the
     LIVE plan is the literal stage rows with ZERO data scans.
-    Construction reads lineitem four times: one fine-histogram scan
-    per bucket map (three features) plus the joint histogram."""
+    Construction reads lineitem twice: one fine-histogram scan fits
+    the bucket maps of all three features, then the joint
+    histogram."""
     df, built = run_with_plans(spark, stats.lineitem_quantile_gbt, sf_oracle)
     plan = explain_str(df, "formatted")
     assert plan.count("lineitem.parquet") == 0, plan
     assert "Generate" in plan and "Range" in plan, plan  # literal rows
     assert "CollectLimit" not in plan
-    assert sum(p.count("lineitem.parquet") for p in built) == 4, built
+    assert sum(p.count("lineitem.parquet") for p in built) == 2, built
 
 
 def test_segmented_encoding_stump_matches_per_segment_runs(
@@ -584,14 +585,14 @@ def test_quantile_tree_plan_is_one_scan_per_level(
     """The data collapses to its joint bin histogram ONCE
     (stats._joint_bin_hist) and both levels regroup the checkpointed
     cells, so the LIVE plan shows ZERO data scans. Construction reads
-    lineitem four times: three bucket-map scans plus the joint
+    lineitem twice: the one bucket-map fit plus the joint
     histogram."""
     df, built = run_with_plans(spark, stats.lineitem_quantile_tree, sf_oracle)
     plan = explain_str(df, "formatted")
     assert plan.count("lineitem.parquet") == 0, plan
-    assert "ExistingRDD" in plan  # checkpointed maps + root frame
+    assert "ExistingRDD" in plan  # checkpointed cells + root frame
     assert "CollectLimit" not in plan
-    assert sum(p.count("lineitem.parquet") for p in built) == 4, built
+    assert sum(p.count("lineitem.parquet") for p in built) == 2, built
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,6 @@
 """Round-15 operators: the per-segment quantile-binned booster
 (grouped gbt_boost over grouped bucket maps — SURVEY §7.9), plus the
-grouped forms of quantile_bucket_map / _quantile_stump_binned it
+grouped forms of _quantile_maps / _quantile_stump_binned it
 composes. The streaming additions (grouped upsert retention, DLQ
 epoch-age retention) are tested in their own sections below as they
 land."""
@@ -56,9 +56,9 @@ def test_status_quantile_gbt_plan_is_one_scan_per_stage(
     segments together: the data collapses to its joint bin histogram
     ONCE (stats._joint_bin_hist) and every segment's stages run on the
     driver over the collected cells, so the live plan is the literal
-    stage rows with ZERO data scans. Construction reads lineitem four
-    times: three per-segment bucket-map scans plus the joint
-    histogram."""
+    stage rows with ZERO data scans. Construction reads lineitem
+    twice: one scan fits every segment's bucket maps for all three
+    features, then the joint histogram."""
     df, built = run_with_plans(
         spark, stats.lineitem_status_quantile_gbt, sf_oracle
     )
@@ -67,7 +67,7 @@ def test_status_quantile_gbt_plan_is_one_scan_per_stage(
     assert "Generate" in plan and "Range" in plan, plan  # literal rows
     assert "CollectLimit" not in plan
     assert "BatchEvalPython" not in plan
-    assert sum(p.count("lineitem.parquet") for p in built) == 4, built
+    assert sum(p.count("lineitem.parquet") for p in built) == 2, built
 
 
 def test_status_quantile_gbt_emits_full_trajectories(spark, sf_oracle):
@@ -85,20 +85,19 @@ def test_status_quantile_gbt_emits_full_trajectories(spark, sf_oracle):
 def test_grouped_bucket_map_matches_grouped_quantile_bins(
     spark, sf_oracle
 ):
-    """The grouped (fb -> bucket) map materializes grouped
-    quantile_bins' closed form: folding the map back to per-(seg,
+    """The grouped (fb -> bucket) maps materialize grouped
+    quantile_bins' closed form: folding the price map back to per-(seg,
     bucket) fine-bin ranges must reproduce quantile_bins' lo/hi bins
     exactly."""
     df = _seg_lineitem(spark, sf_oracle)
-    m = stats.quantile_bucket_map(
-        df, "l_extendedprice", stats.QTL_FINE_WIDTH, group_cols=("seg",)
+    maps = stats._quantile_maps(
+        df, stats.QSTUMP_FEATURES, group_cols=("seg",)
     )
-    folded = {
-        (r["seg"], r["bucket"]): (r["lo"], r["hi"])
-        for r in m.groupBy("seg", "bucket")
-        .agg(F.min("fb").alias("lo"), F.max("fb").alias("hi"))
-        .collect()
-    }
+    folded: dict = {}
+    for (seg,), per_feature in maps.items():
+        for fb, bucket in per_feature["price"]:
+            lo, hi = folded.get((seg, bucket), (fb, fb))
+            folded[(seg, bucket)] = (min(lo, fb), max(hi, fb))
     bins = stats.quantile_bins(
         df, "l_extendedprice", group_cols=("seg",)
     ).collect()
@@ -157,8 +156,8 @@ def test_status_quantile_tree_plan_is_one_scan_per_level(
     """Both levels regroup the checkpointed joint bin cells
     (stats._joint_bin_hist) for ALL segments, so the live plan shows
     ZERO data scans (the routing join broadcasts the per-segment root
-    frame). Construction reads lineitem four times: three per-segment
-    bucket-map scans plus the joint histogram."""
+    frame). Construction reads lineitem twice: the one per-segment
+    bucket-map fit plus the joint histogram."""
     df, built = run_with_plans(
         spark, stats.lineitem_status_quantile_tree, sf_oracle
     )
@@ -167,7 +166,7 @@ def test_status_quantile_tree_plan_is_one_scan_per_level(
     assert "ExistingRDD" in plan
     assert "CollectLimit" not in plan
     assert "BatchEvalPython" not in plan
-    assert sum(p.count("lineitem.parquet") for p in built) == 4, built
+    assert sum(p.count("lineitem.parquet") for p in built) == 2, built
 
 
 def test_status_quantile_gbt3_is_greedy_prefix_stable(spark, sf_oracle):
@@ -206,12 +205,12 @@ def test_status_quantile_gbt3_plan_is_one_scan_per_stage(
     # every stage runs on the driver over the collected joint bin
     # cells (stats._joint_bin_hist) — the live plan is the literal
     # stage rows with ZERO data scans; the third stage adds no scan to
-    # the four of the K = 2 trainer
+    # the two of the K = 2 trainer
     assert plan.count("lineitem.parquet") == 0, plan
     assert "Generate" in plan and "Range" in plan, plan  # literal rows
     assert "CollectLimit" not in plan
     assert "BatchEvalPython" not in plan
-    assert sum(p.count("lineitem.parquet") for p in built) == 4, built
+    assert sum(p.count("lineitem.parquet") for p in built) == 2, built
 
 
 def test_grouped_gbt_rejects_reserved_group_cols(spark, sf_oracle):

@@ -258,37 +258,25 @@ def test_round_open_snapshot_exists_for_newest_artifact():
 # ---------------------------------------------------------------------------
 
 
-def test_quantile_map_cache_contract(spark, sf_smoke):
+def test_quantile_map_cache_contract(spark, sf_smoke, cold_session_cache):
     """The registry bucket-map cache follows the encoding-grid
-    idiom: same cache_key + parameters → the SAME checkpointed
-    frame object (no refit); different group_cols → different fits;
-    keyless calls never cache."""
-    from inf2106_map_reduce_spark.tables import load_table
-
+    idiom: ONE entry per (cache_key, group_cols, features) holding
+    every feature's map; the same key returns the SAME object (no
+    refit); different group_cols → a different fit; keyless calls
+    never cache."""
     li = stats.load_table(spark, sf_smoke, "lineitem")
     key = (sf_smoke,)
-    m1 = stats.quantile_bucket_map(
-        li, "l_extendedprice", stats.QSTUMP_FEATURES[2][2],
-        cache_key=key,
-    )
-    m2 = stats.quantile_bucket_map(
-        li, "l_extendedprice", stats.QSTUMP_FEATURES[2][2],
-        cache_key=key,
-    )
-    assert m2 is m1
+    feats = stats.QSTUMP_FEATURES
+    m1 = stats._quantile_maps(li, feats, cache_key=key)
+    assert len(session._cache_entries) == 1
+    assert stats._quantile_maps(li, feats, cache_key=key) is m1
+    assert set(m1[()]) == {name for name, *_ in feats}
     seg = li.withColumn("seg", F.col("l_linestatus"))
-    mg = stats.quantile_bucket_map(
-        seg, "l_extendedprice", stats.QSTUMP_FEATURES[2][2],
-        group_cols=("seg",), cache_key=key,
-    )
+    mg = stats._quantile_maps(seg, feats, ("seg",), cache_key=key)
     assert mg is not m1
-    n_before = len(session._cache_entries)
-    keyless = stats.quantile_bucket_map(
-        li, "l_extendedprice", stats.QSTUMP_FEATURES[2][2],
-    )
-    assert len(session._cache_entries) == n_before
+    assert len(session._cache_entries) == 2
+    keyless = stats._quantile_maps(li, feats)
+    assert len(session._cache_entries) == 2
     assert keyless is not m1
     # the cached fit is the same map a fresh keyless fit produces
-    assert sorted(map(tuple, m1.collect())) == sorted(
-        map(tuple, keyless.collect())
-    )
+    assert keyless == m1

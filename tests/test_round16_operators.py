@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from inf2106_map_reduce_spark.operators import stats
+from inf2106_map_reduce_spark.plans import run_with_plans
 from inf2106_map_reduce_spark.streaming import windows as stream_windows
 
 
@@ -210,28 +211,25 @@ def test_status_gbt_isotonic_equals_filtered_slice_runs(
     }
     want_rows = {}
     li = stats.load_table(spark, sf_oracle, "lineitem")
-    names = [name for name, *_ in stats.STUMP_BINS]
     nu = F.lit(stats.GBT_SHRINKAGE)
     for s in segs:
         sl = li.filter(F.col("l_linestatus") == s)
         binned = stats._quantile_stump_binned(sl)
-        w = stats.gbt_boost(None, 2, binned=binned, wide=True)
+        # the model from the exploded stage rows (γ already round-9)
+        # plus the slice's mean label
+        stages = stats.gbt_boost(None, 2, binned=binned).collect()
+        n, pos = binned.agg(F.count(F.lit(1)), F.sum("y")).first()
+        ybar = F.lit(pos / n)
 
         def leaf(k):
-            is_left = None
-            for name in names:
-                term = (F.col(f"f{k}") == name) & (
-                    F.col(f"b_{name}") <= F.col(f"t{k}")
-                )
-                is_left = term if is_left is None else is_left | term
+            w = [r for r in stages if r["stage"] == k][0]
             return F.when(
-                is_left, F.round(F.col(f"gl{k}"), 9)
-            ).otherwise(F.round(F.col(f"gr{k}"), 9))
+                F.col(f"b_{w['feature']}") <= w["split_bin"],
+                F.lit(w["gamma_left"]),
+            ).otherwise(F.lit(w["gamma_right"]))
 
-        p = F.round(F.col("ybar") + nu * leaf(1) + nu * leaf(2), 9)
-        scored = binned.crossJoin(F.broadcast(w)).select(
-            p.alias("p"), F.col("y")
-        )
+        p = F.round(ybar + nu * leaf(1) + nu * leaf(2), 9)
+        scored = binned.select(p.alias("p"), F.col("y"))
         for r in stats.isotonic_calibration(scored).collect():
             want_rows[(s, r["bin"])] = (
                 r["n_rows"], r["pos"], r["rate"], r["iso"],
@@ -266,38 +264,6 @@ def test_status_gbt_isotonic_structure(spark, sf_oracle):
         assert sum(r["n_rows"] for r in rs) == seg_counts[seg]
 
 
-def test_gbt_wide_is_a_projection_of_the_exploded_form(
-    spark, sf_oracle
-):
-    """wide=True ships the SAME model: re-deriving the exploded
-    per-stage rows from the wide winner frame reproduces the
-    registry trainer's output exactly."""
-    li = stats.load_table(spark, sf_oracle, "lineitem").withColumn(
-        "seg", F.col("l_linestatus")
-    )
-    binned = stats._quantile_stump_binned(li, group_cols=("seg",))
-    wide = stats.gbt_boost(
-        None, 2, binned=binned, group_cols=("seg",), wide=True
-    ).collect()
-    exploded = {
-        (r["seg"], r["stage"]): (
-            r["feature"], r["split_bin"], r["n_left"], r["n_right"],
-            r["gamma_left"], r["gamma_right"],
-        )
-        for r in stats.lineitem_status_quantile_gbt(
-            spark, sf_oracle
-        ).collect()
-    }
-    derived = {}
-    for r in wide:
-        for k in (1, 2):
-            derived[(r["seg"], k)] = (
-                r[f"f{k}"], r[f"t{k}"], r[f"nw{k}"], r[f"nr{k}"],
-                round(r[f"gl{k}"], 9), round(r[f"gr{k}"], 9),
-            )
-    assert derived == exploded
-
-
 # ---------------------------------------------------------------------------
 # Round-16 LATE block
 # ---------------------------------------------------------------------------
@@ -317,28 +283,31 @@ def test_global_gbt_isotonic_is_the_single_segment_form(
         r["bin"]: (r["n_rows"], r["pos"], r["rate"], r["iso"])
         for r in stats.lineitem_gbt_isotonic(spark, sf_oracle).collect()
     }
-    # independent scoring: collect the 1-row wide winner, bin the
-    # scored rows, PAV in plain python over the tiny histogram
+    # independent scoring: the model from the exploded stage rows
+    # (γ already round-9) plus the mean label, every binned row scored
+    # in python, PAV in plain python over the tiny histogram
     li = stats.load_table(spark, sf_oracle, "lineitem")
     binned = stats._quantile_stump_binned(li)
-    w = stats.gbt_boost(None, 2, binned=binned, wide=True).first()
+    stages = {
+        r["stage"]: r
+        for r in stats.gbt_boost(None, 2, binned=binned).collect()
+    }
     names = [name for name, *_ in stats.STUMP_BINS]
     rows = binned.select(
         *[f"b_{n}" for n in names], "y"
     ).collect()
+    ybar = sum(r["y"] for r in rows) / len(rows)
     nu = stats.GBT_SHRINKAGE
 
     def leaf(r, k):
-        left = any(
-            w[f"f{k}"] == n and r[f"b_{n}"] <= w[f"t{k}"]
-            for n in names
-        )
-        return round(w[f"gl{k}"], 9) if left else round(w[f"gr{k}"], 9)
+        w = stages[k]
+        left = r[f"b_{w['feature']}"] <= w["split_bin"]
+        return w["gamma_left"] if left else w["gamma_right"]
 
     hist: dict = {}
     n_bins = stats.ROC_BINS
     for r in rows:
-        p = round(w["ybar"] + nu * leaf(r, 1) + nu * leaf(r, 2), 9)
+        p = round(ybar + nu * leaf(r, 1) + nu * leaf(r, 2), 9)
         b = max(0, min(int(math.floor(p * n_bins)), n_bins - 1))
         n, pos = hist.get(b, (0, 0))
         hist[b] = (n + 1, pos + r["y"])
@@ -358,6 +327,20 @@ def test_global_gbt_isotonic_is_the_single_segment_form(
         n, pos = hist[b]
         want[b] = (n, pos, round(pos / n, 9), round(iso, 9))
     assert got == want
+
+
+def test_gbt_isotonic_builds_from_two_scans(
+    spark, sf_oracle, cold_session_cache
+):
+    """A cold global calibration runs three SQL executions while it is
+    built: the one bucket-map fit for all features and the joint-cell
+    collect (the only two that read lineitem; booster and scorer run
+    on the driver over the collected cells), then the isotonic
+    histogram checkpoint over the literal scored cells."""
+    df, built = run_with_plans(spark, stats.lineitem_gbt_isotonic, sf_oracle)
+    assert len(built) == 3, built
+    assert sum("lineitem.parquet" in p for p in built) == 2, built
+    assert df.count() >= 1
 
 
 def test_table_stats_one_scan_and_values(spark, sf_oracle):
