@@ -770,11 +770,6 @@ def isotonic_calibration(
         )
     w_ord = Window.partitionBy(*gc).orderBy("bin")
     w_cum = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    # the occupied-bin index is consumed TWICE (both sides of the
-    # range self-join); an eager localCheckpoint (the repo's shared-
-    # stage idiom, e.g. the reused shingle table in functions/dedup)
-    # materializes the ≤ n_bins-row frame so the data scan runs
-    # exactly once — without it each consumer would replay the scan.
     idx = hist.select(
         *gc,
         "bin",
@@ -783,7 +778,17 @@ def isotonic_calibration(
         F.row_number().over(w_ord).alias("i"),
         F.sum("n").over(w_cum).alias("cn"),
         F.sum("pos").over(w_cum).alias("cp"),
-    ).localCheckpoint(eager=True)
+    )
+    if weight_cols is None:
+        # the occupied-bin index is consumed TWICE (both sides of the
+        # range self-join); an eager localCheckpoint (the repo's
+        # shared-stage idiom, e.g. the reused shingle table in
+        # functions/dedup) materializes the ≤ n_bins-row frame so the
+        # data scan runs exactly once — without it each consumer would
+        # replay the scan. Pre-aggregated cells (the GBT scorer's
+        # literal ≤ 4-rows-per-group frame) have no scan to replay, so
+        # checkpointing them would only add one SQL execution.
+        idx = idx.localCheckpoint(eager=True)
     a = idx.select(
         *[F.col(g).alias(f"_ga_{g}") for g in gc],
         F.col("i").alias("h"),

@@ -233,19 +233,31 @@ def stage_session_spans(
     return base
 
 
-def _session_source_dir(spark: SparkSession, sf_dir: str) -> str:
+def staged_event_spans(
+    spark: SparkSession,
+    sf_dir: str,
+    n_files: int = SESSION_SPAN_FILES,
+    cols: tuple[str, ...] = ("user_id", "ts"),
+    tag: str = "spans",
+) -> str:
     """The registry's _STAGED-guarded span staging of the events
-    snapshot (see :func:`stage_session_spans` for the invariant)."""
+    snapshot into ``n_files`` span files of ``cols`` (see
+    :func:`stage_session_spans` for the invariant), written once under
+    ``WORK_ROOT/streaming/<sf>/events_<tag><n_files>``. The
+    session/backfill/upsert entries stage the ``(user_id, ts)``
+    projection; the DLQ entries stage the full event row under
+    ``tag="dlq"``. The name carries the file count, so a stale stage
+    of another count never serves a run."""
     base = os.path.join(
         WORK_ROOT,
         "streaming",
         os.path.basename(os.path.normpath(sf_dir)),
-        f"events_spans{SESSION_SPAN_FILES}",
+        f"events_{tag}{n_files}",
     )
     done = os.path.join(base, "_STAGED")
     if not os.path.exists(done):
         stage_session_spans(
-            load_table(spark, sf_dir, "events"), base
+            load_table(spark, sf_dir, "events"), base, cols, n_files
         )
         open(done, "w").close()
     return base
@@ -414,7 +426,7 @@ def streaming_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     event, so state tracks ACTIVE users, not the key universe. The
     span staging is a snapshot-harness device only (see
     SESSION_SPAN_FILES)."""
-    src = _session_source_dir(spark, sf_dir)
+    src = staged_event_spans(spark, sf_dir)
     return _run_to_table(
         session_timeout_stream(src, spark),
         spark,

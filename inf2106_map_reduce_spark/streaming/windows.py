@@ -9,8 +9,6 @@ unbounded state at scale).
 from __future__ import annotations
 
 import datetime as dt
-import math
-import os
 import shutil
 import tempfile
 
@@ -19,6 +17,7 @@ from pyspark.sql import functions as F
 
 from inf2106_map_reduce_spark.session import scratch_dir, session_cache
 from inf2106_map_reduce_spark.streaming import stateful as stream_stateful
+from inf2106_map_reduce_spark.streaming import versioned
 
 from inf2106_map_reduce_spark.streaming.runtime import (
     batch_writer,
@@ -409,7 +408,7 @@ def streaming_backfill_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     emission/lag trajectory an operator watches to size a backfill.
 
     Reuses the session-timeout entry's span staging as-is
-    (``stateful._session_source_dir`` — SESSION_SPAN_FILES time-ordered
+    (``stateful.staged_event_spans`` — SESSION_SPAN_FILES time-ordered
     span files with pinned mtimes, so batch order == event-time order);
     the staging cost is shared with that entry.
 
@@ -429,7 +428,7 @@ def streaming_backfill_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     flushes every window the advancing watermark finalized, so sink
     pressure tracks the backfill RATE knob, not the archive size. The
     driver holds only O(batches) progress rows — never data."""
-    src = stream_stateful._session_source_dir(spark, sf_dir)
+    src = stream_stateful.staged_event_spans(spark, sf_dir)
     return backfill_lag_over(
         src,
         spark,
@@ -486,11 +485,7 @@ def backfill_lag_over(
     # the early epochs' watermarks and the inner join below would drop
     # their emitted windows. Fail loud instead — a deployment that
     # long must raise the buffer or capture progress via a listener.
-    emitted_epochs = {
-        int(name.split("=", 1)[1])
-        for name in os.listdir(sink)
-        if name.startswith("epoch=")
-    }
+    emitted_epochs = set(versioned.partition_values(sink, "epoch"))
     missing = emitted_epochs - {e for e, _ in wm_rows}
     if missing:
         raise RuntimeError(
@@ -588,7 +583,7 @@ def streaming_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reuses the session span staging (rate-limited multi-batch replay,
     shared cost with the session/backfill entries)."""
     table_root, last = _upsert_drain(spark, sf_dir)
-    return spark.read.parquet(f"{table_root}/v={last}")
+    return spark.read.parquet(versioned.version_dir(table_root, last))
 
 
 def _upsert_drain(
@@ -597,7 +592,7 @@ def _upsert_drain(
     """The versioned merge-upsert drain over the shared session span
     staging (see :func:`streaming_upsert_latest`)."""
     return _upsert_drain_from(
-        spark, stream_stateful._session_source_dir(spark, sf_dir)
+        spark, stream_stateful.staged_event_spans(spark, sf_dir)
     )
 
 
@@ -615,7 +610,7 @@ def _upsert_drain_from(
 
     def _merge_batch(batch_df, epoch):
         cur = (
-            spark.read.parquet(f"{table_root}/v={epoch - 1}")
+            spark.read.parquet(versioned.version_dir(table_root, epoch - 1))
             if epoch > 0
             else empty
         )
@@ -626,15 +621,10 @@ def _upsert_drain_from(
         )
         merge_latest(cur, delta).repartition(1).write.mode(
             "overwrite"
-        ).parquet(f"{table_root}/v={epoch}")
+        ).parquet(versioned.version_dir(table_root, epoch))
 
     drain(_span_stream(spark, src), _merge_batch)
-    last = max(
-        int(name.split("=", 1)[1])
-        for name in os.listdir(table_root)
-        if name.startswith("v=")
-    )
-    return table_root, last
+    return table_root, max(versioned.partition_values(table_root, "v"))
 
 
 def streaming_upsert_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -667,13 +657,13 @@ def streaming_upsert_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-partition files, same recipe."""
     table_root, last = _upsert_drain(spark, sf_dir)
     removed = 0
-    for name in sorted(os.listdir(table_root)):
-        if name.startswith("v=") and int(name.split("=", 1)[1]) < last:
-            shutil.rmtree(os.path.join(table_root, name))
+    for v in versioned.partition_values(table_root, "v"):
+        if v < last:
+            versioned.drop(table_root, v)
             removed += 1
-    survivors = [n for n in os.listdir(table_root) if n.startswith("v=")]
-    assert survivors == [f"v={last}"], survivors
-    latest = spark.read.parquet(f"{table_root}/v={last}")
+    survivors = versioned.partition_values(table_root, "v")
+    assert survivors == [last], survivors
+    latest = spark.read.parquet(versioned.version_dir(table_root, last))
     retained = latest.agg(
         F.count(F.lit(1)).alias("n_keys"),
         F.sum("n_events").cast("bigint").alias("sum_n_events"),
@@ -704,28 +694,6 @@ UPSERT_RETENTION_SPANS = 4
 UPSERT_KEEP_VERSIONS = 2
 
 
-def _upsert_retention_source(spark: SparkSession, sf_dir: str) -> str:
-    """_STAGED-guarded 4-span staging of (user_id, ts) for the
-    retention entry — same helper, same batch-order invariant as
-    every other staging (:func:`stream_stateful.stage_session_spans`)."""
-    base = os.path.join(
-        stream_stateful.WORK_ROOT,
-        "streaming",
-        os.path.basename(os.path.normpath(sf_dir)),
-        f"events_spans{UPSERT_RETENTION_SPANS}",
-    )
-    done = os.path.join(base, "_STAGED")
-    if not os.path.exists(done):
-        stream_stateful.stage_session_spans(
-            load_table(spark, sf_dir, "events"),
-            base,
-            cols=("user_id", "ts"),
-            n_files=UPSERT_RETENTION_SPANS,
-        )
-        open(done, "w").close()
-    return base
-
-
 def streaming_upsert_retention(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -754,19 +722,16 @@ def streaming_upsert_retention(
     metadata, the audit scans only the retained snapshots; with
     partition-scoped overwrites the aged versions are key-partition
     files."""
-    src = _upsert_retention_source(spark, sf_dir)
+    src = stream_stateful.staged_event_spans(
+        spark, sf_dir, UPSERT_RETENTION_SPANS
+    )
     table_root, last = _upsert_drain_from(spark, src)
     keep = set(range(last - UPSERT_KEEP_VERSIONS + 1, last + 1))
-    versions = sorted(
-        int(n.split("=", 1)[1])
-        for n in os.listdir(table_root)
-        if n.startswith("v=")
-    )
     parts = []
-    for v in versions:
+    for v in versioned.partition_values(table_root, "v"):
         if v in keep:
             continue
-        shutil.rmtree(os.path.join(table_root, f"v={v}"))
+        versioned.drop(table_root, v)
         parts.append(
             spark.range(1).select(
                 F.lit("vacuumed").alias("disposition"),
@@ -776,14 +741,10 @@ def streaming_upsert_retention(
                 F.lit(None).cast("timestamp").alias("max_last_ts"),
             )
         )
-    survivors = sorted(
-        int(n.split("=", 1)[1])
-        for n in os.listdir(table_root)
-        if n.startswith("v=")
-    )
+    survivors = versioned.partition_values(table_root, "v")
     assert survivors == sorted(keep), survivors
     for v in survivors:
-        snap = spark.read.parquet(f"{table_root}/v={v}")
+        snap = spark.read.parquet(versioned.version_dir(table_root, v))
         parts.append(
             snap.agg(
                 F.count(F.lit(1)).alias("n_keys"),
@@ -832,8 +793,9 @@ def _grouped_upsert_drain_from(
 
     The touched-group list is a bounded driver collect (≤ n_groups
     rows — the adjudicated bounded-probe idiom); which prior version
-    holds each group's state is driver-side directory metadata. Both
-    are metastore-shaped costs, never data.
+    holds each group's state is one :func:`versioned.as_of` lookup at
+    ``e − 1`` per batch, driver-side metadata. Both are
+    metastore-shaped costs, never data.
 
     Returns ``(table_root, last_epoch)``."""
     table_root = scratch_dir(spark, "upsert_grouped_")
@@ -842,25 +804,6 @@ def _grouped_upsert_drain_from(
         "g int, user_id bigint, n_events bigint, "
         "first_ts timestamp, last_ts timestamp",
     )
-
-    def _latest_dir_for(g: int, before: int) -> str | None:
-        versions = sorted(
-            (
-                int(n.split("=", 1)[1])
-                for n in os.listdir(table_root)
-                if n.startswith("v=")
-                and os.path.isdir(
-                    os.path.join(table_root, n, f"g={g}")
-                )
-                and int(n.split("=", 1)[1]) < before
-            ),
-            reverse=True,
-        )
-        return (
-            os.path.join(table_root, f"v={versions[0]}", f"g={g}")
-            if versions
-            else None
-        )
 
     def _merge_batch(batch_df, epoch):
         # (r15: an eager localCheckpoint of delta was tried here —
@@ -885,12 +828,14 @@ def _grouped_upsert_drain_from(
         )
         if not touched:
             return  # an empty micro-batch advances no partition
+        latest = versioned.as_of(table_root, epoch - 1)
         parts = [empty]
         for g in touched:
-            d = _latest_dir_for(g, epoch)
-            if d is not None:
+            if g in latest:
                 parts.append(
-                    spark.read.parquet(d).select(
+                    spark.read.parquet(
+                        versioned.version_dir(table_root, latest[g], g)
+                    ).select(
                         F.lit(g).cast("int").alias("g"),
                         "user_id",
                         "n_events",
@@ -925,15 +870,10 @@ def _grouped_upsert_drain_from(
         # distinct g its own task whenever groups <= partitions.
         merged.repartitionByRange(n_groups, "g").write.partitionBy(
             "g"
-        ).mode("overwrite").parquet(f"{table_root}/v={epoch}")
+        ).mode("overwrite").parquet(versioned.version_dir(table_root, epoch))
 
     drain(_span_stream(spark, src), _merge_batch)
-    last = max(
-        int(name.split("=", 1)[1])
-        for name in os.listdir(table_root)
-        if name.startswith("v=")
-    )
-    return table_root, last
+    return table_root, max(versioned.partition_values(table_root, "v"))
 
 
 #: The pinned AS-OF version for the time-travel read entry: one
@@ -981,7 +921,10 @@ def _cached_grouped_drain(spark: SparkSession, sf_dir: str) -> str:
         spark,
         ("grouped_drain", sf_dir),
         lambda: _grouped_upsert_drain_from(
-            spark, _upsert_retention_source(spark, sf_dir)
+            spark,
+            stream_stateful.staged_event_spans(
+                spark, sf_dir, UPSERT_RETENTION_SPANS
+            ),
         ),
     )[0]
 
@@ -991,36 +934,12 @@ def _asof_state(
 ) -> DataFrame:
     """The reconstructed keyed table as of version ``v`` over a
     partition-scoped tree: per key group, that group's newest
-    snapshot at version ≤ v (directory-metadata resolution, one
-    snapshot scan per group)."""
-    versions = sorted(
-        int(n.split("=", 1)[1])
-        for n in os.listdir(table_root)
-        if n.startswith("v=")
-    )
+    snapshot at version ≤ v (resolved by :func:`versioned.as_of` from
+    the tree's metadata, one snapshot scan per group)."""
     parts = []
-    groups = sorted(
-        {
-            int(sub.split("=", 1)[1])
-            for ver in versions
-            for sub in os.listdir(os.path.join(table_root, f"v={ver}"))
-            if sub.startswith("g=")
-        }
-    )
-    for g in groups:
-        best = [
-            ver
-            for ver in versions
-            if ver <= v
-            and os.path.isdir(
-                os.path.join(table_root, f"v={ver}", f"g={g}")
-            )
-        ]
-        if not best:
-            continue  # group born after v — absent from the as-of state
-        snap = spark.read.parquet(
-            os.path.join(table_root, f"v={best[-1]}", f"g={g}")
-        )
+    # a group born after v is absent from the as-of state
+    for g, w in sorted(versioned.as_of(table_root, v).items()):
+        snap = spark.read.parquet(versioned.version_dir(table_root, w, g))
         parts.append(
             snap.select(
                 F.lit(g).cast("int").alias("g"),
@@ -1193,11 +1112,7 @@ def streaming_upsert_scd2(
     by the same count-monotonicity test, and closes intervals with
     the same lead()."""
     table_root = _cached_grouped_drain(spark, sf_dir)
-    versions = sorted(
-        int(n.split("=", 1)[1])
-        for n in os.listdir(table_root)
-        if n.startswith("v=")
-    )
+    versions = versioned.partition_values(table_root, "v")
     cols = ["g", "user_id", "n_events", "first_ts", "last_ts"]
     birth = (
         _asof_state(spark, table_root, versions[0])
@@ -1268,17 +1183,9 @@ def _stage_compacted_tree(
     table_root = _cached_grouped_drain(spark, sf_dir)
     compact_root = scratch_dir(spark, "upsert_compacted_")
     meta = []
-    for vname in sorted(os.listdir(table_root)):
-        if not vname.startswith("v="):
-            continue
-        v = int(vname.split("=", 1)[1])
-        for gname in sorted(os.listdir(os.path.join(table_root, vname))):
-            if not gname.startswith("g="):
-                continue
-            g = int(gname.split("=", 1)[1])
-            snap = spark.read.parquet(
-                os.path.join(table_root, vname, gname)
-            )
+    for g, versions in sorted(versioned.group_writes(table_root).items()):
+        for v in versions:
+            snap = spark.read.parquet(versioned.version_dir(table_root, v, g))
             # range partitioning on the snapshot's unique key gives
             # EXACTLY min(n_keys, FRAG) files (fewer distinct keys
             # than partitions → the range partitioner creates one
@@ -1292,14 +1199,9 @@ def _stage_compacted_tree(
             snap.repartitionByRange(
                 UPSERT_COMPACT_FRAG, "user_id"
             ).write.mode("overwrite").parquet(frag_dir)
-            frag_files = [
-                f for f in os.listdir(frag_dir) if f.endswith(".parquet")
-            ]
-            frag_bytes = sum(
-                os.path.getsize(os.path.join(frag_dir, f))
-                for f in frag_files
-            )
-            n_out = max(1, math.ceil(frag_bytes / COMPACT_TARGET_BYTES))
+            frag_files = versioned.parquet_files(frag_dir)
+            frag_bytes = versioned.parquet_bytes(frag_dir)
+            n_out = versioned.compact_file_count(frag_bytes)
             # ORACLE CONTRACT (fail at stage time, not oracle-diff
             # time): _grouped_compaction_oracle pins files_after to
             # the literal 1, valid only while every partition's
@@ -1311,19 +1213,18 @@ def _stage_compacted_tree(
                 shutil.rmtree(frag_dir, ignore_errors=True)
                 raise AssertionError(
                     f"compaction staging: partition v={v}/g={g} holds "
-                    f"{frag_bytes} bytes > target {COMPACT_TARGET_BYTES}"
+                    f"{frag_bytes} bytes > target "
+                    f"{versioned.COMPACT_TARGET_BYTES}"
                     f" -> {n_out} output files, but the DuckDB oracle "
                     "(_grouped_compaction_oracle) pins files_after=1; "
                     "teach the oracle the ceil(bytes/target) closed "
                     "form before running this entry at this SF"
                 )
-            out_dir = os.path.join(compact_root, vname, gname)
+            out_dir = versioned.version_dir(compact_root, v, g)
             spark.read.parquet(frag_dir).repartition(n_out).write.mode(
                 "overwrite"
             ).parquet(out_dir)
-            n_after = len(
-                [f for f in os.listdir(out_dir) if f.endswith(".parquet")]
-            )
+            n_after = len(versioned.parquet_files(out_dir))
             meta.append((g, v, len(frag_files), n_after))
             # frag accounting (frag_files/frag_bytes) is captured and
             # the compacted rewrite is durable — the staging fragments
@@ -1424,19 +1325,20 @@ def streaming_upsert_write_amplification(
     (the grouped-retention argument); its changed keys are the
     span's distinct users."""
     table_root = _cached_grouped_drain(spark, sf_dir)
-    src = _upsert_retention_source(spark, sf_dir)
+    src = stream_stateful.staged_event_spans(
+        spark, sf_dir, UPSERT_RETENTION_SPANS
+    )
     written = (
         spark.read.option("basePath", table_root)
         .parquet(table_root)
         .groupBy(F.col("v").cast("int").alias("version"))
         .agg(F.count(F.lit(1)).alias("rows_written"))
     )
-    spans = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
     parts = [
-        spark.read.parquet(os.path.join(src, fname)).select(
+        spark.read.parquet(span).select(
             F.lit(v).cast("int").alias("version"), "user_id"
         )
-        for v, fname in enumerate(spans)
+        for v, span in enumerate(versioned.parquet_files(src))
     ]
     deltas = parts[0]
     for p in parts[1:]:
@@ -1462,7 +1364,7 @@ def streaming_upsert_changes_midwindow(
     final version) of the partition-scoped sink (SURVEY §7.10) — the
     one (v0, v1) class the stepwise and whole-window entries leave
     unexercised: BOTH endpoints resolve per group through the
-    latest-≤-v directory walk (the whole-window entry's v0 = 0 side
+    latest-≤-v as-of lookup (the whole-window entry's v0 = 0 side
     is degenerate — every group's state at 0 is its first write or
     absent), and the window spans MULTIPLE batches without reaching
     back to birth, the shape an incremental consumer that fell
@@ -1516,18 +1418,12 @@ def streaming_upsert_group_retention(
     scoped write amplification a 100 TB serving table requires
     (a full-table rewrite per version is the thing this entry
     retires)."""
-    src = _upsert_retention_source(spark, sf_dir)
-    # per-group retention derives versions from the directory walk
-    # below; the drain's last-epoch return is not needed here
+    src = stream_stateful.staged_event_spans(
+        spark, sf_dir, UPSERT_RETENTION_SPANS
+    )
+    # per-group retention works from each group's own write history;
+    # the drain's last-epoch return is not needed here
     table_root, _ = _grouped_upsert_drain_from(spark, src)
-    wrote: dict[int, list[int]] = {}
-    for name in sorted(os.listdir(table_root)):
-        if not name.startswith("v="):
-            continue
-        v = int(name.split("=", 1)[1])
-        for sub in os.listdir(os.path.join(table_root, name)):
-            if sub.startswith("g="):
-                wrote.setdefault(int(sub.split("=", 1)[1]), []).append(v)
     # r15 OPTIMIZATION (guide §6/§2.4): the audit used to union one
     # tiny per-(group, version) subtree per partition — a scan+agg
     # plan PER RETAINED DIR and a spark.range(1) PER VACUUMED ROW,
@@ -1540,15 +1436,10 @@ def streaming_upsert_group_retention(
     # driver-local createDataFrame (bounded by the retention math,
     # never data). Identical rows, order-insensitive.
     vacuumed_ids: list[tuple[int, int]] = []
-    for g, versions in sorted(wrote.items()):
-        versions = sorted(versions)
-        keep = set(versions[-UPSERT_KEEP_VERSIONS:])
-        for v in versions:
-            if v not in keep:
-                shutil.rmtree(
-                    os.path.join(table_root, f"v={v}", f"g={g}")
-                )
-                vacuumed_ids.append((g, v))
+    for g, versions in sorted(versioned.group_writes(table_root).items()):
+        for v in versions[:-UPSERT_KEEP_VERSIONS]:
+            versioned.drop(table_root, v, g)
+            vacuumed_ids.append((g, v))
     retained = (
         spark.read.option("basePath", table_root)
         .parquet(table_root)
@@ -1619,29 +1510,6 @@ def dlq_reason() -> F.Column:
     return reason
 
 
-def _dlq_source_dir(spark: SparkSession, sf_dir: str) -> str:
-    """_STAGED-guarded staging of the FULL event row (the session/
-    backfill stagings carry only user_id+ts) into DLQ_SPAN_FILES
-    time-span files — same batch-order invariant, same helper
-    (:func:`stream_stateful.stage_session_spans`)."""
-    base = os.path.join(
-        stream_stateful.WORK_ROOT,
-        "streaming",
-        os.path.basename(os.path.normpath(sf_dir)),
-        f"events_dlq{DLQ_SPAN_FILES}",
-    )
-    done = os.path.join(base, "_STAGED")
-    if not os.path.exists(done):
-        stream_stateful.stage_session_spans(
-            load_table(spark, sf_dir, "events"),
-            base,
-            cols=("event_id", "ts", "user_id", "event_type", "value"),
-            n_files=DLQ_SPAN_FILES,
-        )
-        open(done, "w").close()
-    return base
-
-
 #: Corrected rule table for the REDRIVE pass: triage found the value
 #: cap was a false positive (out-of-range values are legitimate), so
 #: only the error-telemetry rule survives — quarantined rows are
@@ -1690,7 +1558,13 @@ def _dlq_sink_roots(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
 def _run_dlq_split(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Drain the DLQ split stream into fresh good/quarantine sinks."""
-    src = _dlq_source_dir(spark, sf_dir)
+    src = stream_stateful.staged_event_spans(
+        spark,
+        sf_dir,
+        DLQ_SPAN_FILES,
+        cols=("event_id", "ts", "user_id", "event_type", "value"),
+        tag="dlq",
+    )
     good_root = scratch_dir(spark, "dlq_good_")
     dlq_root = scratch_dir(spark, "dlq_bad_")
 
@@ -1707,13 +1581,6 @@ _DLQ_EVENT_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, "
     "event_type string, value double"
 )
-
-#: Target output-file size for the retention pass's compaction
-#: rewrite. 128 MB = the classic parquet scan-split sweet spot (one
-#: file ≈ one task at default maxPartitionBytes); the test-scale
-#: quarantine is far below one target, so the rewrite lands in a
-#: single file — pinned in tests.
-COMPACT_TARGET_BYTES = 128 * 1024 * 1024
 
 
 def _dlq_summary(
@@ -1972,13 +1839,7 @@ def _dlq_grouped_age_retention_pass(
     retained = tagged.filter(F.col("disposition") == "retained").drop(
         "disposition", "_us"
     )
-    tree_bytes = sum(
-        os.path.getsize(os.path.join(dirpath, f))
-        for dirpath, _, files in os.walk(dlq_root)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    n_out = max(1, math.ceil(tree_bytes / COMPACT_TARGET_BYTES))
+    n_out = versioned.compact_file_count(versioned.parquet_bytes(dlq_root))
     compact_root = scratch_dir(spark, prefix)
     retained.repartition(n_out).write.mode("overwrite").parquet(
         compact_root
@@ -2104,13 +1965,7 @@ def dlq_retention_pass(
     # right-size the rewrite from the source tree's actual bytes (the
     # maintenance_compaction sizing rule, computed instead of pinned:
     # file listing is driver-side metadata, never data)
-    tree_bytes = sum(
-        os.path.getsize(os.path.join(dirpath, f))
-        for dirpath, _, files in os.walk(dlq_root)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    n_out = max(1, math.ceil(tree_bytes / COMPACT_TARGET_BYTES))
+    n_out = versioned.compact_file_count(versioned.parquet_bytes(dlq_root))
     compact_root = scratch_dir(spark, "dlq_retained_")
     retained.repartition(n_out).write.mode("overwrite").parquet(
         compact_root

@@ -407,7 +407,13 @@ def test_dlq_epoch_overwrite_is_idempotent(spark, sf_oracle, tmp_path):
     doubling it: routing the same batch twice through the writer body
     leaves exactly one copy in each sink (the at-least-once contract
     foreachBatch requires of its writer)."""
-    src = stream_windows._dlq_source_dir(spark, sf_oracle)
+    src = stream_stateful.staged_event_spans(
+        spark,
+        sf_oracle,
+        stream_windows.DLQ_SPAN_FILES,
+        cols=("event_id", "ts", "user_id", "event_type", "value"),
+        tag="dlq",
+    )
     first = sorted(glob.glob(os.path.join(src, "*.parquet")))[0]
     batch = spark.read.parquet(first)
     good_root = str(tmp_path / "good")
@@ -517,7 +523,13 @@ def test_staging_cols_param_preserves_default_contract(spark, sf_oracle, tmp_pat
     assert os.path.getmtime(files[0]) < os.path.getmtime(files[1])
     cols = spark.read.parquet(files[0]).columns
     assert cols == ["user_id", "ts"]
-    dlq_src = stream_windows._dlq_source_dir(spark, sf_oracle)
+    dlq_src = stream_stateful.staged_event_spans(
+        spark,
+        sf_oracle,
+        stream_windows.DLQ_SPAN_FILES,
+        cols=("event_id", "ts", "user_id", "event_type", "value"),
+        tag="dlq",
+    )
     dlq_files = sorted(glob.glob(os.path.join(dlq_src, "*.parquet")))
     assert len(dlq_files) == stream_windows.DLQ_SPAN_FILES
     assert spark.read.parquet(dlq_files[0]).columns == [

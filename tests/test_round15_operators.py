@@ -227,6 +227,7 @@ def test_grouped_gbt_rejects_reserved_group_cols(spark, sf_oracle):
 
 import os
 
+from inf2106_map_reduce_spark.streaming import stateful as stream_stateful
 from inf2106_map_reduce_spark.streaming import windows as stream_windows
 
 
@@ -283,7 +284,9 @@ def test_group_retention_layout_is_partition_scoped(spark, sf_oracle):
     (v=<e>/g=<grp> directories), and each group's snapshot at its
     latest version <= e equals the running aggregate of the staged
     span files 0..e for that group — the time-travel read path."""
-    src = stream_windows._upsert_retention_source(spark, sf_oracle)
+    src = stream_stateful.staged_event_spans(
+        spark, sf_oracle, stream_windows.UPSERT_RETENTION_SPANS
+    )
     root, last = stream_windows._grouped_upsert_drain_from(spark, src)
     versions = sorted(
         int(n.split("=", 1)[1])
@@ -362,7 +365,9 @@ def test_asof_read_equals_span_prefix_aggregate(spark, sf_oracle):
             spark, sf_oracle
         ).collect()
     }
-    src = stream_windows._upsert_retention_source(spark, sf_oracle)
+    src = stream_stateful.staged_event_spans(
+        spark, sf_oracle, stream_windows.UPSERT_RETENTION_SPANS
+    )
     v = stream_windows.UPSERT_AS_OF_VERSION
     spans = sorted(
         f for f in os.listdir(src) if f.endswith(".parquet")
@@ -550,7 +555,9 @@ def test_upsert_changes_change_test_is_count_monotone(spark, sf_oracle):
     feed = stream_windows.streaming_upsert_changes(
         spark, sf_oracle
     ).collect()
-    src = stream_windows._upsert_retention_source(spark, sf_oracle)
+    src = stream_stateful.staged_event_spans(
+        spark, sf_oracle, stream_windows.UPSERT_RETENTION_SPANS
+    )
     v = stream_windows.UPSERT_AS_OF_VERSION
     spans = sorted(
         f for f in os.listdir(src) if f.endswith(".parquet")

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from inf2106_map_reduce_spark import session
 from inf2106_map_reduce_spark.operators import stats
+from inf2106_map_reduce_spark.streaming import stateful as stream_stateful
 from inf2106_map_reduce_spark.streaming import windows as stream_windows
 
 
@@ -32,7 +33,9 @@ def grouped_drain_n3(spark, sf_smoke):
     the delta's key-group column hardcoded UPSERT_KEY_GROUPS, so any
     caller passing n_groups != 4 got a silently inconsistent
     partitioning)."""
-    src = stream_windows._upsert_retention_source(spark, sf_smoke)
+    src = stream_stateful.staged_event_spans(
+        spark, sf_smoke, stream_windows.UPSERT_RETENTION_SPANS
+    )
     return stream_windows._grouped_upsert_drain_from(
         spark, src, n_groups=3
     )

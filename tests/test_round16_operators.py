@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from inf2106_map_reduce_spark.operators import stats
 from inf2106_map_reduce_spark.plans import run_with_plans
+from inf2106_map_reduce_spark.streaming import stateful as stream_stateful
 from inf2106_map_reduce_spark.streaming import windows as stream_windows
 
 
@@ -166,7 +167,9 @@ def test_compaction_audit_contents_replay_from_source(
     """Independent recomputation: the audit's content columns equal
     the running span aggregate restricted to each group — computed
     here straight from the staged span files, no sink read."""
-    src = stream_windows._upsert_retention_source(spark, sf_oracle)
+    src = stream_stateful.staged_event_spans(
+        spark, sf_oracle, stream_windows.UPSERT_RETENTION_SPANS
+    )
     g_mod = stream_windows.UPSERT_KEY_GROUPS
     spans = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
     rows = stream_windows.streaming_upsert_compaction(
@@ -332,13 +335,13 @@ def test_global_gbt_isotonic_is_the_single_segment_form(
 def test_gbt_isotonic_builds_from_two_scans(
     spark, sf_oracle, cold_session_cache
 ):
-    """A cold global calibration runs three SQL executions while it is
+    """A cold global calibration runs two SQL executions while it is
     built: the one bucket-map fit for all features and the joint-cell
-    collect (the only two that read lineitem; booster and scorer run
-    on the driver over the collected cells), then the isotonic
-    histogram checkpoint over the literal scored cells."""
+    collect, both reading lineitem. Booster and scorer run on the
+    driver over the collected cells, and the isotonic fit over the
+    literal scored cells stays lazy (no checkpoint)."""
     df, built = run_with_plans(spark, stats.lineitem_gbt_isotonic, sf_oracle)
-    assert len(built) == 3, built
+    assert len(built) == 2, built
     assert sum("lineitem.parquet" in p for p in built) == 2, built
     assert df.count() >= 1
 
@@ -375,7 +378,9 @@ def test_write_amplification_matches_disk_and_deltas(
         spark, sf_oracle
     ).collect()
     root = stream_windows._cached_grouped_drain(spark, sf_oracle)
-    src = stream_windows._upsert_retention_source(spark, sf_oracle)
+    src = stream_stateful.staged_event_spans(
+        spark, sf_oracle, stream_windows.UPSERT_RETENTION_SPANS
+    )
     spans = sorted(
         f for f in os.listdir(src) if f.endswith(".parquet")
     )

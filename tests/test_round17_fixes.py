@@ -17,6 +17,7 @@ import tempfile
 import pytest
 
 from inf2106_map_reduce_spark import session
+from inf2106_map_reduce_spark.streaming import versioned
 from inf2106_map_reduce_spark.streaming import windows as stream_windows
 
 
@@ -59,7 +60,7 @@ def test_compaction_stage_asserts_the_oracle_files_after_bound(
     inscrutable value-hash mismatch."""
     key = ("compacted_tree", sf_oracle)
     session._cache_entries.pop(key, None)
-    monkeypatch.setattr(stream_windows, "COMPACT_TARGET_BYTES", 1)
+    monkeypatch.setattr(versioned, "COMPACT_TARGET_BYTES", 1)
     before = _frag_dirs()
     with pytest.raises(AssertionError, match="_grouped_compaction_oracle"):
         stream_windows._compacted_grouped_tree(spark, sf_oracle)
